@@ -30,7 +30,8 @@ def _median(xs):
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
 N_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "8000"))
 
 # headline queries (subset of __spark_entry__.queries(): the ones that

@@ -44,7 +44,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_SF = "/root/testdata/sf0.1"
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
 
 HEADLINE = [
     "pricing_summary", "top_revenue_customers", "events_sessions",

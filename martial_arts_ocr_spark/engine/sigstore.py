@@ -79,7 +79,13 @@ _FULL_KEY = ["snapshot", "doc_key", "band", "band_key"]
 
 def band_keys(docs: DataFrame, key_col: str = "doc_id",
               text_col: str = "text") -> DataFrame:
-    """(key_col, band, band_key) — one row per document per band."""
+    """(key_col, band, band_key) — one row per document per band.
+
+    The band-key UDF is ``asNondeterministic`` (see
+    ``similarity._minhash_band_keys_udf``), and so is this projection:
+    Catalyst will not push a filter on its output below the explode.
+    That is on purpose, since it stops the optimizer from evaluating the
+    sketch twice; filter the input documents instead."""
     from ..queries.similarity import _minhash_band_keys_udf
 
     mhb = _minhash_band_keys_udf()

@@ -3,10 +3,10 @@
 ``html.parser``'s generic tokenizer is ~40% of kernel time. This module
 tokenizes with one compiled regex and drives the SAME ``_BlockParser``
 handlers (html_blocks.py), so all block/chrome/figure semantics live in
-exactly one place. Selection via ``segment_blocks(..., engine=...)`` or the
-``SPARK_GRAFT_HTML_ENGINE`` env var; equivalence with the stdlib path is
-enforced by an A/B test over fixtures + fuzz corpora
-(tests/test_fast_html_equivalence.py).
+exactly one place. It is the default engine of ``segment_blocks``; the
+stdlib path stays selectable with ``segment_blocks(..., engine="stdlib")``
+as the reference that an A/B test over fixtures + fuzz corpora holds it
+equal to (tests/test_fast_html_equivalence.py).
 
 Behaviors replicated from html.parser (convert_charrefs=True):
 * charrefs decoded in text data and attribute values;

@@ -333,19 +333,13 @@ class _BlockParser(HTMLParser):
         self._flush()
 
 
-import os as _os
-
-_DEFAULT_ENGINE = _os.environ.get("SPARK_GRAFT_HTML_ENGINE", "fast")
-
-
-def segment_blocks(html_text: str, engine: str | None = None) -> list[Block]:
+def segment_blocks(html_text: str, engine: str = "fast") -> list[Block]:
     """Parse page text into document-ordered candidate blocks.
 
     ``engine``: "fast" (regex tokenizer, kernel/fast_html.py — default) or
     "stdlib" (html.parser). Both drive the same handlers; equivalence is
     enforced by tests/test_fast_html_equivalence.py.
     """
-    engine = engine or _DEFAULT_ENGINE
     p = _BlockParser()
     try:
         if engine == "fast":

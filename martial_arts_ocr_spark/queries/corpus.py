@@ -30,6 +30,7 @@ import pandas as pd    # module-level: pandas_udf resolves stringified
 # 'pd.Series' annotations in the defining module's global namespace
 from pyspark.sql import functions as F
 
+from martial_arts_ocr_spark.engine import memo
 from martial_arts_ocr_spark.queries.tables import base_table, spread_table
 
 _GOPHER_MIN_WORDS = 50
@@ -585,15 +586,11 @@ def lm_cost_table(bigram_counts: dict[str, int]) -> tuple[dict[str, int], int]:
     return costs, unk
 
 
-_LM_CACHE: dict = {}
-
-
 def _lm_model(spark, sf_dir):
     """Train via Spark (explode bigrams of the fixed sample → groupBy →
-    vocab-sized collect, the k-means-means collect pattern); cached per
-    (app, sf_dir) so repeated invocations don't retrain."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LM_CACHE:
+    vocab-sized collect, the k-means-means collect pattern); memoized per
+    (session, sf_dir) so repeated invocations don't retrain."""
+    def train():
         d = _docs(spark, sf_dir).where(
             (F.col("doc_id") < _LM_TRAIN_DOCS) & (F.length("text") >= 2))
         bgs = d.select(F.explode(F.expr(
@@ -602,8 +599,9 @@ def _lm_model(spark, sf_dir):
         counts = {r["bg"]: r["n"] for r in
                   bgs.groupBy("bg").agg(F.count(F.lit(1)).alias("n"))
                   .collect()}
-        _LM_CACHE[key] = lm_cost_table(counts)
-    return _LM_CACHE[key]
+        return lm_cost_table(counts)
+
+    return memo.get_or_build(spark, ("corpus", sf_dir, "lm"), train)
 
 
 def _lm_score_udf(costs: dict[str, int], unk: int):
@@ -737,8 +735,7 @@ def _lm_models_by_lang(spark, sf_dir):
     (doc_id < _LM_TRAIN_DOCS), via one grouped explode/groupBy; collect is
     vocab-sized × n_langs (control flow, not data). Degenerate slices
     (empty cost table) are dropped here so the caller's fallback applies."""
-    key = (spark.sparkContext.applicationId, sf_dir, "by-lang")
-    if key not in _LM_CACHE:
+    def train():
         d = _docs(spark, sf_dir).where(
             (F.col("doc_id") < _LM_TRAIN_DOCS) & (F.length("text") >= 2))
         bgs = d.select("lang", F.explode(F.expr(
@@ -753,8 +750,9 @@ def _lm_models_by_lang(spark, sf_dir):
             costs, unk = lm_cost_table(counts)
             if costs:
                 models[lang] = (costs, unk)
-        _LM_CACHE[key] = models
-    return _LM_CACHE[key]
+        return models
+
+    return memo.get_or_build(spark, ("corpus", sf_dir, "by-lang"), train)
 
 
 def _lm_score_by_lang_udf(models: dict, global_costs: dict, global_unk: int):

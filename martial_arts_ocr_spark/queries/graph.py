@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..engine import memo
 from .similarity import _minhash_verified_pairs_oracle, q_minhash_verified_pairs
 
 _MAX_ROUNDS = 50     # safety cap only: pointer jumping converges in
@@ -191,13 +192,12 @@ def connected_components(edges: DataFrame, max_rounds: int = _MAX_ROUNDS,
 
 # The FINAL round's labels stay checkpointed while callers consume the
 # returned (lazy) DataFrame — they cannot be freed inside
-# connected_components. Track the last invocation's result per
-# (application, SLOT) and free it when the next invocation of that slot
-# starts (the _SIG_CACHE eviction pattern), so a long session (gate +
-# bench + scaling in one process) holds at most ONE label-set per slot
-# of block-manager storage instead of one per call (review finding,
-# round 4; slot-scoping added round 7 — see neardup_cluster_labels).
-_LAST_LABELS: dict[tuple[str, str], DataFrame] = {}
+# connected_components. The session memo (engine/memo.py) holds the last
+# invocation's result per (application, SLOT) and ``memo.replace`` frees
+# it when the next invocation of that slot is stored, so a long session
+# (gate + bench + scaling in one process) holds at most ONE label-set per
+# slot of block-manager storage instead of one per call (slots: see
+# neardup_cluster_labels).
 
 
 def neardup_cluster_labels(spark, sf_dir, slot: str) -> DataFrame:
@@ -224,15 +224,6 @@ def slot_scoped_component_labels(spark, slot: str, pairs: DataFrame,
     by the lexical (MinHash) and semantic (embedding-cosine,
     neardup.semantic_cluster_labels) survivorship gates — their slots
     are disjoint by prefix, so building one never frees the other."""
-    app = spark.sparkContext.applicationId
-    key = (app, slot)
-    prev = _LAST_LABELS.pop(key, None)
-    if prev is not None:
-        free_labels(prev)
-    # drop stopped-session entries (their blocks died with the session);
-    # never touch OTHER live slots of this app
-    for k in [k for k in _LAST_LABELS if k[0] != app]:
-        _LAST_LABELS.pop(k, None)
     edges = (
         pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
         .unionByName(
@@ -240,7 +231,7 @@ def slot_scoped_component_labels(spark, slot: str, pairs: DataFrame,
         )
     )
     labels = connected_components(edges)
-    _LAST_LABELS[key] = labels
+    memo.replace(spark, ("graph", slot), labels, free_labels)
     return labels.select(
         F.col("doc").cast("bigint").alias("doc_id"),
         F.col("lbl").cast("bigint").alias("cluster_id"),

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
+from martial_arts_ocr_spark.engine import memo
 from martial_arts_ocr_spark.queries.tables import base_table, spread_table
 
 
@@ -55,21 +56,21 @@ def q_cosine_neardup_pairs(spark, sf_dir):
     equi-join on bucket id → exact cosine only inside buckets (never
     all-pairs). Oracle reproduces the buckets via the baked-literal
     hyperplane matrix."""
-    from .similarity import _SIG_CACHE, _lsh_signature_udf, _sig_cache_put
+    from .similarity import _lsh_signature_udf
 
-    key = (spark.sparkContext.applicationId, sf_dir, "cosine_nd")
-    emb = _SIG_CACHE.get(key)
-    if emb is None:
+    def signatures():
         sig = _lsh_signature_udf()
-        emb = _emb(spark, sf_dir).select(
+        return _emb(spark, sf_dir).select(
             "vec_id", "embedding",
             sig(F.col("embedding")).alias("bucket"),
             _norm(F.col("embedding")).alias("nrm"),
         ).persist()      # signatures computed ONCE per session and reused
         # by both join sides (materialized signature table at warehouse
-        # scale); the session-keyed cache stops repeated invocations from
+        # scale); the session memo stops repeated invocations from
         # leaking a new persist() per call (review-found)
-        _sig_cache_put(spark, key, emb)
+
+    emb = memo.get_or_build(spark, ("neardup", sf_dir, "cosine_nd"),
+                            signatures)
     a, b = emb.alias("a"), emb.alias("b")
     cos = F.round(
         _dot(F.col("a.embedding"), F.col("b.embedding"))
@@ -450,13 +451,10 @@ def kmeans_centroids_mirror(vectors, vec_ids=None, k=_N_CENTROIDS,
     return cents
 
 
-_CENTS_CACHE: dict[str, list] = {}
-
-
 def _learned_centroids(spark, sf_dir):
-    if sf_dir not in _CENTS_CACHE:
-        _CENTS_CACHE[sf_dir] = kmeans_centroids_spark(_emb(spark, sf_dir))
-    return _CENTS_CACHE[sf_dir]
+    return memo.get_or_build(
+        spark, ("neardup", sf_dir, "cents"),
+        lambda: kmeans_centroids_spark(_emb(spark, sf_dir)))
 
 
 def _baked_centroid_values() -> tuple[str, str]:
@@ -615,12 +613,11 @@ _CURVE_TOPK = 5
 
 
 def _curve_centroids(spark, sf_dir):
-    key = (sf_dir, "curve")
-    if key not in _CENTS_CACHE:
-        _CENTS_CACHE[key] = kmeans_centroids_spark(
+    return memo.get_or_build(
+        spark, ("neardup", sf_dir, "curve"),
+        lambda: kmeans_centroids_spark(
             _emb(spark, sf_dir), k=_CURVE_K, iters=_CURVE_ITERS,
-            init="jitter")
-    return _CENTS_CACHE[key]
+            init="jitter"))
 
 
 def q_ivf_recall_curve(spark, sf_dir):
@@ -852,11 +849,7 @@ def _sem_assigned(spark, sf_dir):
     cosine is rounded to 7 BEFORE the argmax and ties break on cent_id
     ASC, so the DuckDB mirror (row_number over round-7 cosine DESC,
     cent_id ASC) picks identical clusters."""
-    from .similarity import _SIG_CACHE, _sig_cache_put
-
-    key = (spark.sparkContext.applicationId, sf_dir, "sem_assign")
-    df = _SIG_CACHE.get(key)
-    if df is None:
+    def assigned():
         cents = _cents_df(spark, _learned_centroids(spark, sf_dir))
         mc = F.struct(
             (-F.round(
@@ -866,7 +859,7 @@ def _sem_assigned(spark, sf_dir):
             F.col("cent_id").alias("c"),
             F.col("embedding").alias("e"),
         )
-        df = (
+        return (
             _emb(spark, sf_dir).select("vec_id", "embedding")
             .crossJoin(F.broadcast(cents))
             .groupBy("vec_id")
@@ -879,8 +872,9 @@ def _sem_assigned(spark, sf_dir):
             )
             .persist()
         )
-        _sig_cache_put(spark, key, df)
-    return df
+
+    return memo.get_or_build(spark, ("neardup", sf_dir, "sem_assign"),
+                             assigned)
 
 
 def semantic_neardup_pairs(spark, sf_dir):

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import SparkSession, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
+from martial_arts_ocr_spark.engine import memo
 from martial_arts_ocr_spark.queries.tables import base_table, spread_table
 
 
@@ -48,16 +49,16 @@ def q_ann_cosine_top10(spark, sf_dir):
     # memoized per (session, sf): the eager head() is a full-scan Spark
     # job that otherwise re-runs on EVERY invocation (gate × 3 SFs, every
     # bench repetition) before the real query starts (review-found)
-    key = (spark.sparkContext.applicationId, sf_dir, "ann_qvec")
-    qvec = _SIG_CACHE.get(key)
-    if qvec is None:
+    def query_vector():
         qrow = emb.where(F.col("vec_id") == 0).select("embedding").head()
         if qrow is None:
             raise ValueError(
                 "embeddings table has no vec_id 0 (fixed ANN query vector)"
             )
-        qvec = list(qrow["embedding"])
-        _sig_cache_put(spark, key, qvec)
+        return list(qrow["embedding"])
+
+    qvec = memo.get_or_build(spark, ("similarity", sf_dir, "ann_qvec"),
+                             query_vector)
     q = F.array(*[F.lit(float(x)) for x in qvec])
     dot = F.aggregate(
         F.zip_with(F.col("embedding"), q, lambda a, b: a.cast("double") * b),
@@ -159,37 +160,20 @@ def _lsh_signature_udf():
     return sig
 
 
-_SIG_CACHE: dict[tuple, "object"] = {}
-
-
-def _sig_cache_put(spark, key, df) -> None:
-    """Insert into _SIG_CACHE, first evicting entries from other Spark
-    applications: cache keys lead with applicationId, and classic pyspark
-    runs one active context per process, so any other appId belongs to a
-    stopped session whose persisted DataFrames would otherwise stay
-    referenced for the process lifetime (round-3 ADVICE; pytest runs many
-    sessions in one process)."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _SIG_CACHE if k[0] != app]:
-        del _SIG_CACHE[k]
-    _SIG_CACHE[key] = df
-
-
 def _lsh_signatures_cached(spark, sf_dir):
     """Persisted (vec_id, label, bucket) signature table, cached per
     (session, sf_dir): repeated invocations in one process (gate + bench
     rounds) reuse ONE cached table instead of leaking a new persist()
     per call (review-found). The materialized-signature-table analogue at
     warehouse scale; both self-join sides read it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SIG_CACHE.get(key)
-    if df is None:
+    def signatures():
         sig = _lsh_signature_udf()
-        df = _emb(spark, sf_dir).select(
+        return _emb(spark, sf_dir).select(
             "vec_id", "label", sig(F.col("embedding")).alias("bucket")
         ).persist()
-        _sig_cache_put(spark, key, df)
-    return df
+
+    return memo.get_or_build(spark, ("similarity", sf_dir, "lsh_sigs"),
+                             signatures)
 
 
 def q_lsh_bucket_candidates(spark, sf_dir):
@@ -481,19 +465,19 @@ def q_simhash_neardup_pairs(spark, sf_dir):
     (doc_id + 100000) so deterministic true near-dups exist; at scale the
     input is the corpus itself. Oracle-exact (md5_number_upper emulation).
     """
-    key = (spark.sparkContext.applicationId, sf_dir, "simhash_nd")
-    sigs = _SIG_CACHE.get(key)
-    if sigs is None:
+    def fingerprints():
         sh = _simhash_udf()
         d = _docs(spark, sf_dir).select("doc_id", "text")
         pert = d.select(
             (F.col("doc_id") + 100000).alias("doc_id"),
             F.concat("text", F.lit(_NEARDUP_SUFFIX)).alias("text"),
         )
-        sigs = d.unionByName(pert).select(
+        return d.unionByName(pert).select(
             "doc_id", sh(F.col("text")).alias("simhash")
         ).persist()      # sketch once per session; both join sides reuse
-        _sig_cache_put(spark, key, sigs)
+
+    sigs = memo.get_or_build(spark, ("similarity", sf_dir, "simhash_nd"),
+                             fingerprints)
     bands = sigs.select(
         "doc_id", "simhash",
         F.posexplode(F.array(*[
@@ -574,15 +558,16 @@ def q_incremental_snapshot_dedup(spark, sf_dir):
     an equi-join on (band, band_key) — bucket the store on that key at
     100 TB and the probe co-locates; no all-pairs join anywhere."""
     d = _docs(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "incr_band_keys")
-    keys = _SIG_CACHE.get(key)
-    if keys is None:
+
+    def band_keys():
         mhb = _minhash_band_keys_udf()
-        keys = spread_table(spark, sf_dir, "documents", "doc_id", "text").select(
+        return spread_table(spark, sf_dir, "documents", "doc_id", "text").select(
             "doc_id",
             F.posexplode(mhb(F.col("text"))).alias("band", "band_key"),
         ).persist()        # sketch ONCE; store/new/self-join all reuse it
-        _sig_cache_put(spark, key, keys)
+
+    keys = memo.get_or_build(
+        spark, ("similarity", sf_dir, "incr_band_keys"), band_keys)
     store = (keys.where(F.col("doc_id") % 2 == 0)
              .select("band", "band_key").distinct())
     new = keys.where(F.col("doc_id") % 2 == 1)

@@ -8,7 +8,7 @@ of times per process, so each repeated build pays that fixed cost inside
 the timed region for zero information.
 
 ``base_table`` memoizes the *unresolved DataFrame plan object* per
-(applicationId, sf_dir, table). This caches no data and no results: a
+(session, sf_dir, table). This caches no data and no results: a
 DataFrame is a lazy plan, every action against it still scans the parquet
 input (verified: noop-sink wall time of the memoized frame equals the
 fresh-read frame; only the ~80 ms plan-build repeat disappears). The
@@ -17,10 +17,9 @@ r-x), so the staleness hazard that makes plan caching wrong for mutable
 warehouse tables (engine/catalog.py re-reads on purpose after compaction)
 does not exist here — do NOT route catalog/warehouse reads through this.
 
-Eviction mirrors similarity._sig_cache_put (round-3 ADVICE): keys lead
-with applicationId and any entry from a different (stopped) application
-is dropped on insert, so pytest's many sessions per process cannot leak
-plans across sessions.
+The plans, the source sizes and the scan-partition counts live in the
+session memo (engine/memo.py), which owns their lifetime: keyed by
+application, and dropped when a later session inserts anything.
 """
 
 from __future__ import annotations
@@ -29,18 +28,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
+from ..engine import memo
+
+# perfbench counts base_table misses as growth of this dict; it is the
+# memo store itself, not a cache of its own.
+_TABLE_CACHE = memo._STORE
 
 
 def base_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _TABLE_CACHE.get(key)
-    if df is None:
-        for k in [k for k in _TABLE_CACHE if k[0] != key[0]]:
-            del _TABLE_CACHE[k]
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _TABLE_CACHE[key] = df
-    return df
+    return memo.get_or_build(
+        spark, ("tables", sf_dir, name),
+        lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
 
 # Below this many compressed source bytes per scan partition the spread
@@ -109,12 +107,9 @@ def source_bytes(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Memoized on-disk size of a driver table (the spread threshold
     input). File size, not a Spark statistic: the driver tables are
     single plain parquet files on a read-only mount."""
-    key = (spark.sparkContext.applicationId, sf_dir, name, "bytes")
-    n = _TABLE_CACHE.get(key)
-    if n is None:
-        n = os.path.getsize(f"{sf_dir}/{name}.parquet")
-        _TABLE_CACHE[key] = n
-    return n
+    return memo.get_or_build(
+        spark, ("tables", sf_dir, name, "bytes"),
+        lambda: os.path.getsize(f"{sf_dir}/{name}.parquet"))
 
 
 def scan_partitions(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -126,12 +121,9 @@ def scan_partitions(spark: SparkSession, sf_dir: str, name: str) -> int:
     ``spread`` decision free. Valid because the split count of a
     read-only parquet path is fixed for the session (same files, same
     ``maxPartitionBytes``)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name, "nparts")
-    n = _TABLE_CACHE.get(key)
-    if n is None:
-        n = base_table(spark, sf_dir, name).rdd.getNumPartitions()
-        _TABLE_CACHE[key] = n
-    return n
+    return memo.get_or_build(
+        spark, ("tables", sf_dir, name, "nparts"),
+        lambda: base_table(spark, sf_dir, name).rdd.getNumPartitions())
 
 
 def spread_table(spark: SparkSession, sf_dir: str, name: str, *cols: str):

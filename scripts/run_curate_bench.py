@@ -1,6 +1,7 @@
 """Sustained curation-pipeline throughput: the composed seven-gate
 keep-set and the tokenize-and-pack stage over a large replicated corpus
-(default 200k docs) at local[32] — the curation counterpart of the
+(default 200k docs) at local[$SPARK_GRAFT_CPUS] (default: the cores
+this process may run on) — the curation counterpart of the
 sustained-extraction number in BASELINE.md.
 
 Corpus: sf0.1's 5,000 documents replicated K times; every replica's text
@@ -25,7 +26,8 @@ import time
 sys.path.insert(0, "/root/repo")
 
 SRC = "/root/testdata/sf0.1"
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
 
 
 def build_corpus(spark, n_docs: int, path: str) -> None:

@@ -54,7 +54,8 @@ def main(names=None):
             raise SystemExit(
                 f"unknown query name(s): {bad}; valid: {sorted(known)}")
 
-    spark = build_session(master="local[8]", shuffle_partitions=8)
+    spark = build_session(master=f"local[{len(os.sched_getaffinity(0))}]",
+                          shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

@@ -11,6 +11,11 @@ from martial_arts_ocr_spark.queries import ALL_QUERIES
 SF = "/root/testdata/sf0.001"
 
 
+# one match per shuffle: the operator name opens its plan-tree line, so
+# BroadcastExchange and ReusedExchange nodes are not counted
+_SHUFFLE = re.compile(r"^[\s:|+-]*Exchange (\w+)", re.M)
+
+
 def _plan(spark, name):
     return (
         ALL_QUERIES[name](spark, SF)
@@ -110,12 +115,13 @@ def test_corpus_curation_plan_shapes(spark):
         # warehouse scale where scan splits >= cores) and carry no
         # key semantics; every KEYED exchange but the presentation
         # sort is still forbidden — the original scale-shape pin.
-        keyed = (plan.count("Exchange hashpartitioning")
-                 + plan.count("Exchange rangepartitioning"))
+        shuffles = _SHUFFLE.findall(plan)
+        keyed = sum(s in ("hashpartitioning", "rangepartitioning")
+                    for s in shuffles)
         assert keyed <= 1, (name, plan[:800])
-        non_spread = plan.count("Exchange") - plan.count(
-            "Exchange RoundRobinPartitioning")
-        assert non_spread <= 1, (name, plan[:800])
+        spreads = shuffles.count("RoundRobinPartitioning")
+        assert spreads <= 1, (name, plan[:800])     # one spread at most
+        assert len(shuffles) - spreads <= 1, (name, plan[:800])
         assert "Join" not in plan, name
     contam = _plan(spark, "benchmark_contamination")
     # the corpus side must reach the benchmark probe set via broadcast —
