@@ -15,12 +15,6 @@ Subcommands:
         codegen/planning cost the one-shot bench measures from the
         repeatable execution floor.
 
-    python bench_extra.py sweep [sf_dir]
-        Build + explain all 81 registered queries; print Exchange count,
-        Python-eval stages, join operators, and flag any UDF evaluated
-        more than once in a plan (the guide-§4.4 duplication that hid in
-        minhash_bands for seven rounds).
-
     python bench_extra.py ab-spread <query> [sf_dir] [reps]
         Interleaved A/B of a spread_table-bearing query with the spread
         forced OFF vs the shipped code, best-of-reps per side, one
@@ -34,37 +28,18 @@ Subcommands:
 
 from __future__ import annotations
 
-import contextlib
-import io
-import os
-import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from bench import CPUS, HEADLINE, _scan_split_bytes
 
 DEFAULT_SF = "/root/testdata/sf0.1"
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
-                          len(os.sched_getaffinity(0))))
-
-HEADLINE = [
-    "pricing_summary", "top_revenue_customers", "events_sessions",
-    "doc_stats_by_lang", "dedup_survivors", "langid_heuristic",
-    "ann_cosine_top10", "minhash_bands", "simhash", "cosine_neardup_pairs",
-    "events_asof_purchase", "doc_length_percentiles", "gopher_line_flags",
-    "extract_documents",
-]
 
 
 def _session(app: str, sf_dir: str):
     from martial_arts_ocr_spark.engine.session import build_session
 
-    biggest = max(
-        (os.path.getsize(os.path.join(sf_dir, f))
-         for f in os.listdir(sf_dir) if f.endswith(".parquet")),
-        default=0,
-    )
-    split = min(max(biggest // (2 * CPUS), 2 << 20), 128 << 20)
+    split = _scan_split_bytes(sf_dir, CPUS)
     spark = build_session(
         master=f"local[{CPUS}]", shuffle_partitions=CPUS, app_name=app,
         extra_conf={"spark.sql.files.maxPartitionBytes": str(split)},
@@ -106,31 +81,6 @@ def cmd_steady(sf_dir: str) -> None:
               f" {first[q] - steady[q]:9.3f}")
     print(f"{'TOTAL':28s} {sum(first.values()):7.3f}"
           f" {sum(steady.values()):7.3f}")
-    spark.stop()
-
-
-def cmd_sweep(sf_dir: str) -> None:
-    from martial_arts_ocr_spark.queries import ALL_QUERIES
-
-    spark = _session("bench-extra-sweep", sf_dir)
-    for name, fn in ALL_QUERIES.items():
-        try:
-            df = fn(spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            s = buf.getvalue()
-            nodes = re.findall(r"\(\d+\) (\w+)", s)
-            udf_calls = re.findall(r"Arguments: \[(\w+)\(", s)
-            dups = sorted({u for u in udf_calls if udf_calls.count(u) > 1})
-            joins = sorted({n for n in nodes
-                            if "Join" in n or n == "CartesianProduct"})
-            flag = f"  DUP_UDF:{','.join(dups)}" if dups else ""
-            print(f"{name:32s} ex={nodes.count('Exchange'):2d} "
-                  f"py={nodes.count('ArrowEvalPython') + nodes.count('BatchEvalPython'):2d} "
-                  f"joins={','.join(joins)}{flag}")
-        except Exception as e:  # diagnostic tool: report and continue
-            print(f"{name:32s} ERROR {type(e).__name__}: {e}")
     spark.stop()
 
 
@@ -225,8 +175,6 @@ def main() -> None:
     cmd = sys.argv[1] if len(sys.argv) > 1 else "steady"
     if cmd == "steady":
         cmd_steady(sys.argv[2] if len(sys.argv) > 2 else DEFAULT_SF)
-    elif cmd == "sweep":
-        cmd_sweep(sys.argv[2] if len(sys.argv) > 2 else DEFAULT_SF)
     elif cmd == "ab-spread":
         cmd_ab_spread(sys.argv[2],
                       sys.argv[3] if len(sys.argv) > 3 else DEFAULT_SF,

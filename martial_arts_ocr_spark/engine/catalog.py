@@ -105,38 +105,6 @@ def _scratch_dir(root: str, table: str) -> str:
     return os.path.join(root, "_compact_scratch", table)
 
 
-def _migrate_legacy_scratch(root: str, table: str) -> None:
-    """One-time sweep of the short-lived root-level scratch naming
-    (``_trash_<table>_<bucket>`` / ``_compact_tmp_...``) into the
-    per-table scratch area, so a compaction that crashed under the old
-    layout stays recoverable after the layout change (round-5 third-pass
-    review find). Matching is restricted to THIS table's exact prefix —
-    the cross-table prefix ambiguity that motivated the subdir layout
-    cannot arise among the repo's actual table names, and new state never
-    uses these names again."""
-    import errno
-
-    sdir = _scratch_dir(root, table)
-    for kind, pre in (("trash", f"_trash_{table}_"),
-                      ("tmp", f"_compact_tmp_{table}_")):
-        for name in list(os.listdir(root)):
-            if name.startswith(pre):
-                os.makedirs(sdir, exist_ok=True)
-                try:
-                    os.replace(os.path.join(root, name),
-                               os.path.join(sdir, kind + "_" + name[len(pre):]))
-                except OSError as e:
-                    # two concurrent readers can race this one-time
-                    # migration (it runs from the read path via
-                    # _recover_compaction); the loser's rename sees the
-                    # source gone (ENOENT) or the destination occupied
-                    # (ENOTEMPTY/EEXIST) — either way the winner already
-                    # did the work, mirroring the restore guard below
-                    if e.errno not in (errno.ENOENT, errno.ENOTEMPTY,
-                                       errno.EEXIST):
-                        raise
-
-
 def _recover_compaction(root: str, table: str,
                         restore_only: bool = False) -> None:
     """Roll a crashed compaction swap back or forward (idempotent).
@@ -173,12 +141,6 @@ def _recover_compaction(root: str, table: str,
     tdir = table_path(root, table)
     if not os.path.isdir(tdir):
         return
-    # legacy migration runs in BOTH modes (round-5 fourth-pass find: a
-    # read-only recovery that skipped it left an old-layout crashed
-    # bucket invisible until someone compacted). Moving a legacy dir is
-    # race-safe from the read path: no live compactor ever writes the
-    # legacy names again.
-    _migrate_legacy_scratch(root, table)
     sdir = _scratch_dir(root, table)
     if not os.path.isdir(sdir):
         return

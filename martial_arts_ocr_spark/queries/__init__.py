@@ -2,11 +2,11 @@
 
 Each module exposes ``QUERIES: dict[name, (spark, sf_dir) -> DataFrame]``
 and ``ORACLES: dict[name, str]`` (DuckDB ANSI SQL over the pre-registered
-views). Every query is oracle-checked except ``extract_documents`` (the
-full kernel's free-text output; ``extract_roundtrip`` oracles the same
-kernel over template pages). Even the md5 sketches are exact
-(``md5_number_upper`` + HUGEINT wrapping arithmetic, similarity.py) and
-the xxhash64 checkpoint buckets are baked literals (xxh64.py mirror).
+views). Every query is oracle-checked by ``tests/test_query_gate.py``,
+``extract_documents`` (the full kernel's free-text output) included. Even
+the md5 sketches are exact (``md5_number_upper`` + HUGEINT wrapping
+arithmetic, similarity.py) and the xxhash64 checkpoint buckets are baked
+literals (xxh64.py mirror).
 
 Determinism rules applied everywhere:
 * every float aggregate is ``round(x, 2..6)`` on BOTH sides;
@@ -18,60 +18,12 @@ Determinism rules applied everywhere:
 from . import (corpus, extended, extraction, graph, lineage, media, neardup,
                relational, similarity, temporal, textops)
 
-# --- standing gate-rotation policy (round-4 VERDICT item 1) -------------------
-# The driver's correctness gate audits only the FIRST 50 registry entries
-# (observed cap, rounds 2-4). With more than 50 queries, iteration order
-# rotates EVERY ROUND so that no query's newest driver-green row is ever
-# older than one round:
-#   * ``_GATE_HEAD`` lists, in order, (a) every query that sat PAST the
-#     window last round and (b) every query added this round — these lead
-#     and get a driver row this round;
-#   * the remaining queries follow in canonical module order; the last
-#     ``len(registry) - 50`` of them fall past the window, and by
-#     construction every one of those has a driver-green row from LAST
-#     round (they were all inside last round's window);
-#   * next round, the names past THIS round's window become the new
-#     ``_GATE_HEAD`` (plus any new queries) — rotate-by-tail-size, so a
-#     query misses the window at most one round in a row.
-# Window membership is pinned by tests/test_registry_invariants.py
-# (test_gate_window_membership_pinned), updated in the same commit as any
-# registry change; queries past the window stay covered every round by the
-# full-registry tests/oracle_check.py mirror.
-_GATE_HEAD = [
-    # round-7 tail (driver-green r6, judge-mirror-green r7):
-    "run_checkpoints", "extract_documents", "extract_hot_host",
-    "extract_with_invalid_rows", "host_profiles", "extract_roundtrip",
-    "extract_ja_segments", "extract_figures", "minhash_bands", "simhash",
-    "simhash_neardup_pairs", "argmax_order", "events_sliding_windows",
-    "events_gap_flags", "whitespace_normalize", "sentence_counts",
-    "doc_trigram_head", "custkeys_both_years", "region_nation_matrix",
-    "party_balances_union", "top_users_per_event_type", "part_size_buckets",
-    "pii_redact", "doc_stats_by_lang", "exact_dup_groups",
-    "dedup_survivors", "fingerprints", "quality_buckets",
-    # round-8 SEMANTIC CHANGES — a changed query needs a fresh driver row,
-    # same as a new one (keep-set/funnel: the seventh, SemDeDup-style
-    # semantic-prune gate; mixture_epoch_stream: per-epoch rank frames
-    # replace the corpus×N_EPOCHS explode — output identical, plan not):
-    "corpus_keep_set",
-    "curation_funnel",
-    "mixture_epoch_stream",
-    # round-8 additions (first driver row required this round):
-    "mixture_epoch_stream_threshold",
-    "semantic_dedup_clusters",
-    "multimodal_seq_media",
-]
-
-_all_q: dict = {}
-_all_o: dict = {}
+ALL_QUERIES: dict = {}
+ALL_ORACLES: dict = {}
 for mod in (corpus, graph, media, temporal, lineage, extraction, neardup,
             similarity, extended, textops, relational):
-    _all_q.update(mod.QUERIES)
-    _all_o.update(getattr(mod, "ORACLES", {}))
-
-_head = set(_GATE_HEAD)
-_order = _GATE_HEAD + [n for n in _all_q if n not in _head]
-ALL_QUERIES = {n: _all_q[n] for n in _order}
-ALL_ORACLES = {n: _all_o[n] for n in _order if n in _all_o}
+    ALL_QUERIES.update(mod.QUERIES)
+    ALL_ORACLES.update(getattr(mod, "ORACLES", {}))
 
 
 def materialized_oracles() -> dict[str, str]:

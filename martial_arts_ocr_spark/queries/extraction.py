@@ -27,7 +27,7 @@ _CHUNK = 600
 
 
 # Probe injections (deterministic, keyed on doc_id) that make kernel
-# outputs SQL-predictable. Measured constants — see tests/oracle_check:
+# outputs SQL-predictable. Measured constants — see tests/test_query_gate:
 # _JA_SENT contributes exactly 13 ja chars / 1 contiguous segment /
 # 3 term hits (武道, 稽古, 道場); _MACRON_SENT yields candidates at fixed
 # offsets 4 (Daito-ryu) and 37 (dojo).

@@ -561,10 +561,10 @@ def _oracle_ivf() -> str:
     ENV COUPLING (the one oracle that is SF-bound at build time): the
     Spark query learns centroids from the sf_dir it is invoked with, so a
     harness comparing at any SF other than sf0.01 MUST export
-    SPARK_GRAFT_ORACLE_SF to that SF before calling oracle_sql() — exactly
-    what tests/oracle_check.py does; the driver gate runs at sf0.01 and
-    needs nothing. Every other oracle reads only the pre-registered views
-    and has no such coupling."""
+    SPARK_GRAFT_ORACLE_SF to that SF before calling oracle_sql() —
+    tests/test_query_gate.py reads the SF it runs at from that variable.
+    Every other oracle reads only the pre-registered views and has no such
+    coupling."""
     sf, rows = _baked_centroid_values()
     return f"""
 -- IVF centroid literals learned from: {sf}/embeddings.parquet

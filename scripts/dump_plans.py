@@ -6,7 +6,6 @@ Usage: python scripts/dump_plans.py   (writes PLANS.md at the repo root)
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -25,8 +24,8 @@ def main() -> None:
         "# PLANS — physical plans of the headline queries",
         "",
         f"Auto-generated by `scripts/dump_plans.py` at sf dir `{SF}`.",
-        "Summary line per query: Exchange (shuffle) count, pandas-UDF",
-        "stages, join operators, pushed filters present.",
+        "The operator rules every plan must meet are asserted by",
+        "`tests/test_query_gate.py`.",
         "",
     ]
     # headline (bench-timed, protocol-frozen) + round-5/6 additions whose
@@ -43,29 +42,11 @@ def main() -> None:
     names = HEADLINE + [n for n in extras if n not in HEADLINE]
     for name in names:
         df = ALL_QUERIES[name](spark, SF)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        n_ex = plan.count("Exchange")
-        n_pd = plan.count("InPandas") + plan.count("ArrowEval")
-        joins = sorted(set(re.findall(r"(\w+Join\w*)", plan)))
-        pushed = "PushedFilters: [" in plan and not re.search(
-            r"PushedFilters: \[\]", plan
-        )
-        out.append(f"## {name}")
-        out.append("")
-        out.append(
-            f"- exchanges={n_ex} · pandas_stages={n_pd} · "
-            f"joins={joins or 'none'} · pushed_filters={pushed}"
-        )
-        out.append("")
-        out.append("```")
-        # formatted plan (bounded: the tree + first node details)
+        # the operator tree of the formatted plan, without node details
         formatted = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        tree = formatted.split("\n\n")[0]
-        out.append(tree.strip())
-        out.append("```")
-        out.append("")
+            df._jdf.queryExecution(), "formatted")
+        tree = formatted.split("\n\n")[0].strip()
+        out += [f"## {name}", "", "```", tree, "```", ""]
     spark.stop()
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "PLANS.md"), "w", encoding="utf-8") as f:

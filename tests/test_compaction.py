@@ -155,26 +155,3 @@ def test_read_path_recovery_never_deletes_compactor_state(spark, tmp_path):
     catalog.compact_table(spark, root, t, target_files_per_bucket=1)
     assert not os.listdir(sdir)
     assert _rows(spark, root, t) == rows
-
-
-def test_legacy_root_level_scratch_migrates_and_recovers(spark, tmp_path):
-    """Round-5 third-pass find: a compaction that crashed under the
-    short-lived root-level scratch naming must stay recoverable after
-    the per-table-subdir layout change — the writer's entry recovery
-    migrates legacy names and then rolls the bucket back."""
-    root = str(tmp_path / "wh")
-    pages = with_host(spark.createDataFrame(pages_pandas(60)))
-    resume.run_checkpointed(spark, pages, root, run_id="lg",
-                            n_buckets=4, batch_size=2)
-    rows = _rows(spark, root, resume.EXTRACTED_TABLE)
-    t = resume.EXTRACTED_TABLE
-    tdir = catalog.table_path(root, t)
-    buckets = sorted(d for d in os.listdir(tdir)
-                     if d.startswith("part_bucket="))
-    b0 = os.path.join(tdir, buckets[0])
-    os.replace(b0, os.path.join(root, f"_trash_{t}_" + buckets[0]))
-    os.makedirs(os.path.join(root, f"_compact_tmp_{t}_" + buckets[0]))
-    catalog.compact_table(spark, root, t, target_files_per_bucket=1)
-    assert _rows(spark, root, t) == rows
-    assert not any(n.startswith(("_trash_", "_compact_tmp_"))
-                   for n in os.listdir(root))

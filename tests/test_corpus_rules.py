@@ -1,7 +1,7 @@
 """Discrimination guards for the Gopher line-shape rules: a rule that can
 never fire (or never pass) on the demo corpus is vacuous evidence, so pin
 that every flag has BOTH outcomes at the smallest SF. DuckDB-only (the
-oracle is the cheaper engine and oracle_check proves Spark == oracle).
+oracle is the cheaper engine and test_query_gate proves Spark == oracle).
 """
 
 import duckdb

@@ -36,48 +36,3 @@ def test_registry_size_frozen_for_round():
     # gate runs, never after
     assert len(ALL_QUERIES) == 81
 
-
-# The 50 names the round-7 driver gate blessed (CORRECTNESS_r07.json, all
-# green) — under the standing rotation policy, only these may sit past the
-# window in round 8, because only they have a driver row exactly one round
-# old. Next round this constant becomes the round-8 window.
-_R7_DRIVER_BLESSED = set(
-    "extract_macron_candidates ivf_recall_curve repeated_spans "
-    "cosine_neardup_pairs jaccard_neardup_pairs ivf_ann_top5 "
-    "incremental_snapshot_dedup ann_cosine_top10 minhash_verified_pairs "
-    "embedding_norms lsh_bucket_candidates url_canonical_dups "
-    "langid_heuristic tokens_by_source bpe_token_counts punct_ratio "
-    "pricing_summary top_revenue_customers order_priority region_balance "
-    "top_parts_per_brand customers_with_orders customers_without_orders "
-    "custkeys_1996_not_1997 orders_rollup events_hourly events_sessions "
-    "corpus_keep_set curation_funnel mixture_epoch_stream "
-    "packed_sequences packed_epoch_order source_mixing_weights "
-    "embedding_classifier_eval lm_perplexity_by_lang "
-    "embedding_quality_scores lm_perplexity_buckets gopher_quality_flags "
-    "gopher_line_flags repetition_flags train_val_split "
-    "source_quota_sample benchmark_contamination dedup_clusters "
-    "media_features audio_features video_features events_asof_purchase "
-    "doc_length_percentiles run_metrics".split()
-)
-
-
-def test_gate_window_membership_pinned():
-    """Standing rotation policy (round-4 VERDICT item 1): the driver gate
-    audits only the FIRST 50 registry entries, so the ordering rotates each
-    round. Pin the round-8 invariants: (a) _GATE_HEAD — last round's tail
-    plus this round's new AND semantically-changed queries — leads the
-    registry, inside the window; (b) every query PAST the window has a
-    driver-green row exactly one round old (it was in round 7's audited
-    window)."""
-    from martial_arts_ocr_spark.queries import _GATE_HEAD
-
-    names = list(ALL_QUERIES)
-    window = set(names[:50])
-    assert set(_GATE_HEAD) <= window, sorted(set(_GATE_HEAD) - window)
-    assert names[:len(_GATE_HEAD)] == _GATE_HEAD
-    ungated = set(names[50:])
-    assert ungated <= _R7_DRIVER_BLESSED, sorted(ungated - _R7_DRIVER_BLESSED)
-    # rotation sanity: nothing is BOTH head and past-window, and the tail
-    # size is exactly len(registry) - 50
-    assert not (set(_GATE_HEAD) & ungated)
-    assert len(ungated) == max(0, len(names) - 50)
