@@ -12,17 +12,38 @@ On a real cluster this module is replaced by Spark's Iceberg catalog::
     df.writeTo("cc.db.extracted").append()
 
 The emulation is deliberately thin and labeled; the resume semantics built
-on top of it (engine/resume.py) — the part the north rule grades — are real
-and tested either way.
+on top of it — the part the north rule grades — are real and tested either
+way.
+
+Exactly-once waves. The three resumable runners (resume.run_checkpointed,
+curate.run_curate, curate.run_curate_mixture) share one protocol, kept
+here; each runner only says how a wave's DataFrame is computed and written:
+
+1. ``claim_root``: one run per warehouse root; sweep the run's stale tmp
+   dirs;
+2. ``completed``: the keys the run's checkpoint rows mark done;
+3. ``waves``: the pending buckets, sliced into waves;
+4. the runner writes the wave, partitioned by bucket, to ``tmp_dir``;
+5. ``swap_buckets``: each bucket dir moves into place (atomic rename);
+6. ``commit_wave``: a snapshot entry, then one checkpoint row per bucket
+   carrying its id. The checkpoint append is the commit point.
+
+A wave is either visible and checkpointed, or it re-runs. A crash between
+steps 5 and 6 re-runs the wave: its swap replaces identical bytes (every
+runner is a pure function of its input) and the extra snapshot entry is
+harmless lineage noise.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def _snapshot_path(root: str, table: str) -> str:
@@ -89,6 +110,115 @@ def table_exists(root: str, table: str) -> bool:
     return False
 
 
+def run_snapshots(root: str, table: str, run_id: str,
+                  stage: str) -> list[dict]:
+    """The snapshot entries ``run_id`` logged on ``table`` for ``stage``."""
+    return [s for s in read_snapshots(root, table)
+            if s.get("run_id") == run_id and s.get("stage") == stage]
+
+
+class WaveLog(NamedTuple):
+    """Where one resumable runner keeps its exactly-once state in a root."""
+
+    table: str            # data table; its snapshot log records each wave
+    checkpoints: str      # checkpoint table
+    schema: StructType    # its schema: run_id, <keys>, snapshot_id, status
+    part_col: str         # bucket partition column of the data dirs
+    pin_prefix: str       # config pins: <root>/<pin_prefix><run_id>.json
+    tmp_prefix: str       # wave tmp dirs: <root>/<tmp_prefix><run_id>_<tag>
+    holds: str            # what a foreign run's state is called when refused
+
+
+def claim_root(root: str, log: WaveLog, run_id: str) -> None:
+    """One run per warehouse root, then a sweep of the run's stale tmp dirs.
+
+    Waves replace whole bucket dirs, so a second run_id over the same root
+    would silently overwrite the first run's data while that run's
+    checkpoints still claim it. The guard keys on the config pins, which
+    every runner writes before its first wave (a run that crashed before
+    its first commit leaves no snapshot and no checkpoint row), and on the
+    snapshot log. Tmp dirs are uncommitted by construction and re-derivable;
+    wave numbering restarts on resume, so nothing else would reclaim them.
+    """
+    foreign = {s["run_id"] for s in read_snapshots(root, log.table)
+               if s.get("run_id") not in (None, run_id)}
+    names = os.listdir(root) if os.path.isdir(root) else []
+    foreign.update(
+        n[len(log.pin_prefix):-len(".json")] for n in names
+        if n.startswith(log.pin_prefix) and n.endswith(".json")
+        and n != f"{log.pin_prefix}{run_id}.json")
+    if foreign:
+        raise ValueError(
+            f"warehouse root {root!r} already holds {log.holds} for "
+            f"run_id(s) {sorted(foreign)}; resume with the same run_id or "
+            f"use a fresh warehouse for a new run")
+    for n in names:
+        if n.startswith(log.tmp_prefix):
+            shutil.rmtree(os.path.join(root, n), ignore_errors=True)
+
+
+def completed(spark: SparkSession, root: str, log: WaveLog,
+              run_id: str) -> set:
+    """Keys of ``run_id``'s completed checkpoint rows: ints for one key
+    column, tuples for more. Read through the explicit schema: a crash in
+    the very first append leaves only Spark's ``_temporary/``, which reads
+    as nothing completed instead of failing schema inference."""
+    if not table_exists(root, log.checkpoints):
+        return set()
+    keys = log.schema.fieldNames()[1:-2]
+    rows = (spark.read.schema(log.schema)
+            .parquet(table_path(root, log.checkpoints))
+            .where((F.col("run_id") == run_id)
+                   & (F.col("status") == "completed"))
+            .select(*keys).distinct().collect())
+    return {r[0] if len(keys) == 1 else tuple(r) for r in rows}
+
+
+def waves(pending: list, batch_size: int,
+          limit: int | None = None) -> list[list]:
+    """``pending`` in order, in waves of ``batch_size`` (the first
+    ``limit`` waves when a limit is given)."""
+    out = [pending[i:i + batch_size]
+           for i in range(0, len(pending), batch_size)]
+    return out if limit is None else out[:limit]
+
+
+def tmp_dir(root: str, log: WaveLog, run_id: str, tag) -> str:
+    return os.path.join(root, f"{log.tmp_prefix}{run_id}_{tag}")
+
+
+def swap_buckets(log: WaveLog, tmp: str, dest: str, buckets: list) -> None:
+    """Move each bucket dir of a wave's tmp write into ``dest``, replacing
+    what an earlier attempt at the same wave left there. A bucket with no
+    rows gets an empty dir (partitionBy writes none for it), so every
+    committed bucket has its dir; readers find no file in it."""
+    os.makedirs(dest, exist_ok=True)
+    for b in buckets:
+        src = os.path.join(tmp, f"{log.part_col}={b}")
+        dst = os.path.join(dest, f"{log.part_col}={b}")
+        if os.path.isdir(dst):
+            shutil.rmtree(dst)
+        if os.path.isdir(src):
+            os.replace(src, dst)
+        else:
+            os.makedirs(dst)
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def commit_wave(spark: SparkSession, root: str, log: WaveLog, run_id: str,
+                buckets: list, scope: tuple = (), **meta) -> None:
+    """Commit a swapped-in wave: a snapshot entry
+    ``{run_id, **meta, buckets}`` on ``log.table``, then one
+    'completed' checkpoint row per bucket, keyed ``(*scope, bucket)`` and
+    carrying that id. The checkpoint append is the commit point."""
+    buckets = [int(b) for b in buckets]
+    sid = append_snapshot(root, log.table,
+                          {"run_id": run_id, **meta, "buckets": buckets})
+    rows = [(run_id, *scope, b, sid, "completed") for b in buckets]
+    (spark.createDataFrame(rows, log.schema).write.mode("append")
+     .parquet(table_path(root, log.checkpoints)))
+
+
 def _bucket_dirs(root: str, table: str) -> list[str]:
     p = table_path(root, table)
     if not os.path.isdir(p):
@@ -136,7 +266,6 @@ def _recover_compaction(root: str, table: str,
     future ``extracted_v2``) — the subdir makes ownership structural.
     """
     import errno
-    import shutil
 
     tdir = table_path(root, table)
     if not os.path.isdir(tdir):
@@ -195,8 +324,6 @@ def compact_table(spark: SparkSession, root: str, table: str,
     real Iceberg makes the swap a metadata snapshot commit; this module
     is the labeled thin stand-in (see module docstring).
     """
-    import shutil
-
     files_before = files_after = 0
     buckets_rewritten = 0
     _recover_compaction(root, table)

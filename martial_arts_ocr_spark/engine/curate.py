@@ -26,11 +26,10 @@ Stages:
    snapshot-after, same as the gate stage.
 3. **Pack stage** — kept documents are packed per content-hash bucket
    (packing.py: bucket is the unit of parallelism AND determinism) in
-   waves of ``batch_size`` buckets; each wave writes its bucket
-   partitions atomically (tmp + rename, idempotent re-run), appends a
-   snapshot, then commits checkpoint rows — the checkpoint write is the
-   commit point, exactly as in resume.py's wave protocol. Resume skips
-   completed buckets; because packing is a pure function of a bucket's
+   waves of ``batch_size`` buckets, each committed through the
+   exactly-once wave protocol in ``catalog.py`` (tmp write, bucket-dir
+   swap, snapshot, checkpoint rows). Resume skips completed buckets;
+   because packing is a pure function of a bucket's
    documents, output bytes are identical across batch_size choices,
    parallelism levels, and crash/resume boundaries (pinned in
    tests/test_curate_runner.py).
@@ -67,6 +66,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import catalog
+from .schema import MIX_CHECKPOINT_SCHEMA, PACK_CHECKPOINT_SCHEMA
 from ..packing import CTX_LEN, N_BUCKETS, epoch_order_frame, \
     pack_token_sequences, content_hash_col, pack_bucket_col
 
@@ -77,11 +77,21 @@ PACKED_CKPT_TABLE = "packed_checkpoints"
 EPOCH_TABLE = "epoch_order"
 N_EPOCHS = 2          # default matches queries/corpus.py _N_EPOCHS
 
-# explicit schemas for resume-path reads (ADVICE r6: a crash during the
-# very first checkpoint append leaves the dir with only Spark's
-# _temporary subdir — isdir passes, schema inference throws, and the
-# runner whose purpose is crash-resume hard-blocks on every resume)
-_CKPT_SCHEMA = "run_id string, bucket int, snapshot_id string, status string"
+MIXTURE_DOCS_TABLE = "mixture_docs"
+MIXTURE_PACKED_TABLE = "mixture_packed"
+MIXTURE_CKPT_TABLE = "mixture_checkpoints"
+MIXTURE_EPOCH_TABLE = "mixture_epoch_order"
+
+# both runners share the config pin prefix, so one curation run of either
+# mode owns a warehouse
+_PACK = catalog.WaveLog(PACKED_TABLE, PACKED_CKPT_TABLE, PACK_CHECKPOINT_SCHEMA,
+                        "bucket", "_curate_", "_tmp_curate_", "curation state")
+_MIX = _PACK._replace(table=MIXTURE_PACKED_TABLE,
+                      checkpoints=MIXTURE_CKPT_TABLE,
+                      schema=MIX_CHECKPOINT_SCHEMA)
+
+# explicit schemas for resume-path reads (ADVICE r6: an all-empty-bucket
+# table has no file to infer from)
 _PACKED_SCHEMA = ("seq_in_bucket bigint, n_docs_in_seq bigint, "
                   "n_tokens bigint, fill_ratio double, "
                   "token_ids array<bigint>, run_id string, bucket bigint")
@@ -98,19 +108,8 @@ def _kept_shuffle_width(spark: SparkSession, n_buckets: int) -> int:
     return min(4 * n_buckets, cap)
 
 
-def _has_parquet_files(path: str) -> bool:
-    # committed data only — delegates to the shared helper so the
-    # _temporary-pruning fix covers resume.py/sigstore.py too (r7 review)
-    return catalog.table_exists(os.path.dirname(path),
-                                os.path.basename(path))
-
-
-def _pin_path(root: str, run_id: str) -> str:
-    return os.path.join(root, f"_curate_{run_id}.json")
-
-
 def _pin_config(root: str, run_id: str, cfg: dict) -> None:
-    p = _pin_path(root, run_id)
+    p = os.path.join(root, f"{_PACK.pin_prefix}{run_id}.json")
     if os.path.exists(p):
         with open(p, encoding="utf-8") as f:
             pinned = json.load(f)
@@ -173,12 +172,16 @@ def _epoch_path(root: str, run_id: str) -> str:
                         f"run_id={run_id}")
 
 
+def _snapshot_epochs(root: str, table: str, run_id: str,
+                     stage: str) -> set[int]:
+    return {int(s["epoch"])
+            for s in catalog.run_snapshots(root, table, run_id, stage)}
+
+
 def completed_epochs(root: str, run_id: str) -> set[int]:
     """Epochs whose snapshot committed (the snapshot append is the epoch
     stage's commit point, mirroring the pack wave's checkpoint rows)."""
-    return {int(s["epoch"])
-            for s in catalog.read_snapshots(root, EPOCH_TABLE)
-            if s.get("run_id") == run_id and s.get("stage") == "epoch"}
+    return _snapshot_epochs(root, EPOCH_TABLE, run_id, "epoch")
 
 
 def read_epoch_order(spark: SparkSession, root: str, run_id: str,
@@ -229,30 +232,6 @@ def _order_join_packed(order: DataFrame, packed: DataFrame) -> DataFrame:
                   ["bucket", "seq_in_bucket"]))
 
 
-def _guard_foreign_runs(root: str, run_id: str, packed_table: str) -> None:
-    """One warehouse = one curation run: packed bucket dirs are replaced
-    per wave, so a second run_id would silently overwrite the first run's
-    output (same guard run_checkpointed grew in r4). ADVICE r6: the
-    snapshot is appended AFTER the wave's bucket-dir moves, so a run that
-    crashed inside its first wave leaves orphan bucket dirs with NO
-    snapshot — key the guard on the config pin too (written before any
-    data lands), so a dead foreign run still refuses."""
-    foreign = [s["run_id"]
-               for s in catalog.read_snapshots(root, packed_table)
-               if s.get("run_id") not in (None, run_id)]
-    if os.path.isdir(root):
-        foreign += [
-            name[len("_curate_"):-len(".json")] for name in os.listdir(root)
-            if name.startswith("_curate_") and name.endswith(".json")
-            and name != os.path.basename(_pin_path(root, run_id))
-        ]
-    if foreign:
-        raise ValueError(
-            f"warehouse {root} already holds curation state for run_id "
-            f"{sorted(set(foreign))} — a second run would overwrite its "
-            "bucket partitions; use a fresh warehouse")
-
-
 def _ensure_flags(spark: SparkSession, docs_dir: str, root: str,
                   run_id: str) -> DataFrame:
     """Stage 1: the seven-gate keep-set flags, materialized once per run
@@ -260,10 +239,8 @@ def _ensure_flags(spark: SparkSession, docs_dir: str, root: str,
     stage)."""
     from ..queries.corpus import q_corpus_keep_set
 
-    flags_done = any(s.get("run_id") == run_id and s.get("stage") == "flags"
-                     for s in catalog.read_snapshots(root, CURATION_TABLE))
     fpath = _flags_path(root, run_id)
-    if not flags_done:
+    if not catalog.run_snapshots(root, CURATION_TABLE, run_id, "flags"):
         flags = q_corpus_keep_set(spark, docs_dir)
         flags.write.mode("overwrite").parquet(fpath)   # idempotent re-run
         catalog.append_snapshot(root, CURATION_TABLE,
@@ -273,43 +250,27 @@ def _ensure_flags(spark: SparkSession, docs_dir: str, root: str,
 
 def completed_pack_buckets(spark: SparkSession, root: str,
                            run_id: str) -> set[int]:
-    path = catalog.table_path(root, PACKED_CKPT_TABLE)
-    if not os.path.isdir(path) or not _has_parquet_files(path):
-        return set()
-    rows = (spark.read.schema(_CKPT_SCHEMA).parquet(path)
-            .where((F.col("run_id") == run_id)
-                   & (F.col("status") == "completed"))
-            .select("bucket").distinct().collect())
-    return {int(r["bucket"]) for r in rows}
+    return catalog.completed(spark, root, _PACK, run_id)
 
 
-def _commit_wave_buckets(packed: DataFrame, run_id: str, wave: list[int],
-                         root: str, tmp_name: str, dest_path: str) -> None:
-    """The pack wave's atomic commit, shared by both runners: tmp write
-    partitioned by bucket -> per-bucket dir replace (idempotent wave
-    re-run); a bucket with zero kept docs still completes — emit the bare
-    partition dir so resume marks it done (r7 gotcha: partitionBy writes
-    no dir for empty partitions)."""
-    tmp = os.path.join(root, tmp_name)
+def _commit_pack_wave(spark: SparkSession, root: str, log: catalog.WaveLog,
+                      run_id: str, buckets: list[int], packed: DataFrame,
+                      dest: str, tag: str, scope: tuple = (),
+                      **meta) -> None:
+    """The pack wave shared by both runners: the packed rows land in a tmp
+    dir partitioned by bucket, then go through catalog's bucket-dir swap
+    and commit."""
+    tmp = catalog.tmp_dir(root, log, run_id, tag)
     (packed.withColumn("run_id", F.lit(run_id))
-     .repartition(len(wave), "bucket")
+     .repartition(len(buckets), "bucket")
      .sortWithinPartitions("bucket", "seq_in_bucket")
      .write.mode("overwrite").partitionBy("bucket").parquet(tmp))
-    os.makedirs(dest_path, exist_ok=True)
-    for b in wave:
-        src = os.path.join(tmp, f"bucket={b}")
-        dst = os.path.join(dest_path, f"bucket={b}")
-        if os.path.isdir(src):
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)            # idempotent wave re-run
-            os.replace(src, dst)
-        else:
-            os.makedirs(dst, exist_ok=True)   # empty bucket still done
-    shutil.rmtree(tmp, ignore_errors=True)
+    catalog.swap_buckets(log, tmp, dest, buckets)
+    catalog.commit_wave(spark, root, log, run_id, buckets, scope, **meta)
 
 
 def _commit_epoch_order(packed: DataFrame, epoch: int, n_buckets: int,
-                        root: str, tmp_name: str, dst: str) -> None:
+                        tmp: str, dst: str) -> None:
     """The epoch-order stage's atomic commit, shared by both runners:
     epoch_order_frame for ONE epoch (never all-epochs-then-filter — r7
     review) -> tmp write bucket-partitioned -> dir swap (idempotent epoch
@@ -318,7 +279,6 @@ def _commit_epoch_order(packed: DataFrame, epoch: int, n_buckets: int,
     (round-5 gotcha)."""
     order = epoch_order_frame(
         packed.select("bucket", "seq_in_bucket"), [epoch]).drop("epoch")
-    tmp = os.path.join(root, tmp_name)
     (order.repartition(n_buckets, "bucket")
      .sortWithinPartitions("bucket", "pos_in_bucket")
      .write.mode("overwrite").partitionBy("bucket").parquet(tmp))
@@ -343,7 +303,7 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
     epoch artifact and is pinned like every other semantic knob."""
     from ..bpe_merges_1k import BPE_MERGES_1K
 
-    _guard_foreign_runs(root, run_id, PACKED_TABLE)
+    catalog.claim_root(root, _PACK, run_id)
     _pin_config(root, run_id, {
         "n_buckets": n_buckets, "ctx_len": ctx_len,
         "n_merges": len(BPE_MERGES_1K), "n_epochs": n_epochs,
@@ -356,10 +316,8 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
     # every pack wave below (round-6 VERDICT What's wrong #1: the old
     # per-wave isin() filter on an md5-derived EXPRESSION rescanned the
     # FULL corpus once per wave — O(n_buckets/batch_size) corpus passes).
-    kept_done = any(s.get("run_id") == run_id and s.get("stage") == "kept"
-                    for s in catalog.read_snapshots(root, KEPT_TABLE))
     kpath = _kept_path(root, run_id)
-    if not kept_done:
+    if not catalog.run_snapshots(root, KEPT_TABLE, run_id, "kept"):
         docs = spark.read.parquet(f"{docs_dir}/documents.parquet")
         kept = docs.join(flags.where(F.col("kept")).select("doc_id"),
                          "doc_id")
@@ -384,27 +342,13 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
     done = completed_pack_buckets(spark, root, run_id)
     remaining = [b for b in range(n_buckets) if b not in done]
     packed_path = catalog.table_path(root, PACKED_TABLE)
-    waves = [remaining[i:i + batch_size]
-             for i in range(0, len(remaining), batch_size)]
-    if max_waves is not None:
-        waves = waves[:max_waves]
-
-    for wave_no, wave in enumerate(waves):
+    for wave_no, wave in enumerate(
+            catalog.waves(remaining, batch_size, max_waves)):
         sub = read_kept_buckets(spark, root, run_id, wave)
         packed = pack_token_sequences(sub, ctx_len=ctx_len,
                                       n_buckets=n_buckets)
-        _commit_wave_buckets(packed, run_id, wave, root,
-                             f"_pack_tmp_{run_id}_{wave[0]}", packed_path)
-        sid = catalog.append_snapshot(root, PACKED_TABLE, {
-            "run_id": run_id, "wave": wave_no,
-            "buckets": [int(b) for b in wave],
-        })
-        ckpt = spark.createDataFrame(
-            [(run_id, int(b), sid, "completed") for b in wave],
-            "run_id string, bucket int, snapshot_id string, status string",
-        )
-        ckpt.write.mode("append").parquet(
-            catalog.table_path(root, PACKED_CKPT_TABLE))
+        _commit_pack_wave(spark, root, _PACK, run_id, wave, packed,
+                          packed_path, f"pack_{wave[0]}", wave=wave_no)
 
     done_after = completed_pack_buckets(spark, root, run_id)
     summary = {
@@ -437,8 +381,9 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
             todo = todo[:max_epochs]
         edir = _epoch_path(root, run_id)
         for e in todo:
-            _commit_epoch_order(packed, e, n_buckets, root,
-                                f"_epoch_tmp_{run_id}_{e}",
+            _commit_epoch_order(packed, e, n_buckets,
+                                catalog.tmp_dir(root, _PACK, run_id,
+                                                f"epoch_{e}"),
                                 os.path.join(edir, f"epoch={e}"))
             catalog.append_snapshot(root, EPOCH_TABLE,
                                     {"run_id": run_id, "stage": "epoch",
@@ -475,13 +420,6 @@ def read_packed(spark: SparkSession, root: str) -> DataFrame:
 # levels, and crash/resume boundaries for the same pinned config
 # (tests/test_curate_mixture.py).
 
-MIXTURE_DOCS_TABLE = "mixture_docs"
-MIXTURE_PACKED_TABLE = "mixture_packed"
-MIXTURE_CKPT_TABLE = "mixture_checkpoints"
-MIXTURE_EPOCH_TABLE = "mixture_epoch_order"
-
-_MIX_CKPT_SCHEMA = ("run_id string, epoch int, bucket int, "
-                    "snapshot_id string, status string")
 _SAMPLED_SCHEMA = "doc_id bigint, source string, text string"
 
 
@@ -500,22 +438,9 @@ def _mix_epoch_path(root: str, run_id: str, epoch: int) -> str:
                         f"run_id={run_id}", f"epoch={epoch}")
 
 
-def _mix_snapshots(root: str, table: str, run_id: str,
-                   stage: str) -> set[int]:
-    return {int(s["epoch"]) for s in catalog.read_snapshots(root, table)
-            if s.get("run_id") == run_id and s.get("stage") == stage}
-
-
 def completed_mix_pack(spark: SparkSession, root: str,
                        run_id: str) -> set[tuple[int, int]]:
-    path = catalog.table_path(root, MIXTURE_CKPT_TABLE)
-    if not os.path.isdir(path) or not _has_parquet_files(path):
-        return set()
-    rows = (spark.read.schema(_MIX_CKPT_SCHEMA).parquet(path)
-            .where((F.col("run_id") == run_id)
-                   & (F.col("status") == "completed"))
-            .select("epoch", "bucket").distinct().collect())
-    return {(int(r["epoch"]), int(r["bucket"])) for r in rows}
+    return catalog.completed(spark, root, _MIX, run_id)
 
 
 def read_mixture_sampled(spark: SparkSession, root: str, run_id: str,
@@ -584,7 +509,7 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
                                   mixture_threshold_sample)
 
     epoch_docs = _MIX_EPOCH_DOCS if epoch_docs is None else int(epoch_docs)
-    _guard_foreign_runs(root, run_id, MIXTURE_PACKED_TABLE)
+    catalog.claim_root(root, _MIX, run_id)
     _pin_config(root, run_id, {
         "mode": "mixture", "n_buckets": n_buckets, "ctx_len": ctx_len,
         "n_merges": len(BPE_MERGES_1K), "n_epochs": n_epochs,
@@ -603,12 +528,10 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
     # must sample with the SAME grid that shaped the already-committed
     # epochs (not one re-derived from whatever docs_dir holds now), and a
     # no-op resume/status poll then launches no corpus scan at all
-    grid_snap = next(
-        (s for s in catalog.read_snapshots(root, MIXTURE_DOCS_TABLE)
-         if s.get("run_id") == run_id and s.get("stage") == "mix_grid"),
-        None)
-    if grid_snap is not None:
-        grid = [tuple(r) for r in grid_snap["grid"]]
+    grid_snap = catalog.run_snapshots(root, MIXTURE_DOCS_TABLE, run_id,
+                                      "mix_grid")
+    if grid_snap:
+        grid = [tuple(r) for r in grid_snap[0]["grid"]]
     else:
         grid = mixture_grid_rows(kept, epoch_docs=epoch_docs)
         catalog.append_snapshot(root, MIXTURE_DOCS_TABLE,
@@ -619,10 +542,10 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
     epochs = list(range(n_epochs))
     if max_epochs is not None:
         epochs = epochs[:max_epochs]
-    sampled_done = _mix_snapshots(root, MIXTURE_DOCS_TABLE, run_id,
-                                  "mix_sample")
-    order_done = _mix_snapshots(root, MIXTURE_EPOCH_TABLE, run_id,
-                                "mix_epoch")
+    sampled_done = _snapshot_epochs(root, MIXTURE_DOCS_TABLE, run_id,
+                                    "mix_sample")
+    order_done = _snapshot_epochs(root, MIXTURE_EPOCH_TABLE, run_id,
+                                  "mix_epoch")
     pack_done = completed_mix_pack(spark, root, run_id)
 
     for e in epochs:
@@ -654,10 +577,8 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
         # --- pack stage: this epoch's buckets, checkpointed waves ---------
         remaining = [b for b in range(n_buckets)
                      if (e, b) not in pack_done]
-        waves = [remaining[i:i + batch_size]
-                 for i in range(0, len(remaining), batch_size)]
+        waves = catalog.waves(remaining, batch_size, waves_left)
         if waves_left is not None:
-            waves = waves[:waves_left]
             waves_left -= len(waves)
         ppath = _mix_packed_path(root, run_id, e)
         for wave in waves:
@@ -665,26 +586,18 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
                 .select("doc_id", "text")
             packed = pack_token_sequences(sub, ctx_len=ctx_len,
                                           n_buckets=n_buckets)
-            _commit_wave_buckets(packed, run_id, wave, root,
-                                 f"_mixpack_tmp_{run_id}_{e}_{wave[0]}",
-                                 ppath)
-            sid = catalog.append_snapshot(root, MIXTURE_PACKED_TABLE, {
-                "run_id": run_id, "epoch": int(e),
-                "buckets": [int(b) for b in wave],
-            })
-            ckpt = spark.createDataFrame(
-                [(run_id, int(e), int(b), sid, "completed") for b in wave],
-                _MIX_CKPT_SCHEMA)
-            ckpt.write.mode("append").parquet(
-                catalog.table_path(root, MIXTURE_CKPT_TABLE))
+            _commit_pack_wave(spark, root, _MIX, run_id, wave, packed, ppath,
+                              f"mixpack_{e}_{wave[0]}", (int(e),),
+                              epoch=int(e))
             pack_done.update((e, int(b)) for b in wave)
 
         # --- order stage: shard permutation over THIS epoch's pack --------
         epoch_packed = {b for ee, b in pack_done if ee == e}
         if e not in order_done and len(epoch_packed) == n_buckets:
             packed_e = read_mixture_packed(spark, root, run_id, e)
-            _commit_epoch_order(packed_e, e, n_buckets, root,
-                                f"_mixorder_tmp_{run_id}_{e}",
+            _commit_epoch_order(packed_e, e, n_buckets,
+                                catalog.tmp_dir(root, _MIX, run_id,
+                                                f"mixorder_{e}"),
                                 _mix_epoch_path(root, run_id, e))
             catalog.append_snapshot(root, MIXTURE_EPOCH_TABLE,
                                     {"run_id": run_id, "stage": "mix_epoch",
@@ -704,9 +617,8 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
     # counts come from the sample snapshots (written once at commit time)
     # — a resume/status poll with nothing to do launches NO Spark jobs
     # here (r8 review); the table-scan fallback covers pre-r8 snapshots
-    for s in catalog.read_snapshots(root, MIXTURE_DOCS_TABLE):
-        if s.get("run_id") != run_id or s.get("stage") != "mix_sample":
-            continue
+    for s in catalog.run_snapshots(root, MIXTURE_DOCS_TABLE, run_id,
+                                   "mix_sample"):
         e = int(s["epoch"])
         if "counts" in s:
             summary["sampled"][e] = dict(s["counts"])

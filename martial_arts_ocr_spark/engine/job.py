@@ -143,53 +143,16 @@ def extract_batch(iterator):
     """mapInPandas worker: Arrow batch in → extracted batch out.
 
     Pure function of row content — batch boundaries and row order never
-    affect any output value (byte-identity invariant).
+    affect any output value (byte-identity invariant). Nested values stay
+    the kernel's dicts: pyspark converts every struct value to a dict by
+    field name before the Arrow build, so ``EXTRACTED_SCHEMA`` alone fixes
+    the nested field order.
     """
     for pdf in iterator:
-        out = []
-        for (url, row), host in zip(kernel_rows(pdf), pdf["host"]):
-            row["host"] = host
-            s = row.pop("stats")
-            row["stats"] = (
-                s["n_chars"], s["n_words"], s["n_lines"], s["n_paragraphs"],
-                s["n_sentences"], s["avg_word_len"], s["reading_time_min"],
-            )
-            row["segments"] = [
-                (d["text"], d["script_type"], d["start"], d["end"])
-                for d in row["segments"]
-            ]
-            row["term_hits"] = [
-                (d["term"], d["romaji"], d["translation"], d["category"],
-                 d["pos"])
-                for d in row["term_hits"]
-            ]
-            row["macron_candidates"] = [
-                (d["observed"], d["candidate"], d["start"], d["end"],
-                 d["ambiguous"])
-                for d in row["macron_candidates"]
-            ]
-            row["figures"] = [
-                (d["region_id"], d["region_type"], d["start"], d["end"],
-                 d["caption"], d["confidence"], d["reading_order"])
-                for d in row["figures"]
-            ]
-            c = row.pop("cleaning")
-            row["cleaning"] = (
-                c["original_chars"], c["cleaned_chars"], c["chars_removed"],
-                c["words_before"], c["words_after"], c["compression_ratio"],
-            )
-            ly = row.pop("layout")
-            row["layout"] = (
-                ly["n_blocks_total"], ly["n_accepted"], ly["n_figure_blocks"],
-                ly["content_coverage"], ly["figure_coverage"],
-                ly["chrome_coverage"],
-            )
-            row["language_segments"] = [
-                (d["lang"], d["start"], d["end"])
-                for d in row["language_segments"]
-            ]
-            out.append(tuple(row[c] for c in _OUT_COLS))
-        yield pd.DataFrame(out, columns=_OUT_COLS)
+        yield pd.DataFrame(
+            [{**row, "host": host}
+             for (_url, row), host in zip(kernel_rows(pdf), pdf["host"])],
+            columns=_OUT_COLS)
 
 
 def run_extract(

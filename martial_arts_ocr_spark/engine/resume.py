@@ -4,35 +4,21 @@ North-rule requirements (BASELINE.json): "progress is checkpointed per
 Iceberg partition with lineage + per-partition extraction metrics written to
 a metrics table so failed runs resume exactly."
 
-Design (the reference analogue is the document status state machine
-``/root/reference/src/martial_arts_ocr/pipeline/orchestrator.py:289-311``
-— uploaded→processing→completed/failed — lifted from per-document SQLite
-rows to per-partition table rows):
-
-* input pages are bucketed by ``part_bucket = pmod(xxhash64(part_key), P)``
-  where ``part_key`` is the (salted) url-host — the Iceberg-partition
-  analogue;
-* buckets are processed in **waves** (``batch_size`` buckets per Spark
-  job — at 10^12 docs a snapshot is processed as a sequence of partition
-  waves, never one monolithic job);
-* after each wave commits (data written to ``extracted/part_bucket=k/``),
-  one checkpoint row per bucket and one metrics row per bucket are appended,
-  then a snapshot entry is logged;
-* resume = anti-join of buckets against completed checkpoint rows: a rerun
-  of the same ``run_id`` processes only unfinished buckets, byte-identically
-  (the kernel is a pure function, so reruns can't diverge).
-
-Crash atomicity in-sandbox: data for a wave lands under a temp dir and is
-renamed into place before its checkpoint rows are written — a wave is
-either fully visible+checkpointed or invisible; a crash between rename and
-checkpoint re-runs the wave, whose rename then replaces identical bytes
-(idempotent by determinism).
+Design (the reference analogue is the reference project's document status
+state machine in ``pipeline/orchestrator.py`` —
+uploaded→processing→completed/failed — lifted from per-document SQLite
+rows to per-partition table rows): input pages are bucketed by
+``part_bucket = pmod(xxhash64(part_key), P)``, where ``part_key`` is the
+(salted) url-host — the Iceberg-partition analogue — and the buckets are
+processed in waves of ``batch_size`` (at 10^12 docs a snapshot is a
+sequence of partition waves, never one monolithic job). Each wave commits
+through the exactly-once protocol in ``catalog.py``; this runner adds one
+metrics row per bucket between the bucket-dir swap and the commit. Resume
+processes only the buckets without a completed checkpoint row, and
+byte-identically: the kernel is a pure function, so reruns can't diverge.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -43,6 +29,9 @@ from .schema import CHECKPOINT_SCHEMA, METRICS_SCHEMA
 CHECKPOINT_TABLE = "checkpoints"
 METRICS_TABLE = "metrics"
 EXTRACTED_TABLE = "extracted"
+
+_LOG = catalog.WaveLog(EXTRACTED_TABLE, CHECKPOINT_TABLE, CHECKPOINT_SCHEMA,
+                       "part_bucket", "_run_", "_tmp_wave_", "extracted data")
 
 
 def _bucketed(pages: DataFrame, n_buckets: int,
@@ -77,14 +66,7 @@ def read_metrics(spark: SparkSession, root: str) -> DataFrame:
 
 
 def completed_buckets(spark: SparkSession, root: str, run_id: str) -> set[int]:
-    if not catalog.table_exists(root, CHECKPOINT_TABLE):
-        return set()
-    df = catalog.read_table(spark, root, CHECKPOINT_TABLE)
-    rows = (
-        df.where((F.col("run_id") == run_id) & (F.col("status") == "completed"))
-        .select("part_bucket").distinct().collect()
-    )
-    return {r.part_bucket for r in rows}
+    return catalog.completed(spark, root, _LOG, run_id)
 
 
 _DEFAULT_BATCH_SIZE = 4
@@ -174,37 +156,11 @@ def run_checkpointed(
     drop documents already ingested — incremental cross-snapshot dedup as
     a pipeline flow, not just a registered query.
     """
-    # one corpus snapshot per warehouse root: the extracted table's
-    # bucket dirs are replaced wholesale per wave, so a SECOND run_id
-    # over the same root would silently delete the first run's data for
-    # every overlapping bucket while the first run's checkpoints still
-    # claim it (review-found). Resume of the SAME run_id is the designed
-    # multi-invocation path; a new snapshot gets a new --warehouse.
-    # The guard scans the _run_<id>.json config pins, NOT the checkpoints
-    # table: a run that crashed after renaming wave data into extracted/
-    # but before its first checkpoint write leaves zero checkpoint rows,
-    # and a second run_id would then silently mix the crashed run's
-    # leftover bucket dirs into its snapshot (round-4 ADVICE). The pin is
-    # written by _pin_run_config at entry, BEFORE any wave, so it exists
-    # for every run that could possibly have touched the warehouse.
-    if os.path.isdir(root):
-        others = sorted(
-            n[len("_run_"):-len(".json")] for n in os.listdir(root)
-            if n.startswith("_run_") and n.endswith(".json")
-            and n != f"_run_{run_id}.json"
-        )
-        if others:
-            raise ValueError(
-                f"warehouse root {root!r} already holds extracted data "
-                f"for run_id(s) {others}; use the same --run-id "
-                f"to resume or a fresh --warehouse for a new snapshot")
-    # stale _tmp_wave_* dirs from a hard crash are re-derivable
-    # (uncommitted by construction) but wave numbering restarts on
-    # resume, so nothing would ever reclaim them — sweep at entry
-    if os.path.isdir(root):
-        for name in os.listdir(root):
-            if name.startswith("_tmp_wave_"):
-                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+    # one corpus snapshot per warehouse root; resume of the SAME run_id is
+    # the designed multi-invocation path. The pin below is written before
+    # any wave, so the guard holds even for a run that crashed before its
+    # first checkpoint.
+    catalog.claim_root(root, _LOG, run_id)
 
     import warnings
 
@@ -264,10 +220,7 @@ def _run_waves(spark, bucketed, root, run_id, n_buckets, batch_size,
     pending = [b for b in present if b not in done]
 
     processed: list[int] = []
-    waves = [pending[i:i + batch_size]
-             for i in range(0, len(pending), batch_size)]
-    ext_path = catalog.table_path(root, EXTRACTED_TABLE)
-    for wave_no, wave in enumerate(waves):
+    for wave_no, wave in enumerate(catalog.waves(pending, batch_size)):
         if fail_after_waves is not None and wave_no >= fail_after_waves:
             raise RuntimeError(f"injected failure before wave {wave_no}")
         # Kernel parallelism is DECOUPLED from checkpoint-wave width
@@ -306,20 +259,6 @@ def _run_waves(spark, bucketed, root, run_id, n_buckets, batch_size,
             .cast("int"),
         ).persist()
 
-        # 1. write wave data to a temp dir, then rename per bucket (atomic).
-        #    The EXTRACTED rows (html already dropped — a fraction of the
-        #    input bytes) take one cheap shuffle onto part_bucket so each
-        #    bucket lands as one well-sized file instead of one sliver per
-        #    kernel task (the round-robin kernel stage would otherwise
-        #    write |cores| tiny files per bucket — the small-file death at
-        #    100 TB; one extracted-side shuffle is cheaper than
-        #    re-compacting). sortWithinPartitions clusters rows by
-        #    (host, url) inside each file so parquet row-group min/max
-        #    stats prune host-/url-filtered scans downstream;
-        #    part_bucket leads the sort so the partitioned writer's own
-        #    required partition-column ordering is already satisfied and
-        #    does not re-sort away the (host, url) clustering.
-        tmp_dir = os.path.join(root, f"_tmp_wave_{run_id}_{wave_no}")
         try:
             if sign_snapshots:
                 from . import sigstore
@@ -339,62 +278,60 @@ def _run_waves(spark, bucketed, root, run_id, n_buckets, batch_size,
                     key_col="url", text_col="text",
                 )
             _commit_wave(spark, extracted, root, run_id, wave, wave_no,
-                         tmp_dir, ext_path, files_per_bucket)
+                         files_per_bucket)
         finally:
             extracted.unpersist()
         processed.extend(wave)
     return processed
 
 
-def _commit_wave(spark, extracted, root, run_id, wave, wave_no, tmp_dir,
-                 ext_path, files_per_bucket) -> None:
-        (extracted.repartition(
-            max(len(wave), 1) * files_per_bucket, F.col("part_bucket"),
-            F.pmod(F.xxhash64("url"), F.lit(files_per_bucket)))
-         .sortWithinPartitions("part_bucket", "host", "url")
-         .write.mode("overwrite")
-         .partitionBy("part_bucket").parquet(tmp_dir))
-        os.makedirs(ext_path, exist_ok=True)
-        for b in wave:
-            src = os.path.join(tmp_dir, f"part_bucket={b}")
-            dst = os.path.join(ext_path, f"part_bucket={b}")
-            if os.path.isdir(src):
-                if os.path.isdir(dst):
-                    shutil.rmtree(dst)      # idempotent re-run of a wave
-                os.replace(src, dst)
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+def _commit_wave(spark, extracted, root, run_id, wave, wave_no,
+                 files_per_bucket) -> None:
+    # 1. write wave data to a temp dir, then swap its bucket dirs in.
+    #    The EXTRACTED rows (html already dropped — a fraction of the
+    #    input bytes) take one cheap shuffle onto part_bucket so each
+    #    bucket lands as one well-sized file instead of one sliver per
+    #    kernel task (the round-robin kernel stage would otherwise
+    #    write |cores| tiny files per bucket — the small-file death at
+    #    100 TB; one extracted-side shuffle is cheaper than
+    #    re-compacting). sortWithinPartitions clusters rows by
+    #    (host, url) inside each file so parquet row-group min/max
+    #    stats prune host-/url-filtered scans downstream;
+    #    part_bucket leads the sort so the partitioned writer's own
+    #    required partition-column ordering is already satisfied and
+    #    does not re-sort away the (host, url) clustering.
+    tmp = catalog.tmp_dir(root, _LOG, run_id, wave_no)
+    (extracted.repartition(
+        max(len(wave), 1) * files_per_bucket, F.col("part_bucket"),
+        F.pmod(F.xxhash64("url"), F.lit(files_per_bucket)))
+     .sortWithinPartitions("part_bucket", "host", "url")
+     .write.mode("overwrite")
+     .partitionBy("part_bucket").parquet(tmp))
+    catalog.swap_buckets(_LOG, tmp,
+                         catalog.table_path(root, EXTRACTED_TABLE), wave)
 
-        # 2. per-partition metrics (lineage: run_id + bucket + counts +
-        #    input bytes), written through the declared METRICS_SCHEMA
-        metrics = (
-            extracted.groupBy("part_bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.when(F.col("status") == "completed", 1).otherwise(0))
-                .alias("n_completed"),
-                F.sum(F.when(F.col("status") == "failed", 1).otherwise(0))
-                .alias("n_failed"),
-                F.sum("n_bytes_in").alias("n_bytes_in"),
-                F.sum(F.length("text")).alias("n_chars_out"),
-            )
-            .withColumn("run_id", F.lit(run_id))
-            .select([F.col(f.name).cast(f.dataType)
-                     for f in METRICS_SCHEMA.fields])
+    # 2. per-partition metrics (lineage: run_id + bucket + counts +
+    #    input bytes), written through the declared METRICS_SCHEMA. A
+    #    crash before the commit re-runs the wave; its duplicate metrics
+    #    rows are byte-identical (determinism) and collapsed by
+    #    read_metrics' key dedup.
+    metrics = (
+        extracted.groupBy("part_bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.when(F.col("status") == "completed", 1).otherwise(0))
+            .alias("n_completed"),
+            F.sum(F.when(F.col("status") == "failed", 1).otherwise(0))
+            .alias("n_failed"),
+            F.sum("n_bytes_in").alias("n_bytes_in"),
+            F.sum(F.length("text")).alias("n_chars_out"),
         )
-        (metrics.write.mode("append")
-         .parquet(catalog.table_path(root, METRICS_TABLE)))
+        .withColumn("run_id", F.lit(run_id))
+        .select([F.col(f.name).cast(f.dataType)
+                 for f in METRICS_SCHEMA.fields])
+    )
+    (metrics.write.mode("append")
+     .parquet(catalog.table_path(root, METRICS_TABLE)))
 
-        # 3. snapshot entry, then checkpoint rows carrying its id — the
-        # checkpoint write is the commit point. A crash between steps 2
-        # and 3 re-runs the wave: the duplicate snapshot entry is harmless
-        # lineage noise, and the duplicate metrics rows are byte-identical
-        # (determinism) and collapsed by read_metrics' key dedup.
-        sid = catalog.append_snapshot(root, EXTRACTED_TABLE, {
-            "run_id": run_id, "wave": wave_no, "buckets": [int(b) for b in wave],
-        })
-        ckpt = spark.createDataFrame(
-            [(run_id, int(b), sid, "completed") for b in wave],
-            CHECKPOINT_SCHEMA,
-        )
-        (ckpt.write.mode("append")
-         .parquet(catalog.table_path(root, CHECKPOINT_TABLE)))
+    # 3. snapshot entry, then checkpoint rows carrying its id (the commit)
+    catalog.commit_wave(spark, root, _LOG, run_id, wave, wave=wave_no)

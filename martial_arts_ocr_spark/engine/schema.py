@@ -117,7 +117,9 @@ EXTRACTED_SCHEMA = T.StructType([
 ])
 
 # resume.py writes the metrics/checkpoints tables through these schemas
-# (column order + types are the contract the lineage queries read back)
+# (column order + types are the contract the lineage queries read back).
+# Every checkpoint table is laid out run_id, <keys>, snapshot_id, status
+# (catalog.WaveLog reads its keys from that layout).
 METRICS_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType(), False),
     T.StructField("part_bucket", T.IntegerType(), False),
@@ -133,4 +135,21 @@ CHECKPOINT_SCHEMA = T.StructType([
     T.StructField("part_bucket", T.IntegerType(), False),
     T.StructField("snapshot_id", T.StringType(), True),
     T.StructField("status", T.StringType(), False),
+])
+
+# curate.py's pack and mixture checkpoint tables (every column nullable,
+# as they were first written from DDL strings)
+PACK_CHECKPOINT_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType(), True),
+    T.StructField("bucket", T.IntegerType(), True),
+    T.StructField("snapshot_id", T.StringType(), True),
+    T.StructField("status", T.StringType(), True),
+])
+
+MIX_CHECKPOINT_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType(), True),
+    T.StructField("epoch", T.IntegerType(), True),
+    T.StructField("bucket", T.IntegerType(), True),
+    T.StructField("snapshot_id", T.StringType(), True),
+    T.StructField("status", T.StringType(), True),
 ])

@@ -358,8 +358,7 @@ def _minhash_band_keys_udf():
 def _minhash_band_groups(spark, sf_dir):
     """Internal: candidate groups with the doc list as an array column.
     Used by the verified-pairs pipeline; NOT registered directly — the
-    driver's canonicalizer cannot sort array-typed columns (the one red
-    row in CORRECTNESS_r01)."""
+    driver's canonicalizer cannot sort array-typed columns."""
     # narrow projection + scale-adaptive spread BEFORE the sketch UDF:
     # single-row-group inputs otherwise run the whole 32-perm MinHash on
     # one core (tables.spread docstring has the measurements)

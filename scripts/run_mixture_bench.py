@@ -25,7 +25,8 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
 N_EPOCHS = 2
 
 

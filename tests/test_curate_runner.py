@@ -190,41 +190,70 @@ def test_second_run_id_refused_over_same_warehouse(spark, tmp_path):
         run_curate(spark, SF, root, "run-f")
 
 
-def test_second_run_id_refused_even_before_first_snapshot(spark, tmp_path):
+# runner -> (engine module, config pin prefix, checkpoint table constant,
+# completed-keys reader): the guard and checkpoint-reader cases below hold
+# for every resumable runner
+_RUNNERS = {
+    "run_checkpointed": ("resume", "_run_", "CHECKPOINT_TABLE",
+                         "completed_buckets"),
+    "run_curate": ("curate", "_curate_", "PACKED_CKPT_TABLE",
+                   "completed_pack_buckets"),
+    "run_curate_mixture": ("curate", "_curate_", "MIXTURE_CKPT_TABLE",
+                           "completed_mix_pack"),
+}
+
+
+def _runner_module(name):
+    import importlib
+
+    return importlib.import_module(
+        f"martial_arts_ocr_spark.engine.{_RUNNERS[name][0]}")
+
+
+@pytest.mark.parametrize("runner", sorted(_RUNNERS))
+def test_second_run_id_refused_even_before_first_snapshot(spark, tmp_path,
+                                                          runner):
     """ADVICE r6: a run that crashes between its bucket-dir moves and the
     snapshot append leaves orphan bucket dirs with NO snapshot — the guard
     must key on the config pin (written before any data) too, or a new
-    run_id silently mixes the dead run's orphans into its output."""
+    run_id silently mixes the dead run's orphans into its output. Holds
+    for every runner (the guard is catalog.claim_root)."""
     import json
     import os
 
-    from martial_arts_ocr_spark.engine.curate import run_curate
-
     root = str(tmp_path / "wh_orphan")
     os.makedirs(root)
-    with open(os.path.join(root, "_curate_dead-run.json"), "w") as f:
+    with open(os.path.join(root, f"{_RUNNERS[runner][1]}dead-run.json"),
+              "w") as f:
         json.dump({"n_buckets": 8, "ctx_len": 512, "n_merges": 1024}, f)
+    run = getattr(_runner_module(runner), runner)
+    if runner == "run_checkpointed":
+        from martial_arts_ocr_spark.fixtures.gen_pages import pages_pandas
+
+        args = (spark.createDataFrame(pages_pandas(4)),)
+    else:
+        args = (SF,)
     with pytest.raises(ValueError, match="dead-run"):
-        run_curate(spark, SF, root, "run-g", max_waves=1)
+        run(spark, *args, root, "run-g")
 
 
-def test_resume_survives_checkpoint_dir_with_no_committed_files(spark,
-                                                                tmp_path):
+@pytest.mark.parametrize("runner", sorted(_RUNNERS))
+def test_resume_survives_checkpoint_dir_with_no_committed_files(
+        spark, tmp_path, runner):
     """ADVICE r6: a crash during the very first checkpoint append leaves
-    packed_checkpoints/ holding only Spark's _temporary subdir — resume
-    must treat that as 'nothing completed', not die on schema inference."""
+    the checkpoint table holding only Spark's _temporary subdir — resume
+    must treat that as 'nothing completed', not die on schema inference.
+    Holds for every runner's checkpoint reader."""
     import os
 
-    from martial_arts_ocr_spark.engine.curate import (
-        PACKED_CKPT_TABLE,
-        completed_pack_buckets,
-    )
     from martial_arts_ocr_spark.engine import catalog
 
+    table, reader = _RUNNERS[runner][2:]
+    mod = _runner_module(runner)
     root = str(tmp_path / "wh_crash_ckpt")
-    ckpt_dir = catalog.table_path(root, PACKED_CKPT_TABLE)
+    ckpt_dir = catalog.table_path(root, getattr(mod, table))
     os.makedirs(os.path.join(ckpt_dir, "_temporary", "0"))
-    assert completed_pack_buckets(spark, root, "run-h") == set()
+    assert getattr(mod, reader)(spark, root, "run-h") == set()
 
 
 def test_epoch_stream_is_packed_sequences_permuted(spark, single_shot):

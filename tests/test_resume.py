@@ -180,3 +180,44 @@ def test_second_run_id_refused_even_before_first_checkpoint(
     # the same run_id resumes normally and completes
     assert run_checkpointed(spark, p, root, run_id="r1",
                             n_buckets=4, batch_size=2) != []
+
+
+def test_empty_bucket_commits_and_counts_done(spark, tmp_path):
+    """A bucket whose every row has null or empty html (the P1 gate drops
+    them all) still commits: its dir exists and holds no file, the table
+    reads back without it, compaction leaves it alone, and a resume
+    counts it done."""
+    import os
+    import re
+
+    from martial_arts_ocr_spark.engine.job import HOST_RE
+    from martial_arts_ocr_spark.queries.xxh64 import spark_pmod_bucket
+
+    pdf = pages_pandas(N)
+    bucket = [spark_pmod_bucket(re.match(HOST_RE, u).group(1), 4)
+              for u in pdf["url"]]
+    gated = [i for i, b in enumerate(bucket) if b == 0]
+    assert gated and len(gated) < N
+    for k, i in enumerate(gated):
+        pdf.at[i, "html"] = None if k % 2 else b""
+    pages = spark.createDataFrame(pdf)
+    root = str(tmp_path / "wh")
+
+    assert 0 in run_checkpointed(spark, pages, root, run_id="r1",
+                                 n_buckets=4, batch_size=2)
+    bdir = os.path.join(catalog.table_path(root, EXTRACTED_TABLE),
+                        "part_bucket=0")
+    assert os.path.isdir(bdir) and os.listdir(bdir) == []
+    kept = sorted(u for i, u in enumerate(pdf["url"]) if i not in gated)
+
+    def urls():
+        return sorted(r.url for r in catalog.read_table(
+            spark, root, EXTRACTED_TABLE).select("url").collect())
+
+    assert urls() == kept
+    meta = catalog.compact_table(spark, root, EXTRACTED_TABLE)
+    assert meta["buckets_rewritten"] == 0
+    assert os.listdir(bdir) == [] and urls() == kept
+    assert 0 in completed_buckets(spark, root, "r1")
+    assert run_checkpointed(spark, pages, root, run_id="r1",
+                            n_buckets=4, batch_size=2) == []
