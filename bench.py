@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract).
+"""Headline benchmark: query wall times and extraction docs/s.
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
@@ -9,10 +9,11 @@ JSON line::
      "queries": {...}, "sf": ..., "extraction": {...}}
 
 The extraction block reports the north-star number (docs/sec through the
-full kernel+mapInPandas pipeline). With ``SPARK_GRAFT_SCALING=1`` the
-two-cluster-size measurement runs live (N=1×2 vs 4N=4×2 executor JVMs via
-local-cluster, engine/scaling_bench.py); otherwise the last recorded
-numbers are included, labeled, from BASELINE.md.
+full kernel+mapInPandas pipeline). With ``SPARK_GRAFT_SCALING=1`` a
+``scaling`` block adds the two-cluster-size measurement (one N=1×2 vs
+4N=4×2 executor-JVM pair via local-cluster, engine/scaling_bench.py).
+The numbers recorded on earlier hosts are in BASELINE.md. The benchmark
+of record, with per-layer figures, is ``perfbench/`` (its README).
 """
 
 from __future__ import annotations
@@ -21,11 +22,6 @@ import json
 import os
 import sys
 import time
-from statistics import median
-
-
-def _median(xs):
-    return round(median(xs), 3)
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -208,54 +204,10 @@ def main() -> None:
 
     # two-cluster-size scaling stand-in (north rule): N vs 4N executor JVMs
     if os.environ.get("SPARK_GRAFT_SCALING", "0") == "1":
-        from martial_arts_ocr_spark.engine.scaling_bench import run_scaling
+        from martial_arts_ocr_spark.engine.scaling_bench import (
+            run_scaling_interleaved)
 
-        result["scaling"] = run_scaling()
-    else:
-        # last measured numbers (see BASELINE.md "Measured" for provenance);
-        # re-measure live with SPARK_GRAFT_SCALING=1
-        # Outlier policy is SYMMETRIC (round-3 ADVICE): the median is
-        # reported raw AND with both tails trimmed (drop min and max).
-        # Round-5 numbers of record: 7 paired rounds on the RECOVERED box
-        # (anchor 903 docs/s — the earlier degraded-window sample, median
-        # 0.879 over [0.866, 0.664, 1.072, 0.958, 0.933, 0.850, 0.879],
-        # is kept in BASELINE.md round 5 for the symmetric record).
-        # Harness and measured code are byte-identical to round 4, whose
-        # final-harness sample was
-        # [0.844, 0.927, 0.959, 0.953, 0.900, 0.871, 0.802] median 0.900.
-        # Round-6 numbers of record: INTERLEAVED lo/hi alternations
-        # (run_scaling_interleaved — the kernel-A/B rule applied to the
-        # scaling pair after sequential pairs proved host-window-
-        # confounded on a cycling host; BASELINE.md round 6 has all four
-        # samples, per-pair anchors, and the day-pooled 0.950 floor
-        # estimate). r5 quiet-box sequential sample (code-identical):
-        # median 0.926 over [0.926, 0.845, 0.939, 0.939, 0.891, 0.748,
-        # 0.935], lo 1469.4 / hi 5443.7.
-        # Round-7 numbers of record: 3 INTERLEAVED pairs, per-pair anchors
-        # 600/886/739 (cycling host), median 0.936, day-pooled floor 1.00.
-        # Round-8 numbers of record: 3 INTERLEAVED pairs, ALL at healthy
-        # anchors (951/960/869 docs/s — the cleanest anchor set yet;
-        # post-session anchor 726 shows the window closing right after).
-        # Day-pooled best-per-side floor 0.844 (best lo 1538.0, best hi
-        # 5192.6 over 9 draws/side). BASELINE.md round 8 has all samples.
-        rounds_r8 = [0.993, 0.853, 0.810]
-        result["scaling_recorded"] = {
-            "method": "local-cluster 1x2 vs 4x2 executor JVMs, 32k docs, "
-                      "uniform input files, best-of-3 per measurement, 3 "
-                      "INTERLEAVED lo/hi alternations per pair with best "
-                      "per side, 3 pairs, per-pair anchors 951/960/869 "
-                      "docs/s single-proc (all healthy — the cleanest "
-                      "sample across rounds); day-pooled best-per-side "
-                      "floor 0.844 (best lo 1538.0, best hi 5192.6 over "
-                      "9 draws/side); r7 interleaved median 0.936, r6 "
-                      "0.863; symmetric outlier reporting per round-3 "
-                      "ADVICE",
-            "lo_docs_per_sec": 1521.2,     # the median pair's best side
-            "hi_docs_per_sec": 5192.6,
-            "efficiency": _median(rounds_r8),
-            "efficiency_sym_trimmed": _median(sorted(rounds_r8)[1:-1]),
-            "paired_rounds": rounds_r8,
-        }
+        result["scaling"] = run_scaling_interleaved(alternations=1)
 
     print(json.dumps(result))
 

@@ -11,13 +11,15 @@ semantics are now real merge-table BPE (Sennrich et al. 2016 shape):
   sequence using a learned merge table, lowest-rank-first — the classic
   BPE encode loop.
 
-The merge table is TRAINED ONCE on the fixed sf0.001 fixture corpus and
-baked into ``BPE_MERGES`` (regenerate via ``scripts/regen_bpe.py``; the
-script asserts the literal matches a fresh train run). Training a
-tokenizer offline on a fixed sample and applying it fleet-wide is exactly
-the production shape — application is a map-only Arrow-batched UDF with
-per-batch word memoization (the pre-token vocabulary repeats heavily, so
-each unique word is encoded once per batch).
+The merge table is TRAINED ONCE on the deterministic synthetic corpus
+below and baked into ``bpe_merges_1k.BPE_MERGES_1K`` (regenerate via
+``scripts/regen_bpe_1k.py``; tests/test_bpe.py pins its 64-merge
+prefix). Every function here takes its table or merge count as an
+argument. Training a tokenizer offline on a fixed sample and applying it
+fleet-wide is exactly the production shape — application is a map-only
+Arrow-batched UDF with per-batch word memoization (the pre-token
+vocabulary repeats heavily, so each unique word is encoded once per
+batch).
 
 Determinism: tie-breaks in training are (count DESC, pair lexicographic
 ASC); encode merges the single lowest-rank adjacent pair per step,
@@ -30,10 +32,7 @@ from __future__ import annotations
 import re
 from collections import Counter
 
-# same pattern as queries/textops.py's stage-1 counter (single source kept
-# there would create an import cycle; the regen script asserts equality)
 PRETOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
-N_MERGES = 64
 
 
 def _merge_once(sym: tuple, a: str, b: str) -> tuple:
@@ -75,7 +74,7 @@ def train_bpe_from_freq(wfreq, n_merges: int) -> list[tuple[str, str]]:
     return merges
 
 
-def train_bpe(texts, n_merges: int = N_MERGES) -> list[tuple[str, str]]:
+def train_bpe(texts, n_merges: int) -> list[tuple[str, str]]:
     """Learn a merge table from raw texts (pre-tokenized by PRETOKEN_RE)."""
     pat = re.compile(PRETOKEN_RE)
     wfreq: Counter = Counter()
@@ -121,9 +120,9 @@ def encode_len(word: str, ranks: dict[tuple[str, str], int]) -> int:
 SEP_ID = 0
 
 
-def merged_token_ids(merges=None) -> dict[str, int]:
+def merged_token_ids(merges) -> dict[str, int]:
     table: dict[str, int] = {}
-    for i, (a, b) in enumerate(BPE_MERGES if merges is None else merges):
+    for i, (a, b) in enumerate(merges):
         table.setdefault(a + b, 1 + i)
     return table
 
@@ -173,9 +172,8 @@ def doc_token_count(text: str,
     return total
 
 
-def merge_ranks(merges=None) -> dict[tuple[str, str], int]:
-    return {pair: i for i, pair in enumerate(
-        BPE_MERGES if merges is None else merges)}
+def merge_ranks(merges) -> dict[tuple[str, str], int]:
+    return {pair: i for i, pair in enumerate(merges)}
 
 
 # --- deterministic synthetic rich corpus (round-5 VERDICT item 5) -------------
@@ -257,73 +255,3 @@ def synth_docs(n_docs: int, words_per_doc: int = 120,
         docs.append(" ".join(toks))
     return docs
 
-
-# Learned on /root/testdata/sf0.001/documents.parquet (500 docs, 31-word
-# pre-token vocabulary) — regenerate ONLY via scripts/regen_bpe.py, which
-# retrains and asserts this literal is current.
-BPE_MERGES: list[tuple[str, str]] = [
-    ('e', 'r'),
-    ('o', 'r'),
-    ('i', 'n'),
-    ('o', 'w'),
-    ('s', 't'),
-    ('l', 'u'),
-    ('a', 'r'),
-    ('p', 'ar'),
-    ('m', 'er'),
-    ('a', 't'),
-    ('a', 'n'),
-    ('c', 'an'),
-    ('s', 'can'),
-    ('c', 'o'),
-    ('co', 'lu'),
-    ('colu', 'm'),
-    ('colum', 'n'),
-    ('d', 'ow'),
-    ('in', 'dow'),
-    ('w', 'indow'),
-    ('d', 'er'),
-    ('or', 'der'),
-    ('or', 't'),
-    ('s', 'ort'),
-    ('par', 't'),
-    ('u', 'p'),
-    ('a', 'g'),
-    ('ag', 'g'),
-    ('a', 'lu'),
-    ('alu', 'e'),
-    ('v', 'alue'),
-    ('in', 'e'),
-    ('l', 'ine'),
-    ('e', 'y'),
-    ('k', 'ey'),
-    ('j', 'o'),
-    ('jo', 'in'),
-    ('g', 'e'),
-    ('mer', 'ge'),
-    ('er', 'y'),
-    ('g', 'r'),
-    ('gr', 'o'),
-    ('gro', 'up'),
-    ('q', 'u'),
-    ('qu', 'ery'),
-    ('c', 't'),
-    ('ct', 'or'),
-    ('e', 'ctor'),
-    ('v', 'ector'),
-    ('a', 's'),
-    ('as', 'h'),
-    ('h', 'ash'),
-    ('l', 'ow'),
-    ('s', 'low'),
-    ('a', 'm'),
-    ('e', 'am'),
-    ('r', 'eam'),
-    ('st', 'ream'),
-    ('f', 'i'),
-    ('fi', 'l'),
-    ('fil', 't'),
-    ('filt', 'er'),
-    ('a', 'st'),
-    ('f', 'ast'),
-]

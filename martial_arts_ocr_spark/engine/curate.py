@@ -30,9 +30,11 @@ Stages:
    exactly-once wave protocol in ``catalog.py`` (tmp write, bucket-dir
    swap, snapshot, checkpoint rows). Resume skips completed buckets;
    because packing is a pure function of a bucket's
-   documents, output bytes are identical across batch_size choices,
-   parallelism levels, and crash/resume boundaries (pinned in
-   tests/test_curate_runner.py).
+   documents, the decoded rows and the parquet data pages are identical
+   across batch_size choices, parallelism levels, and crash/resume
+   boundaries (pinned in tests/test_curate_runner.py). Raw file bytes
+   are not: parquet-mr writes each column chunk's encoding set into the
+   footer in hash order, which differs between JVM processes.
 
 4. **Epoch stage** — once packing completes, one shard/order table per
    epoch (``epoch_order/run_id=<id>/epoch=E/bucket=K``), derived by
@@ -416,9 +418,10 @@ def read_packed(spark: SparkSession, root: str) -> DataFrame:
 # deliberately": composition varies per epoch, so pack-once/shuffle-per-
 # epoch cannot apply. Resume units: the per-epoch sample snapshot, the
 # per-(epoch, bucket) pack checkpoints, the per-epoch order snapshot.
-# Output bytes are identical across batch_size choices, parallelism
-# levels, and crash/resume boundaries for the same pinned config
-# (tests/test_curate_mixture.py).
+# Decoded rows and parquet data pages are identical across batch_size
+# choices, parallelism levels, and crash/resume boundaries for the same
+# pinned config (tests/test_curate_mixture.py); file footers are not, as
+# in the pack stage above.
 
 _SAMPLED_SCHEMA = "doc_id bigint, source string, text string"
 

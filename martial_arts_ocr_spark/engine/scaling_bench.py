@@ -61,8 +61,8 @@ spark.stop()
 
 def prepare_pages(pages_path: str, n_docs: int, n_files: int = 32) -> None:
     """Write the pages table once as n_files UNIFORMLY-SIZED parquet files
-    (idempotent per path; run_scaling keys the path by n_docs so a size
-    change regenerates).
+    (idempotent per path; run_scaling_interleaved keys the path by n_docs
+    so a size change regenerates).
 
     Uniform files are the faithful small-scale emulation of a balanced
     Iceberg ``bucket(host)`` ingest layout: at real scale every bucket
@@ -86,7 +86,8 @@ def prepare_pages(pages_path: str, n_docs: int, n_files: int = 32) -> None:
     from ..fixtures.gen_pages import pages_spark
     from .session import build_session
 
-    spark = build_session(master="local[16]", app_name="scaling-prep")
+    spark = build_session(master=f"local[{len(os.sched_getaffinity(0))}]",
+                          app_name="scaling-prep")
     spark.sparkContext.setLogLevel("ERROR")
     (pages_spark(spark, n_docs, partitions=n_files)
      .write.mode("overwrite").parquet(pages_path))
@@ -110,35 +111,19 @@ def _measure(master: str, parts: int, pages_path: str,
     )
 
 
-def run_scaling(pages_path: str = "/tmp/spark_graft_scaling_pages",
-                n_docs: int = 32000) -> dict:
-    """N=1×2 vs 4N=4×2 executors; returns the BENCH 'scaling' block."""
-    pages_path = f"{pages_path}_{n_docs}"     # size change → fresh table
-    prepare_pages(pages_path, n_docs)
-    lo = _measure("local-cluster[1,2,4096]", 8, pages_path)
-    hi = _measure("local-cluster[4,2,4096]", 32, pages_path)
-    eff = (hi["docs_per_sec"] / lo["docs_per_sec"]) / 4.0
-    return {
-        "method": "local-cluster N=1x2 vs 4N=4x2 executor JVMs, uniform "
-                  "input files (emulating balanced bucket(host) ingest "
-                  "partitions; zero-shuffle scan), full warmup, best-of-3",
-        "n_executors_lo": 1, "n_executors_hi": 4, "cores_per_executor": 2,
-        "lo": lo, "hi": hi,
-        "efficiency": round(eff, 3),
-    }
-
-
 def run_scaling_interleaved(
         pages_path: str = "/tmp/spark_graft_scaling_pages",
         n_docs: int = 32000, alternations: int = 3) -> dict:
-    """The sequential pair's weakness on a host whose throughput cycles
-    on minute timescales (observed round 6: single-proc anchor swinging
-    531-963 docs/s within one hour) is that lo and hi sample DIFFERENT
-    host windows ~2 minutes apart — the ratio then measures the host
-    cycle, not the engine. Same fix as the kernel A/B rule (CLAUDE.md
-    round 2: interleave both variants): alternate lo,hi,lo,hi,... and
-    take the best per side, so both sides get a draw from the host's
-    good windows before the ratio is formed."""
+    """N=1×2 vs 4N=4×2 executors; returns the BENCH 'scaling' block.
+
+    With ``alternations=1`` this is one sequential lo/hi pair. On a host
+    whose throughput cycles on minute timescales (observed round 6:
+    single-proc anchor swinging 531-963 docs/s within one hour) such a
+    pair samples DIFFERENT host windows ~2 minutes apart, and the ratio
+    then measures the host cycle, not the engine. Same fix as the kernel
+    A/B rule (CLAUDE.md round 2: interleave both variants): alternate
+    lo,hi,lo,hi,... and take the best per side, so both sides get a draw
+    from the host's good windows before the ratio is formed."""
     pages_path = f"{pages_path}_{n_docs}"
     prepare_pages(pages_path, n_docs)
     lo_runs, hi_runs = [], []
@@ -162,4 +147,4 @@ def run_scaling_interleaved(
 
 
 if __name__ == "__main__":
-    print(json.dumps(run_scaling(), indent=1))
+    print(json.dumps(run_scaling_interleaved(alternations=1), indent=1))

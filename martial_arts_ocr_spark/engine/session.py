@@ -7,8 +7,10 @@ identically in tests/bench so measured plans are the shipped plans:
   partition counts at unknown scale;
 * Arrow batch cap: extraction UDF memory ∝ batch_rows × html size — 256
   rows/batch keeps executor-side Python workers bounded with multi-MB pages;
-* shuffle partitions default sized for local[32] testing; on a real cluster
-  AQE coalesces, so over-provisioning is the safe direction.
+* shuffle partitions default to the session's ``defaultParallelism``
+  (the cores the master grants), so a default session is sized for its
+  host; on a real cluster AQE coalesces, so over-provisioning is the safe
+  direction.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ _LAUNCHER_OWNS_MASTER = "PYSPARK_GATEWAY_PORT" in os.environ
 def build_session(
     app_name: str = "martial_arts_ocr_spark",
     master: str | None = None,
-    shuffle_partitions: int = 32,
+    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     # only call .master() when one was explicitly chosen (arg or env).
@@ -53,7 +55,6 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(ARROW_BATCH_ROWS))
@@ -74,6 +75,12 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    if shuffle_partitions is not None:
+        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    if shuffle_partitions is None:
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(spark.sparkContext.defaultParallelism))
+    return spark

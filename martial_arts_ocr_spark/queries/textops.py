@@ -224,15 +224,6 @@ ORDER BY total_tokens DESC, source ASC LIMIT 10
 """
 
 
-# BPE pre-tokenizer classes (the GPT-2 pre-tokenizer's shape: letter
-# runs / digit runs / single punctuation — without the \\p{L} unicode
-# properties so Java-regex, RE2 and Python `re` semantics are identical).
-# Stage 1 of the real BPE tokenizer in martial_arts_ocr_spark/bpe.py
-# (which keeps its own copy to avoid an import cycle; scripts/regen_bpe.py
-# asserts the two patterns stay equal).
-_BPE_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
-
-
 def _bpe_count_udf():
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
@@ -259,14 +250,14 @@ def _bpe_count_udf():
 def q_bpe_token_counts(spark, sf_dir):
     """REAL merge-table BPE token counts (round-4 VERDICT item 4 — the
     previous version counted stage-1 pre-tokens only): stage 1 is the
-    regex pre-tokenizer (_BPE_RE), stage 2 applies the baked 1,024-merge
-    table (bpe_merges_1k.BPE_MERGES_1K, round-5 VERDICT item 5 — trained
-    offline on the deterministic synthetic rich corpus, applied
-    fleet-wide: the deployment shape; the 64-merge sf0.001-trained table
-    remains for the trainer goldens). Application is one Arrow-batched
-    pandas UDF with per-batch word memoization — map-only, then a
-    partial-agg groupBy(lang); at 100 TB this is scan-shaped with the
-    merge table a task-local constant."""
+    regex pre-tokenizer (bpe.PRETOKEN_RE: letter runs / digit runs /
+    single punctuation, ASCII classes only), stage 2 applies the baked
+    1,024-merge table (bpe_merges_1k.BPE_MERGES_1K, round-5 VERDICT item
+    5 — trained offline on the deterministic synthetic rich corpus,
+    applied fleet-wide: the deployment shape). Application is one
+    Arrow-batched pandas UDF with per-batch word memoization — map-only,
+    then a partial-agg groupBy(lang); at 100 TB this is scan-shaped with
+    the merge table a task-local constant."""
     # spread() A/B: 0.62 -> 1.07 s at sf0.1 (the per-batch word memo
     # fragments: 32 small batches re-hash shared vocabulary that one
     # scan-fused batch stream memoizes once) vs 1.09 -> 0.60 s at 10x.

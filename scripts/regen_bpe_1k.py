@@ -11,7 +11,7 @@ Usage:
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from martial_arts_ocr_spark import bpe                      # noqa: E402
 

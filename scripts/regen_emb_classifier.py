@@ -7,10 +7,11 @@ Usage:
     python scripts/regen_emb_classifier.py --write    # rewrite in place
 """
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from martial_arts_ocr_spark import emb_classifier as ec  # noqa: E402
 

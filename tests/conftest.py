@@ -1,8 +1,19 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+import martial_arts_ocr_spark  # noqa: E402
+
+# test the engine of this checkout, never one imported from elsewhere
+if not os.path.abspath(martial_arts_ocr_spark.__file__).startswith(
+        os.path.join(ROOT, "martial_arts_ocr_spark") + os.sep):
+    raise pytest.UsageError(
+        f"tests: the engine was imported from "
+        f"{martial_arts_ocr_spark.__file__}, not from {ROOT}")
 
 
 @pytest.fixture(scope="session")

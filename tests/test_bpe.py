@@ -1,10 +1,11 @@
 """Real-BPE tokenizer unit coverage (round-4 VERDICT item 4): training
-determinism, encode semantics, the baked-table freshness guard, and the
-Spark UDF vs pure-Python mirror equivalence per doc."""
+determinism, encode semantics, the baked 1k table's freshness guard, and
+the Spark UDF vs pure-Python mirror equivalence per doc."""
 
 import duckdb
 
 from martial_arts_ocr_spark import bpe
+from martial_arts_ocr_spark.bpe_merges_1k import BPE_MERGES_1K
 
 
 def test_train_deterministic_and_tiebreak():
@@ -39,19 +40,8 @@ def test_merge_once_nonoverlapping():
     assert bpe._merge_once(tuple("aaaa"), "a", "a") == ("aa", "aa")
 
 
-def test_baked_table_is_current():
-    con = duckdb.connect()
-    texts = [r[0] for r in con.execute(
-        "SELECT text FROM read_parquet("
-        "'/root/testdata/sf0.001/documents.parquet') ORDER BY doc_id"
-    ).fetchall()]
-    con.close()
-    assert bpe.train_bpe(texts, bpe.N_MERGES) == bpe.BPE_MERGES
-    assert len(bpe.BPE_MERGES) == bpe.N_MERGES
-
-
 def test_doc_count_cache_equivalence():
-    ranks = bpe.merge_ranks()
+    ranks = bpe.merge_ranks(BPE_MERGES_1K)
     text = "scan column scan the fast table 42 rows!"
     assert bpe.doc_token_count(text, ranks) == \
         bpe.doc_token_count(text, ranks, cache={})
@@ -73,7 +63,6 @@ def test_spark_udf_matches_mirror_per_doc(spark):
     got = {r.doc_id: r.n for r in rows}
     con = duckdb.connect()
     # the deployed UDF applies the 1,024-merge table (round-6)
-    from martial_arts_ocr_spark.bpe_merges_1k import BPE_MERGES_1K
     ranks = bpe.merge_ranks(BPE_MERGES_1K)
     for did, text in con.execute(
         f"SELECT doc_id, text FROM read_parquet('{sf}/documents.parquet') "
@@ -111,7 +100,7 @@ def test_encode_properties_on_fuzz_corpora():
 
 def test_unknown_ranks_never_merge():
     assert bpe.encode_len("hello", {}) == 5
-    assert bpe.doc_token_count("", bpe.merge_ranks()) == 0
+    assert bpe.doc_token_count("", bpe.merge_ranks(BPE_MERGES_1K)) == 0
 
 
 # --- the 1,024-merge table (round-5 VERDICT item 5) ---------------------------
@@ -122,8 +111,6 @@ def test_1k_table_shape_and_freshness_prefix():
     evolution is identical until step k) lets a cheap 64-merge retrain
     pin the generator + the table prefix without the full ~10 s train;
     scripts/regen_bpe_1k.py verifies the full literal."""
-    from martial_arts_ocr_spark.bpe_merges_1k import BPE_MERGES_1K
-
     assert len(BPE_MERGES_1K) == bpe.N_MERGES_1K == 1024
     assert len(set(BPE_MERGES_1K)) == 1024          # no duplicate merges
     prefix = bpe.train_bpe_from_freq(bpe.synth_wfreq(), 64)
@@ -132,12 +119,10 @@ def test_1k_table_shape_and_freshness_prefix():
 
 def test_1k_table_compresses_rich_corpus_better_than_64():
     """On the rich synthetic corpus the 1k table must compress materially
-    better than the 64-merge driver-corpus table (which shares no
-    vocabulary) — the evidence the extra merges DO something."""
-    from martial_arts_ocr_spark.bpe_merges_1k import BPE_MERGES_1K
-
+    better than its own first 64 merges — the evidence the extra merges
+    DO something."""
     docs = bpe.synth_docs(5, words_per_doc=80)
-    r64 = bpe.merge_ranks()
+    r64 = bpe.merge_ranks(BPE_MERGES_1K[:64])
     r1k = bpe.merge_ranks(BPE_MERGES_1K)
     n64 = sum(bpe.doc_token_count(t, r64) for t in docs)
     n1k = sum(bpe.doc_token_count(t, r1k) for t in docs)

@@ -3,15 +3,11 @@ baked-weights freshness guard, the Spark-vs-numpy score mirror, the
 bucket split, and the keep-set integration (missing-embedding
 pass-through at sf0.1, drop-bucket veto)."""
 
-import sys
-
 import duckdb
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from martial_arts_ocr_spark import emb_classifier as ec  # noqa: E402
+from martial_arts_ocr_spark import emb_classifier as ec
 
 SF001 = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.1"

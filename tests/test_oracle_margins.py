@@ -61,9 +61,6 @@ def test_cosine_round5_margins(sf):
 def test_lsh_bucket_pair_cosine_margins(sf):
     """cosine_neardup_pairs rounds in-bucket pair cosines to 5 decimals and
     thresholds at 0.30 — audit every in-bucket pair."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from martial_arts_ocr_spark.queries.similarity import _lsh_planes
 
     ids, X = _embeddings(sf)
@@ -91,9 +88,6 @@ def test_ivf_serving_cosine_margins(sf):
     self-review fix: unrounded ccos ordering crossed the engine boundary)
     — audit every vec×centroid cosine's distance from the round-7
     boundary at each SF."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from martial_arts_ocr_spark.queries.neardup import (
         kmeans_centroids_mirror,
     )
@@ -114,9 +108,6 @@ def test_semantic_pair_cosine_margins(sf):
     cosine sitting ON a round-5 half boundary. Audit every in-top1-
     cluster pair at each SF (the >= compare itself runs on identical
     rounded doubles and is safe)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from martial_arts_ocr_spark.queries.neardup import (
         kmeans_centroids_mirror,
     )
@@ -143,9 +134,6 @@ def test_lsh_sign_margins(sf):
     """The LSH bucket bit is sign(round7(x·plane)) on both engines — audit
     that no projection sits near the round-7 boundary OR near zero (where
     the sign itself would be wobble-decided)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from martial_arts_ocr_spark.queries.similarity import _lsh_planes
 
     _, X = _embeddings(sf)
@@ -164,9 +152,6 @@ def test_mix_weight_margins(sf):
     half boundary. Audit (a) the quotient's distance from the boundary at
     all SFs, and (b) the quota floor's distance from an integer (floor of
     a near-integer double is the same knife edge)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from martial_arts_ocr_spark.queries.corpus import _MIX_QUOTA_SCALE
 
     con = duckdb.connect()
@@ -195,9 +180,6 @@ def test_mixture_quota_numerator_bound(sf):
     beyond that the two engines' floors can split by 1. Pin the bound at
     every shipped SF (the threshold sibling uses integer ``//`` on both
     engines and has no such bound)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from martial_arts_ocr_spark.queries.corpus import _MIX_QUOTA_SCALE
 
     con = duckdb.connect()
@@ -221,9 +203,6 @@ def test_emb_classifier_score_margins(sf):
     are identical doubles cross-engine so this one is not a correctness
     hazard, just an early warning that a refit landed a doc on a knife
     edge)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from martial_arts_ocr_spark import emb_classifier as ec
 
     _, X = _embeddings(sf)
