@@ -23,7 +23,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
+# the Python workers do not inherit sys.path: without this, started
+# outside the repo root, every UDF fails to import the package
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (_ROOT, os.environ.get("PYTHONPATH")) if p)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",

@@ -15,27 +15,39 @@ The emulation is deliberately thin and labeled; the resume semantics built
 on top of it — the part the north rule grades — are real and tested either
 way.
 
+Commits by rename. Every change to a warehouse is committed by an atomic
+rename, and this module holds each kind:
+
+* ``pin`` and ``append_snapshot`` write a JSON file next to its target,
+  then rename it over the target;
+* ``replace_dir`` (and ``swap_buckets`` on top of it) moves a finished
+  tmp dir over a dir; the checkpoint row or snapshot written after it is
+  the commit point, and a re-run replaces identical bytes;
+* ``staging_dir`` then ``swap_in`` commit a new generation of a whole
+  table or of one bucket dir: stage it in the table's scratch area, then
+  old -> trash, tmp -> dst, drop trash. A crash before the first rename
+  leaves the old generation; after the second, the new one. A crash
+  between them leaves dst missing and the old generation in trash:
+  ``restore_from_trash``, run by every ``read_table``, moves it back and
+  never deletes; a writer that starts restores, then empties the scratch
+  area. A reader that restores while a live writer is between its
+  renames wins the race: the writer's tmp -> dst rename then fails
+  loudly with both generations intact — a retry, never data loss.
+
 Exactly-once waves. The three resumable runners (resume.run_checkpointed,
-curate.run_curate, curate.run_curate_mixture) share one protocol, kept
-here; each runner only says how a wave's DataFrame is computed and written:
-
-1. ``claim_root``: one run per warehouse root; sweep the run's stale tmp
-   dirs;
-2. ``completed``: the keys the run's checkpoint rows mark done;
-3. ``waves``: the pending buckets, sliced into waves;
-4. the runner writes the wave, partitioned by bucket, to ``tmp_dir``;
-5. ``swap_buckets``: each bucket dir moves into place (atomic rename);
-6. ``commit_wave``: a snapshot entry, then one checkpoint row per bucket
-   carrying its id. The checkpoint append is the commit point.
-
-A wave is either visible and checkpointed, or it re-runs. A crash between
-steps 5 and 6 re-runs the wave: its swap replaces identical bytes (every
-runner is a pure function of its input) and the extra snapshot entry is
-harmless lineage noise.
+curate.run_curate, curate.run_curate_mixture) share one protocol: one run
+per root (``claim_root``) with its config ``pin``; the pending buckets
+(``completed``) in ``waves``; each wave written partitioned by bucket to
+its ``tmp_dir``, moved in by ``swap_buckets`` and committed by
+``commit_wave`` — a snapshot entry, then one checkpoint row per bucket,
+the commit point. A crash before the checkpoint append re-runs the wave
+(every runner is a pure function of its input); the extra snapshot entry
+is lineage noise.
 """
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import shutil
@@ -58,17 +70,21 @@ def read_snapshots(root: str, table: str) -> list[dict]:
         return json.load(f)
 
 
+def _write_json(path: str, obj, **kw) -> None:
+    """Write ``obj`` to ``path`` atomically: a tmp file, then a rename."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(obj, f, **kw)
+    os.replace(tmp, path)
+
+
 def append_snapshot(root: str, table: str, meta: dict) -> str:
     """Append a snapshot entry (atomic via rename) and return its id."""
     snaps = read_snapshots(root, table)
     sid = uuid.uuid4().hex[:12]
     snaps.append({"snapshot_id": sid, **meta})
-    p = _snapshot_path(root, table)
-    os.makedirs(os.path.dirname(p), exist_ok=True)
-    tmp = p + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(snaps, f, indent=1)
-    os.replace(tmp, p)
+    _write_json(_snapshot_path(root, table), snaps, indent=1)
     return sid
 
 
@@ -77,19 +93,9 @@ def table_path(root: str, table: str) -> str:
 
 
 def read_table(spark: SparkSession, root: str, table: str) -> DataFrame:
-    # A compaction crash between its two renames leaves a bucket parked at
-    # _trash_<bucket> — without recovery the bucket is INVISIBLE to every
-    # reader until the next compact_table call (round-4 ADVICE: persistent
-    # data invisibility is worse than the transient empty-bucket window).
-    # The read path runs the NARROW recovery only (restore a missing
-    # bucket from its trash; round-5 review find: the full recovery also
-    # deleted _compact_tmp_/_trash_ dirs, racing a LIVE compaction's
-    # in-flight swap up to committing a partially-deleted generation —
-    # readers must never delete compactor state). The restore itself can
-    # race the compactor's tmp→bucket rename; os.replace onto the
-    # restored non-empty dir then fails LOUDLY on the compactor side with
-    # both generations intact — a retry, never data loss.
-    _recover_compaction(root, table, restore_only=True)
+    # a swap that crashed between its renames leaves a dir parked in trash,
+    # invisible to readers until it is moved back
+    restore_from_trash(root, table)
     return spark.read.parquet(table_path(root, table))
 
 
@@ -127,6 +133,18 @@ class WaveLog(NamedTuple):
     pin_prefix: str       # config pins: <root>/<pin_prefix><run_id>.json
     tmp_prefix: str       # wave tmp dirs: <root>/<tmp_prefix><run_id>_<tag>
     holds: str            # what a foreign run's state is called when refused
+
+
+def pin(root: str, log: WaveLog, run_id: str, cfg: dict) -> dict:
+    """The config pinned for ``run_id``: ``cfg``, written atomically to
+    ``<root>/<log.pin_prefix><run_id>.json`` on the first call, and the
+    stored dict on every later call."""
+    p = os.path.join(root, f"{log.pin_prefix}{run_id}.json")
+    if os.path.exists(p):
+        with open(p, encoding="utf-8") as f:
+            return json.load(f)
+    _write_json(p, cfg)
+    return cfg
 
 
 def claim_root(root: str, log: WaveLog, run_id: str) -> None:
@@ -187,21 +205,23 @@ def tmp_dir(root: str, log: WaveLog, run_id: str, tag) -> str:
     return os.path.join(root, f"{log.tmp_prefix}{run_id}_{tag}")
 
 
+def replace_dir(src: str, dst: str) -> None:
+    """Move dir ``src`` to ``dst``, first removing what ``dst`` held."""
+    if os.path.isdir(dst):
+        shutil.rmtree(dst)
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    os.replace(src, dst)
+
+
 def swap_buckets(log: WaveLog, tmp: str, dest: str, buckets: list) -> None:
     """Move each bucket dir of a wave's tmp write into ``dest``, replacing
     what an earlier attempt at the same wave left there. A bucket with no
     rows gets an empty dir (partitionBy writes none for it), so every
     committed bucket has its dir; readers find no file in it."""
-    os.makedirs(dest, exist_ok=True)
     for b in buckets:
         src = os.path.join(tmp, f"{log.part_col}={b}")
-        dst = os.path.join(dest, f"{log.part_col}={b}")
-        if os.path.isdir(dst):
-            shutil.rmtree(dst)
-        if os.path.isdir(src):
-            os.replace(src, dst)
-        else:
-            os.makedirs(dst)
+        os.makedirs(src, exist_ok=True)
+        replace_dir(src, os.path.join(dest, f"{log.part_col}={b}"))
     shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -230,70 +250,74 @@ def _bucket_dirs(root: str, table: str) -> list[str]:
 
 
 def _scratch_dir(root: str, table: str) -> str:
-    """Per-table compaction scratch area, outside every table directory
-    (``_``-prefixed so a scan of root ignores it)."""
+    """Per-table scratch area of the generation swaps. It lies outside
+    the table dir, because a dir there named like a partition breaks
+    every reader's partition discovery; and one subdir per table makes
+    ownership structural, where a name prefix would mis-attribute
+    ``extracted_v2``'s dirs to ``extracted``."""
     return os.path.join(root, "_compact_scratch", table)
 
 
-def _recover_compaction(root: str, table: str,
-                        restore_only: bool = False) -> None:
-    """Roll a crashed compaction swap back or forward (idempotent).
-
-    For every ``_trash_<bucket>`` left by a crash: if the bucket dir
-    exists, the swap completed — drop the trash (roll forward); if not,
-    the crash hit between the two renames — restore the trash as the
-    bucket (roll back, old generation intact). Stale ``_compact_tmp_``
-    dirs are safe to drop (their content is re-derivable).
-
-    ``restore_only`` is the READ-path mode (round-5 review find): it
-    performs ONLY the missing-bucket restore — never deleting tmp or
-    trash dirs, which may belong to a live single-writer compaction that
-    a reader must not race destructively; the full cleanup runs at the
-    next compact_table entry. The restore uses a guarded os.replace: if
-    the compactor commits its new generation concurrently, exactly one
-    rename wins and the loser's failure leaves both generations intact.
-
-    Scratch dirs live OUTSIDE the table directory, under a PER-TABLE
-    subdir (``<root>/_compact_scratch/<table>/{trash,tmp}_<bucket>``) —
-    two round-5 review consequences folded in: (a) a
-    ``_trash_part_bucket=K`` dir INSIDE the table made Spark's partition
-    discovery raise CONFLICTING_PARTITION_COLUMN_NAMES for every reader
-    while it existed (the ``_`` prefix hides files, not partition-dir
-    parsing), so both the post-commit trash window and a LIVE
-    compaction's tmp dir used to make the whole table unreadable; (b) a
-    root-level string-prefix naming scheme mis-attributed scratch dirs
-    whenever one table name + '_' prefixed another's (``extracted`` vs a
-    future ``extracted_v2``) — the subdir makes ownership structural.
-    """
-    import errno
-
-    tdir = table_path(root, table)
-    if not os.path.isdir(tdir):
-        return
+def _gen_paths(root: str, table: str,
+               bucket: str | None) -> tuple[str, str, str]:
+    """(tmp, trash, dst) of a swap of the whole table dir, or of its
+    ``bucket`` dir."""
     sdir = _scratch_dir(root, table)
-    if not os.path.isdir(sdir):
-        return
-    for name in os.listdir(sdir):
-        full = os.path.join(sdir, name)
-        if name.startswith("tmp_"):
-            if not restore_only:
-                shutil.rmtree(full, ignore_errors=True)
+    if bucket is None:
+        return (os.path.join(sdir, "gen_tmp"),
+                os.path.join(sdir, "gen_trash"), table_path(root, table))
+    return (os.path.join(sdir, f"tmp_{bucket}"),
+            os.path.join(sdir, f"trash_{bucket}"),
+            os.path.join(table_path(root, table), bucket))
+
+
+def staging_dir(root: str, table: str, bucket: str | None = None) -> str:
+    """A fresh path in the scratch area for the next generation of
+    ``table`` (or of its ``bucket`` dir): write it, then ``swap_in``."""
+    tmp = _gen_paths(root, table, bucket)[0]
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(os.path.dirname(tmp), exist_ok=True)
+    return tmp
+
+
+def swap_in(root: str, table: str, bucket: str | None = None) -> None:
+    """Commit the staged generation: old -> trash, tmp -> dst, drop trash.
+    A whole-table swap carries the table's snapshot log into the new
+    generation, which would otherwise drop its history."""
+    tmp, trash, dst = _gen_paths(root, table, bucket)
+    log = _snapshot_path(root, table)
+    if bucket is None and os.path.isfile(log):
+        shutil.copy2(log, os.path.join(tmp, os.path.basename(log)))
+    shutil.rmtree(trash, ignore_errors=True)        # stale from a past crash
+    if os.path.isdir(dst):
+        os.replace(dst, trash)
+    os.replace(tmp, dst)
+    shutil.rmtree(trash, ignore_errors=True)
+
+
+def restore_from_trash(root: str, table: str) -> None:
+    """Roll back every swap of ``table`` that crashed between its two
+    renames: a parked generation whose dst is missing moves back. Never
+    deletes, so it is safe beside a live writer. Losing the rename race
+    to that writer or to another reader raises nothing; any other
+    failure (EXDEV, EACCES, EIO) does, rather than serve a table with a
+    missing dir."""
+    sdir = _scratch_dir(root, table)
+    for name in os.listdir(sdir) if os.path.isdir(sdir) else []:
+        if name == "gen_trash":
+            bucket = None
         elif name.startswith("trash_"):
-            bucket = os.path.join(tdir, name[len("trash_"):])
-            if os.path.isdir(bucket):
-                if not restore_only:
-                    shutil.rmtree(full)
-            else:
-                try:
-                    os.replace(full, bucket)
-                except OSError as e:
-                    # on the read path, suppress ONLY the expected
-                    # lost-the-race errnos; a genuine failure (EXDEV,
-                    # EACCES, EIO) must surface, not silently serve a
-                    # table missing a bucket (round-5 second-pass find)
-                    if not restore_only or e.errno not in (
-                            errno.ENOENT, errno.ENOTEMPTY, errno.EEXIST):
-                        raise
+            bucket = name[len("trash_"):]
+        else:
+            continue
+        _tmp, trash, dst = _gen_paths(root, table, bucket)
+        if os.path.isdir(dst):
+            continue
+        try:
+            os.replace(trash, dst)
+        except OSError as e:
+            if e.errno not in (errno.ENOENT, errno.ENOTEMPTY, errno.EEXIST):
+                raise
 
 
 def compact_table(spark: SparkSession, root: str, table: str,
@@ -308,26 +332,22 @@ def compact_table(spark: SparkSession, root: str, table: str,
     merge only), preserving rows exactly; a ``compact`` snapshot entry is
     appended.
 
-    Maintenance op, single writer. Crash safety is whole-DIRECTORY swaps
-    (each an atomic rename), not per-file moves (review-found: the old
-    write-new-then-delete-old file loop had a window where a crash left
-    PERMANENT duplicate rows that the next compaction baked in): per
-    bucket, the new files land in a tmp dir OUTSIDE the table directory
-    (round-5 review: an in-table scratch dir named after the partition
-    column broke every concurrent reader's partition discovery), then
-    old-dir→trash (also outside), tmp→bucket, delete trash. A crash at
-    any point leaves either the old data, the new data, or a
-    trash/bucket state that ``_recover_compaction`` (full mode on entry;
-    narrow restore-only mode on every ``read_table``) rolls back or
-    forward — never both generations visible at once. A concurrent
-    reader can transiently see an EMPTY bucket between the two renames —
-    real Iceberg makes the swap a metadata snapshot commit; this module
-    is the labeled thin stand-in (see module docstring).
+    Maintenance op, single writer. Each rewritten bucket dir is committed
+    by the generation swap (module docstring), so a crash leaves the old
+    bucket or the new one, never both: the write-new-then-delete-old file
+    loop this replaced could leave permanent duplicate rows. A concurrent
+    reader can see an EMPTY bucket between the two renames — real Iceberg
+    makes the swap a metadata snapshot commit; this module is the labeled
+    thin stand-in (see module docstring).
     """
     files_before = files_after = 0
     buckets_rewritten = 0
-    _recover_compaction(root, table)
+    # roll back a crashed swap, then drop what the crash left: stale tmp
+    # dirs, and trash of a swap whose new bucket already landed
+    restore_from_trash(root, table)
     sdir = _scratch_dir(root, table)
+    for name in os.listdir(sdir) if os.path.isdir(sdir) else []:
+        shutil.rmtree(os.path.join(sdir, name), ignore_errors=True)
     for bdir in _bucket_dirs(root, table):
         old = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
         files_before += len(old)
@@ -335,24 +355,13 @@ def compact_table(spark: SparkSession, root: str, table: str,
             files_after += len(old)
             continue
         bname = os.path.basename(bdir)
-        # scratch dirs live in the per-table scratch area (see
-        # _recover_compaction: inside the table dir, their names would
-        # poison every concurrent reader's partition discovery)
-        tmp = os.path.join(sdir, f"tmp_{bname}")
-        trash = os.path.join(sdir, f"trash_{bname}")
-        # created only when a bucket is actually rewritten (fourth-pass
-        # find: the hoisted unconditional makedirs left stray scratch
-        # dirs for typo'd table names and no-op compactions)
-        os.makedirs(sdir, exist_ok=True)
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = staging_dir(root, table, bname)
         (spark.read.parquet(bdir)
          .coalesce(target_files_per_bucket)
          .write.mode("overwrite").parquet(tmp))
-        n_new = sum(1 for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(bdir, trash)      # old generation out (atomic)
-        os.replace(tmp, bdir)        # new generation in (atomic)
-        shutil.rmtree(trash)         # point of no return: swap committed
-        files_after += n_new
+        files_after += sum(1 for f in os.listdir(tmp)
+                           if f.endswith(".parquet"))
+        swap_in(root, table, bname)
         buckets_rewritten += 1
     meta = {
         "op": "compact",

@@ -61,9 +61,7 @@ pinned — wave composition cannot reach the per-bucket pure packer.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -111,20 +109,11 @@ def _kept_shuffle_width(spark: SparkSession, n_buckets: int) -> int:
 
 
 def _pin_config(root: str, run_id: str, cfg: dict) -> None:
-    p = os.path.join(root, f"{_PACK.pin_prefix}{run_id}.json")
-    if os.path.exists(p):
-        with open(p, encoding="utf-8") as f:
-            pinned = json.load(f)
-        if pinned != cfg:
-            raise ValueError(
-                f"resume with different curation config: pinned {pinned}, "
-                f"got {cfg} — packed output would not be comparable")
-        return
-    os.makedirs(root, exist_ok=True)
-    tmp = p + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(cfg, f)
-    os.replace(tmp, p)
+    pinned = catalog.pin(root, _PACK, run_id, cfg)
+    if pinned != cfg:
+        raise ValueError(
+            f"resume with different curation config: pinned {pinned}, "
+            f"got {cfg} — packed output would not be comparable")
 
 
 def _flags_path(root: str, run_id: str) -> str:
@@ -284,10 +273,7 @@ def _commit_epoch_order(packed: DataFrame, epoch: int, n_buckets: int,
     (order.repartition(n_buckets, "bucket")
      .sortWithinPartitions("bucket", "pos_in_bucket")
      .write.mode("overwrite").partitionBy("bucket").parquet(tmp))
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    if os.path.isdir(dst):
-        shutil.rmtree(dst)                    # idempotent epoch re-run
-    os.replace(tmp, dst)
+    catalog.replace_dir(tmp, dst)             # idempotent epoch re-run
 
 
 def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,

@@ -59,6 +59,34 @@ def replace(spark: SparkSession, key: tuple, value: Any,
     _insert(full, value)
 
 
+def free_checkpoint(df: DataFrame) -> None:
+    """Best-effort release of a checkpointed DataFrame's storage: the
+    block-manager blocks of a ``localCheckpoint()``, the files of a
+    reliable ``checkpoint()`` (each step no-ops on the other's plan).
+
+    ``DataFrame.unpersist()`` clears neither: it only drops CacheManager
+    entries, and ``spark.cleaner.referenceTracking.cleanCheckpoints``
+    defaults to false. The checkpointed Dataset's analyzed plan is a
+    ``LogicalRDD`` whose ``rdd()`` is the checkpointed RDD, so
+    unpersisting it frees the blocks and its checkpoint file, if any, is
+    deleted through the JVM Hadoop FileSystem. Internal API — guarded so
+    a Spark upgrade degrades to leaking storage instead of failing the
+    query."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if not plan.getClass().getName().endswith(".LogicalRDD"):
+            return
+        rdd = plan.rdd()
+        rdd.unpersist(False)
+        opt = rdd.getCheckpointFile()
+        if opt.isDefined():
+            path = df.sparkSession._jvm.org.apache.hadoop.fs.Path(opt.get())
+            path.getFileSystem(
+                df.sparkSession._jsc.hadoopConfiguration()).delete(path, True)
+    except Exception:
+        pass
+
+
 def describe(spark: SparkSession) -> dict[tuple, StorageLevel | None]:
     """``{(owner, *parts): StorageLevel or None}`` for the live entries of
     this application; the level is set only for persisted DataFrames."""

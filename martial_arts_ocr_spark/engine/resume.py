@@ -89,27 +89,15 @@ def _pin_run_config(root: str, run_id: str, hot_hosts: list[str] | None,
     (fourth-pass find), so sign_snapshots is pinned too. The first run's
     config is authoritative for its run_id.
     """
-    import json
-    import os
-
-    path = os.path.join(root, f"_run_{run_id}.json")
-    if os.path.exists(path):
-        with open(path, encoding="utf-8") as f:
-            cfg = json.load(f)
-        # pre-round-5 pin files lack the newer fields; fall back to the
-        # caller's values (no signed run can predate the fields — signing
-        # itself is round-5)
-        return (cfg["hot_hosts"], cfg["n_buckets"],
-                cfg.get("batch_size", batch_size),
-                cfg.get("sign_snapshots", sign_snapshots))
-    os.makedirs(root, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"hot_hosts": hot_hosts, "n_buckets": n_buckets,
-                   "batch_size": batch_size,
-                   "sign_snapshots": sign_snapshots}, f)
-    os.replace(tmp, path)
-    return hot_hosts, n_buckets, batch_size, sign_snapshots
+    cfg = catalog.pin(root, _LOG, run_id, {
+        "hot_hosts": hot_hosts, "n_buckets": n_buckets,
+        "batch_size": batch_size, "sign_snapshots": sign_snapshots})
+    # pre-round-5 pin files lack the newer fields; fall back to the
+    # caller's values (no signed run can predate the fields — signing
+    # itself is round-5)
+    return (cfg["hot_hosts"], cfg["n_buckets"],
+            cfg.get("batch_size", batch_size),
+            cfg.get("sign_snapshots", sign_snapshots))
 
 
 def run_checkpointed(

@@ -44,7 +44,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -65,12 +64,11 @@ SIGNATURES_TABLE = "signatures"
 #     tail-sized distinct.
 # Each generation directory carries its coverage manifest INSIDE the
 # swapped dir (a ``_``-prefixed file — hidden from Spark's reader, and a
-# FILE, not a dir, so partition discovery is untouched), so an atomic
-# dir rename commits data+coverage together; the snapshot-log entry is
-# informational. Crash safety is the compact_table whole-directory-swap
-# discipline: tmp outside the table dir → old dir to trash → tmp in →
-# delete trash, with the read path restoring a missing dir from trash
-# under the same guarded-os.replace contract as catalog._recover.
+# FILE, not a dir, so partition discovery is untouched), so one rename
+# commits data+coverage together; the snapshot-log entry is
+# informational. The swap and its crash recovery are catalog's
+# whole-table generation swap (``catalog.staging_dir``/``swap_in``,
+# ``catalog.restore_from_trash``).
 _COMPACTED_TABLE = "signatures_compacted"
 _INDEX_TABLE = "signatures_index"
 _MANIFEST = "_compaction_manifest.json"
@@ -98,7 +96,7 @@ def band_keys(docs: DataFrame, key_col: str = "doc_id",
 def appended_snapshots(root: str) -> set[str]:
     # the raw dir (which holds the snapshot log) may be parked in trash by
     # a compactor crash — restore before reading the log
-    _restore_from_trash(root, SIGNATURES_TABLE)
+    catalog.restore_from_trash(root, SIGNATURES_TABLE)
     return {
         s["snapshot"] for s in catalog.read_snapshots(root, SIGNATURES_TABLE)
         if s.get("op") == "append_signatures"
@@ -124,43 +122,10 @@ def append_snapshot_signatures(
     return True
 
 
-def _restore_from_trash(root: str, table: str) -> None:
-    """Narrow read-path recovery for the whole-table swap: a compactor
-    crash between old-dir→trash and tmp→dir leaves the table dir missing
-    with its last generation parked in trash — restore it. Guarded
-    os.replace (losing a race to a concurrent restorer or to the live
-    compactor's commit suppresses ENOENT/ENOTEMPTY; the compactor side
-    then fails loudly with both generations intact — a retry, never
-    loss). Never deletes compactor state (the catalog read-path rule)."""
-    import errno
-
-    path = catalog.table_path(root, table)
-    trash = os.path.join(catalog._scratch_dir(root, table), "gen_trash")
-    if os.path.isdir(path) or not os.path.isdir(trash):
-        return
-    try:
-        os.replace(trash, path)
-    except OSError as e:
-        if e.errno not in (errno.ENOENT, errno.ENOTEMPTY, errno.EEXIST):
-            raise
-
-
-def _swap_table_dir(root: str, table: str, tmp: str) -> None:
-    """Commit a new whole-table generation: old→trash, tmp→dir, rm trash
-    (each rename atomic; _restore_from_trash covers the middle window)."""
-    path = catalog.table_path(root, table)
-    trash = os.path.join(catalog._scratch_dir(root, table), "gen_trash")
-    shutil.rmtree(trash, ignore_errors=True)     # stale from a past crash
-    if os.path.isdir(path):
-        os.replace(path, trash)
-    os.replace(tmp, path)
-    shutil.rmtree(trash, ignore_errors=True)
-
-
 def _covered_snapshots(root: str, table: str) -> set[str] | None:
     """Coverage manifest of a compacted generation; None if the table has
     no committed generation."""
-    _restore_from_trash(root, table)
+    catalog.restore_from_trash(root, table)
     mpath = os.path.join(catalog.table_path(root, table), _MANIFEST)
     if not os.path.isfile(mpath):
         return None
@@ -228,50 +193,35 @@ def compact_signatures(spark: SparkSession, root: str) -> dict:
                 "snapshots": []}
     snaps = sorted(appended_snapshots(root))
     manifest = json.dumps({"snapshots": snaps})
-
-    def _write_gen(df: DataFrame, table: str) -> str:
-        sdir = catalog._scratch_dir(root, table)
-        tmp = os.path.join(sdir, "gen_tmp")
-        os.makedirs(sdir, exist_ok=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.parquet(tmp)
-        with open(os.path.join(tmp, _MANIFEST), "w", encoding="utf-8") as f:
-            f.write(manifest)
-        return tmp
-
     store = store.persist()
     try:
         n_rows = store.count()
         compacted = (store.repartition("band")
                      .sortWithinPartitions("band", "band_key"))
-        tmp_c = _write_gen(compacted, _COMPACTED_TABLE)
         index = (store.select("band", "band_key").distinct()
                  .repartition("band").sortWithinPartitions("band",
                                                            "band_key"))
-        tmp_i = _write_gen(index, _INDEX_TABLE)
-        _swap_table_dir(root, _COMPACTED_TABLE, tmp_c)
-        _swap_table_dir(root, _INDEX_TABLE, tmp_i)
+        # both generations are staged before either swaps: the persisted
+        # store may recompute from the old compacted generation
+        for table, df in ((_COMPACTED_TABLE, compacted),
+                          (_INDEX_TABLE, index)):
+            tmp = catalog.staging_dir(root, table)
+            df.write.parquet(tmp)
+            with open(os.path.join(tmp, _MANIFEST), "w",
+                      encoding="utf-8") as f:
+                f.write(manifest)
+        catalog.swap_in(root, _COMPACTED_TABLE)
+        catalog.swap_in(root, _INDEX_TABLE)
     finally:
         store.unpersist()
     # shrink raw to the (usually empty) uncovered tail — schema-preserving
     # (the filter keeps raw's schema in the part files) so the next append
-    # and every tail read keep working
+    # and every tail read keep working; the swap keeps raw's snapshot log
     if catalog.table_exists(root, SIGNATURES_TABLE):
         raw = catalog.read_table(spark, root, SIGNATURES_TABLE)
-        tail = raw.where(~F.col("snapshot").isin(snaps))
-        sdir = catalog._scratch_dir(root, SIGNATURES_TABLE)
-        tmp_r = os.path.join(sdir, "gen_tmp")
-        os.makedirs(sdir, exist_ok=True)
-        shutil.rmtree(tmp_r, ignore_errors=True)
-        tail.write.parquet(tmp_r)
-        # the snapshot LOG lives inside the raw table dir
-        # (catalog._snapshot_path) — carry it into the new generation or
-        # the swap would erase exactly-once history (test-caught)
-        log = catalog._snapshot_path(root, SIGNATURES_TABLE)
-        if os.path.isfile(log):
-            shutil.copy2(log, os.path.join(
-                tmp_r, os.path.basename(log)))
-        _swap_table_dir(root, SIGNATURES_TABLE, tmp_r)
+        (raw.where(~F.col("snapshot").isin(snaps))
+         .write.parquet(catalog.staging_dir(root, SIGNATURES_TABLE)))
+        catalog.swap_in(root, SIGNATURES_TABLE)
     n_pairs = catalog.read_table(spark, root, _INDEX_TABLE).count()
     meta = {"op": "compact_signatures", "n_rows": n_rows,
             "n_pairs": n_pairs, "snapshots": snaps}

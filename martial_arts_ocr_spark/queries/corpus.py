@@ -1855,10 +1855,11 @@ def mixture_grid_rows(d, epoch_docs: int = _MIX_EPOCH_DOCS) -> list[tuple]:
     collect). ALL-INTEGER arithmetic (ADVICE r7 item 1): quota =
     sqrt_micro·SCALE // total and n_target = quota·epoch_docs // SCALE
     use floor DIVISION on both engines (Python ``//`` here, DuckDB ``//``
-    in the oracle), so parity holds at ANY token mass — unlike the
-    window form's identical-operand double division, which is exact only
-    while sqrt_micro·SCALE < 2^53 (pinned for the shipped SFs by
-    test_oracle_margins)."""
+    in the oracle), so parity holds while sqrt_micro·SCALE fits the
+    oracle's BIGINT (< 2^63: a source token mass below ~8.5·10^15; past
+    it DuckDB raises) — unlike the window form's identical-operand double
+    division, which is exact only while sqrt_micro·SCALE < 2^53 (pinned
+    for the shipped SFs by test_oracle_margins)."""
     tokens = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
     per_src = (
         d.groupBy("source")
@@ -2004,18 +2005,15 @@ def q_mixture_epoch_stream_threshold(spark, sf_dir):
     )
 
 
-def _oracle_mixture_threshold() -> str:
-    from .textops import baked_bpe_count_values
-
-    sf, vals = baked_bpe_count_values()
-    epochs = ", ".join(str(e) for e in range(_N_EPOCHS))
-    return f"""
--- per-doc BPE token counts mirrored from: {sf}/documents.parquet
-WITH counts(doc_id, c) AS (VALUES {vals}),
+# The DuckDB mirror of mixture_grid_rows: CTEs s, q and tt (tt is the
+# (source, n_docs, quota, n_target) grid) over a ``documents`` table.
+_ORACLE_THRESH_GRID = f"""
 s AS (
   SELECT source,
          CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len(regexp_split_to_array(trim(text), '\\s+')))
+         -- coalesce: an all-NULL-text source has zero mass, as in Spark
+         CAST(coalesce(sum(len(regexp_split_to_array(trim(text),
+                                                     '\\s+'))), 0)
               AS BIGINT) AS total_tokens
   FROM documents GROUP BY source
 ),
@@ -2036,7 +2034,17 @@ tt AS (
               * {_MIX_EPOCH_DOCS} // {_MIX_QUOTA_SCALE} AS BIGINT)
            AS n_target
   FROM q
-),
+)"""
+
+
+def _oracle_mixture_threshold() -> str:
+    from .textops import baked_bpe_count_values
+
+    sf, vals = baked_bpe_count_values()
+    epochs = ", ".join(str(e) for e in range(_N_EPOCHS))
+    return f"""
+-- per-doc BPE token counts mirrored from: {sf}/documents.parquet
+WITH counts(doc_id, c) AS (VALUES {vals}),{_ORACLE_THRESH_GRID},
 e AS (SELECT unnest([{epochs}]) AS epoch),
 samp AS (
   SELECT e.epoch, d.source, d.doc_id

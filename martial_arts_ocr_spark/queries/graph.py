@@ -51,69 +51,6 @@ _MAX_ROUNDS = 50     # safety cap only: pointer jumping converges in
                      # round with zero changed labels
 
 
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Best-effort release of a localCheckpoint()ed DataFrame's blocks.
-
-    ``DataFrame.unpersist()`` only clears CacheManager entries, not the
-    checkpointed RDD (verified empirically on pyspark 4.1: blocks survive
-    both unpersist and driver GC).  The checkpointed Dataset's analyzed
-    plan is a ``LogicalRDD`` whose ``rdd()`` accessor IS the persisted
-    RDD, so unpersisting that frees the block-manager storage.  Internal
-    API — guarded so a Spark upgrade degrades to the old (leaky but
-    correct) behavior instead of failing the query.
-    """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith(".LogicalRDD"):
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-def _free_reliable_checkpoint(df: DataFrame) -> None:
-    """Best-effort deletion of a reliable checkpoint()'s FILES (round-5
-    review find: the reliable path wrote one file set per materialization
-    per round with nothing deleting them —
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` defaults false,
-    so a long job's checkpoint dir grew O(rounds·|labels|)). Resolves the
-    checkpointed RDD's file path through the analyzed LogicalRDD and
-    removes it via the JVM Hadoop FileSystem; guarded like its local
-    sibling."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if not plan.getClass().getName().endswith(".LogicalRDD"):
-            return
-        rdd = plan.rdd()
-        opt = rdd.getCheckpointFile()
-        if not opt.isDefined():
-            return
-        jvm = df.sparkSession._jvm
-        jsc = df.sparkSession._jsc
-        path = jvm.org.apache.hadoop.fs.Path(opt.get())
-        fs = path.getFileSystem(jsc.hadoopConfiguration())
-        fs.delete(path, True)
-    except Exception:
-        pass
-
-
-def _free_checkpoint(df: DataFrame, reliable: bool) -> None:
-    (_free_reliable_checkpoint if reliable else _free_local_checkpoint)(df)
-
-
-def free_labels(df: DataFrame) -> None:
-    """Public release hook for a ``connected_components`` RESULT: the
-    terminal round's labels stay checkpointed (block-manager blocks in
-    local mode, checkpoint FILES in ``reliable=True`` mode) while the
-    caller consumes the lazy DataFrame, so they are CALLER-OWNED — a
-    long-running session that invokes connected_components repeatedly
-    must call this after fully consuming each result, or accumulate one
-    storage set per invocation. Tries both modes (each helper no-ops on
-    the other's plan shape), so callers need not remember which mode
-    produced the frame."""
-    _free_local_checkpoint(df)
-    _free_reliable_checkpoint(df)
-
-
 def connected_components(edges: DataFrame, max_rounds: int = _MAX_ROUNDS,
                          reliable: bool = False) -> DataFrame:
     """(src, dst) undirected edge list -> (doc, lbl) min-label components.
@@ -127,9 +64,9 @@ def connected_components(edges: DataFrame, max_rounds: int = _MAX_ROUNDS,
 
     Intermediate rounds' checkpoint storage is freed here, but the
     RETURNED labels' storage (blocks, or checkpoint files in reliable
-    mode) is caller-owned — call ``free_labels(result)`` after consuming
-    it; repeated invocations in one session otherwise accumulate one
-    terminal set per call.
+    mode) is caller-owned — call ``memo.free_checkpoint(result)`` after
+    consuming it; repeated invocations in one session otherwise
+    accumulate one terminal set per call.
     """
     def _mat(df: DataFrame) -> DataFrame:
         return df.checkpoint() if reliable else df.localCheckpoint()
@@ -181,8 +118,8 @@ def connected_components(edges: DataFrame, max_rounds: int = _MAX_ROUNDS,
         # and of the previous round's labels — free their checkpoint
         # storage (block-manager blocks, or checkpoint FILES in reliable
         # mode — the round-5 leak fix)
-        _free_checkpoint(prop, reliable)
-        _free_checkpoint(labels, reliable)
+        memo.free_checkpoint(prop)
+        memo.free_checkpoint(labels)
         labels = jumped
         if changed == 0:
             break
@@ -231,7 +168,7 @@ def slot_scoped_component_labels(spark, slot: str, pairs: DataFrame,
         )
     )
     labels = connected_components(edges)
-    memo.replace(spark, ("graph", slot), labels, free_labels)
+    memo.replace(spark, ("graph", slot), labels, memo.free_checkpoint)
     return labels.select(
         F.col("doc").cast("bigint").alias("doc_id"),
         F.col("lbl").cast("bigint").alias("cluster_id"),

@@ -235,8 +235,6 @@ def kmeans_init_pp(emb, k=_N_CENTROIDS):
     bit-identical inputs. Each step is one map-only distance update
     against the ONE new broadcast center plus one TakeOrdered(1) — k-1
     small jobs, plan size flat in k."""
-    from .graph import _free_local_checkpoint
-
     state0 = emb.select(
         "vec_id", "embedding", _jitter_expr().alias("jit")
     ).localCheckpoint()      # materialize scan+jitter ONCE: both the
@@ -249,7 +247,7 @@ def kmeans_init_pp(emb, k=_N_CENTROIDS):
         "vec_id", "embedding", "jit",
         _d2_expr(F.col("embedding"), cvec).alias("best"),
     ).localCheckpoint()
-    _free_local_checkpoint(state0)
+    memo.free_checkpoint(state0)
     for _ in range(k - 1):
         nxt = (
             state.select(
@@ -269,9 +267,9 @@ def kmeans_init_pp(emb, k=_N_CENTROIDS):
             F.least(F.col("best"),
                     _d2_expr(F.col("embedding"), cvec)).alias("best"),
         ).localCheckpoint()
-        _free_local_checkpoint(state)
+        memo.free_checkpoint(state)
         state = new_state
-    _free_local_checkpoint(state)
+    memo.free_checkpoint(state)
     return chosen
 
 

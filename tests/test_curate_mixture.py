@@ -151,6 +151,26 @@ def test_mixture_grid_degenerate_corpora(spark):
     assert _grid_from_per_src([("a", 1, 0), ("b", 1, 0)],
                               epoch_docs=10) == []
 
+    # one all-NULL source beside a live one: zero quota in Spark, and the
+    # threshold oracle's quota CTEs in DuckDB agree (they used to give NULL)
+    import duckdb
+
+    from martial_arts_ocr_spark.queries.corpus import _ORACLE_THRESH_GRID
+
+    rows = [(1, "a", "x y"), (2, "a", "z"), (3, "b", None)]
+    spark_grid = mixture_grid_rows(spark.createDataFrame(
+        rows, "doc_id bigint, source string, text string"))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents "
+                "(doc_id BIGINT, source VARCHAR, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
+    oracle_grid = con.execute(
+        f"WITH {_ORACLE_THRESH_GRID} "
+        "SELECT source, n_docs, quota, n_target FROM tt "
+        "ORDER BY source").fetchall()
+    assert spark_grid[1][2:] == (0, 0)
+    assert oracle_grid == spark_grid
+
     # pure half: the BIGINT-overflow refusal for a 2^31-doc source
     with pytest.raises(ValueError, match="2\\^31"):
         _grid_from_per_src([("big", 2**31, 10**6)], epoch_docs=10)

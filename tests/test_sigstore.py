@@ -392,7 +392,8 @@ def test_crash_between_swap_renames_restores_on_read(spark, tmp_path):
                                         "s1")
     sigstore.compact_signatures(spark, root)
     before = _sorted_rows(sigstore.read_store(spark, root))
-    for table in (sigstore._COMPACTED_TABLE, sigstore._INDEX_TABLE):
+    for table in (sigstore._COMPACTED_TABLE, sigstore._INDEX_TABLE,
+                  sigstore.SIGNATURES_TABLE):
         path = catalog.table_path(root, table)
         trash = os.path.join(catalog._scratch_dir(root, table), "gen_trash")
         os.makedirs(os.path.dirname(trash), exist_ok=True)
