@@ -155,13 +155,15 @@ def doc_token_ids(text: str,
     return out
 
 
-def doc_token_count(text: str,
+def doc_token_count(text: str | None,
                     ranks: dict[tuple[str, str], int],
                     cache: dict[str, int] | None = None) -> int:
-    """BPE token count of a document = sum over its pre-tokens."""
+    """BPE token count of a document = sum over its pre-tokens; a NULL
+    text has none (the Spark UDF and the oracles' baked counts both call
+    this, so they agree on it)."""
     pat = re.compile(PRETOKEN_RE)
     total = 0
-    for w in pat.findall(text):
+    for w in pat.findall(text or ""):
         if cache is not None and w in cache:
             total += cache[w]
             continue

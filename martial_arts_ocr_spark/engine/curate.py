@@ -605,17 +605,8 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
     }
     # counts come from the sample snapshots (written once at commit time)
     # — a resume/status poll with nothing to do launches NO Spark jobs
-    # here (r8 review); the table-scan fallback covers pre-r8 snapshots
+    # here (r8 review)
     for s in catalog.run_snapshots(root, MIXTURE_DOCS_TABLE, run_id,
                                    "mix_sample"):
-        e = int(s["epoch"])
-        if "counts" in s:
-            summary["sampled"][e] = dict(s["counts"])
-        else:
-            rows = (read_mixture_sampled(spark, root, run_id, e,
-                                         list(range(n_buckets)))
-                    .groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-                    .collect())
-            summary["sampled"][e] = {r["source"]: int(r["n"])
-                                     for r in rows}
+        summary["sampled"][int(s["epoch"])] = dict(s["counts"])
     return summary

@@ -48,6 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import catalog
+from ..queries.similarity import band_keys
 
 SIGNATURES_TABLE = "signatures"
 
@@ -73,24 +74,6 @@ _COMPACTED_TABLE = "signatures_compacted"
 _INDEX_TABLE = "signatures_index"
 _MANIFEST = "_compaction_manifest.json"
 _FULL_KEY = ["snapshot", "doc_key", "band", "band_key"]
-
-
-def band_keys(docs: DataFrame, key_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    """(key_col, band, band_key) — one row per document per band.
-
-    The band-key UDF is ``asNondeterministic`` (see
-    ``similarity._minhash_band_keys_udf``), and so is this projection:
-    Catalyst will not push a filter on its output below the explode.
-    That is on purpose, since it stops the optimizer from evaluating the
-    sketch twice; filter the input documents instead."""
-    from ..queries.similarity import _minhash_band_keys_udf
-
-    mhb = _minhash_band_keys_udf()
-    return docs.select(
-        F.col(key_col),
-        F.posexplode(mhb(F.col(text_col))).alias("band", "band_key"),
-    )
 
 
 def appended_snapshots(root: str) -> set[str]:

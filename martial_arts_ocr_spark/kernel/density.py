@@ -89,25 +89,6 @@ def _boiler_phrase(text: str, lowered: str) -> bool:
     )
 
 
-def block_features(b: Block) -> dict:
-    """Vectorizable per-block features (analogue of text_like_metrics)."""
-    text = b.text
-    lowered = text.lower()
-    n, n_words, n_stop, word_chars, n_punct, n_ja = _raw_features(
-        text, lowered, text.isascii()
-    )
-    return {
-        "n_chars": n,
-        "n_words": n_words,
-        "link_density": b.link_density,
-        "stopword_ratio": (n_stop / n_words) if n_words else 0.0,
-        "punct_ratio": (n_punct / n) if n else 0.0,
-        "ja_ratio": (n_ja / n) if n else 0.0,
-        "avg_word_len": (word_chars / n_words) if n_words else 0.0,
-        "boiler_phrase": _boiler_phrase(text, lowered),
-    }
-
-
 def score_block(b: Block) -> Verdict:
     """Accept/reject one block by density features.
 

@@ -163,13 +163,6 @@ class MacronCandidate:
     ambiguous: bool = False
 
 
-def _word_rx(phrase: str) -> re.Pattern:
-    return re.compile(
-        r"(?<![A-Za-zÀ-ž])" + re.escape(phrase) + r"(?![A-Za-zÀ-ž])",
-        re.IGNORECASE,
-    )
-
-
 # one combined alternation (longest variants first so e.g. "Daito ryu"
 # wins over a hypothetical shorter prefix); variant→canonicals resolved by
 # case-folded lookup — a variant may map to 2+ canonicals, which is what

@@ -31,7 +31,9 @@ import pandas as pd    # module-level: pandas_udf resolves stringified
 from pyspark.sql import functions as F
 
 from martial_arts_ocr_spark.engine import memo
-from martial_arts_ocr_spark.queries.tables import base_table, spread_table
+from martial_arts_ocr_spark.queries.similarity import dot
+from martial_arts_ocr_spark.queries.tables import (base_table, oracle_sf_rows,
+                                                   spread_table)
 
 _GOPHER_MIN_WORDS = 50
 _GOPHER_MAX_WORDS = 100_000
@@ -44,10 +46,6 @@ _GOPHER_MIN_STOP_HITS = 2
 _SPLIT_TRAIN_PERMILLE = 900    # 90/10 split on md5(doc_id || salt) % 1000
 _SPLIT_SALT = "split-v1"
 _CONTAM_K = 8                  # same fixed-k shingles as repeated_spans
-
-
-def _docs(spark, sf_dir):
-    return base_table(spark, sf_dir, "documents")
 
 
 def gopher_flag_exprs(text=None) -> dict:
@@ -107,7 +105,7 @@ def gopher_pass_sql(ts: str = "ts", non_ws: str = "non_ws") -> str:
 
 
 def q_gopher_quality_flags(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     flags = gopher_flag_exprs()
     return (
         d.select(
@@ -143,7 +141,7 @@ def q_train_val_split(spark, sf_dir):
     md5(doc_id || salt) as an integer, mod 1000 — engine-agnostic (both
     sides parse the same hex substring) and rerun-stable, unlike
     rand(seed) whose stream depends on partitioning."""
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     key = F.concat(F.col("doc_id").cast("string"), F.lit(_SPLIT_SALT))
     bucket = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint") \
         % 1000
@@ -591,7 +589,7 @@ def _lm_model(spark, sf_dir):
     vocab-sized collect, the k-means-means collect pattern); memoized per
     (session, sf_dir) so repeated invocations don't retrain."""
     def train():
-        d = _docs(spark, sf_dir).where(
+        d = base_table(spark, sf_dir, "documents").where(
             (F.col("doc_id") < _LM_TRAIN_DOCS) & (F.length("text") >= 2))
         bgs = d.select(F.explode(F.expr(
             "transform(sequence(1, length(text) - 1),"
@@ -641,7 +639,7 @@ def q_lm_perplexity_buckets(spark, sf_dir):
     Reference analogue for the score-text-quality shape:
     /root/reference/utils/text/text_utils.py:619-645 (confidence_score_text)."""
     costs, unk = _lm_model(spark, sf_dir)
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     score = _lm_score_udf(costs, unk)
     n_bg = F.greatest(F.length("text") - 1, F.lit(0)).cast("bigint")
     out = d.select(
@@ -664,19 +662,11 @@ def _oracle_lm_perplexity() -> str:
     """Independent DuckDB re-scoring against the baked integer model:
     counts come from a pure-Python loop over the training sample (vs
     Spark's explode/groupBy), scoring from unnest + LEFT JOIN (vs the
-    numpy matrix). Only `lm_cost_table` is shared. Same
-    SPARK_GRAFT_ORACLE_SF env coupling as neardup._oracle_ivf."""
-    import os
-
-    import duckdb
-
-    sf = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT text FROM read_parquet('{sf}/documents.parquet') "
-        f"WHERE doc_id < {_LM_TRAIN_DOCS} ORDER BY doc_id"
-    ).fetchall()
-    con.close()
+    numpy matrix). Only `lm_cost_table` is shared. The training sample
+    is read from the oracle SF by ``tables.oracle_sf_rows``."""
+    sf, rows = oracle_sf_rows(
+        "documents", "text",
+        f"WHERE doc_id < {_LM_TRAIN_DOCS} ORDER BY doc_id")
     counts: dict[str, int] = {}
     for (t,) in rows:
         for i in range(len(t) - 1):
@@ -736,7 +726,7 @@ def _lm_models_by_lang(spark, sf_dir):
     vocab-sized × n_langs (control flow, not data). Degenerate slices
     (empty cost table) are dropped here so the caller's fallback applies."""
     def train():
-        d = _docs(spark, sf_dir).where(
+        d = base_table(spark, sf_dir, "documents").where(
             (F.col("doc_id") < _LM_TRAIN_DOCS) & (F.length("text") >= 2))
         bgs = d.select("lang", F.explode(F.expr(
             "transform(sequence(1, length(text) - 1),"
@@ -802,7 +792,7 @@ def q_lm_perplexity_by_lang(spark, sf_dir):
     100 TB."""
     models = _lm_models_by_lang(spark, sf_dir)
     gcosts, gunk = _lm_model(spark, sf_dir)
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     score = _lm_score_by_lang_udf(models, gcosts, gunk)
     n_bg = F.greatest(F.length("text") - 1, F.lit(0)).cast("bigint")
     out = d.select(
@@ -826,21 +816,13 @@ def _oracle_lm_by_lang() -> str:
     lang from a pure-Python loop, effective model per document-lang
     resolved driver-side (per-lang if trained and non-degenerate, else the
     global mixed model), scoring via unnest + LEFT JOIN on (lang, bg) with
-    a per-lang unk table. Only `lm_cost_table` is shared."""
-    import os
-
-    import duckdb
-
-    sf = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    train = con.execute(
-        f"SELECT lang, text FROM read_parquet('{sf}/documents.parquet') "
-        f"WHERE doc_id < {_LM_TRAIN_DOCS} ORDER BY lang, text"
-    ).fetchall()
-    doc_langs = [r[0] for r in con.execute(
-        f"SELECT DISTINCT lang FROM read_parquet('{sf}/documents.parquet') "
-        f"ORDER BY lang").fetchall()]
-    con.close()
+    a per-lang unk table. Only `lm_cost_table` is shared. Both reads go
+    to the oracle SF through ``tables.oracle_sf_rows``."""
+    sf, train = oracle_sf_rows(
+        "documents", "lang, text",
+        f"WHERE doc_id < {_LM_TRAIN_DOCS} ORDER BY lang, text")
+    doc_langs = [r[0] for r in oracle_sf_rows(
+        "documents", "DISTINCT lang", "ORDER BY lang")[1]]
     gcounts: dict[str, int] = {}
     by_lang: dict[str, dict[str, int]] = {}
     for lg, t in train:
@@ -910,7 +892,7 @@ def q_source_quota_sample(spark, sf_dir):
     partition order."""
     from pyspark.sql import Window
 
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     rank_key = F.md5(F.concat(F.col("doc_id").cast("string"),
                               F.lit(_QUOTA_SALT)))
     w = Window.partitionBy("source").orderBy(rank_key, "doc_id")
@@ -939,18 +921,13 @@ ORDER BY source, rn
 def _emb_score_col():
     """round(bias + w . embedding, 6) as pure JVM column algebra: the
     baked weights ride in the plan as an array literal, the dot product
-    is a left-to-right aggregate fold in double (the proven cross-engine
-    pairing with DuckDB list_dot_product — queries/similarity.py:60).
-    No UDF, no shuffle; fused into whatever scan hosts it."""
+    is ``similarity.dot`` (the double fold DuckDB's list_dot_product
+    mirrors). No UDF, no shuffle; fused into whatever scan hosts it."""
     from ..emb_classifier import BIAS, SCORE_DECIMALS, WEIGHTS
 
     w = F.array(*[F.lit(float(x)) for x in WEIGHTS])
-    dot = F.aggregate(
-        F.zip_with(F.col("embedding"), w, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.round(dot + F.lit(float(BIAS)), SCORE_DECIMALS)
+    return F.round(dot(F.col("embedding"), w) + F.lit(float(BIAS)),
+                   SCORE_DECIMALS)
 
 
 def _emb_bucket_col(score):
@@ -1100,7 +1077,7 @@ def q_corpus_keep_set(spark, sf_dir, _labels_slot="keep_set"):
     from .graph import neardup_cluster_labels
     from .neardup import semantic_cluster_labels
 
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     gopher_pass = gopher_pass_expr()     # the shared gate definition
     costs, unk = _lm_model(spark, sf_dir)
     score = _lm_score_udf(costs, unk)
@@ -1254,7 +1231,7 @@ def q_curation_funnel(spark, sf_dir):
     funnel never frees the storage under a live keep-set frame (round-7
     review; lifetime contract in graph.neardup_cluster_labels)."""
     flags = q_corpus_keep_set(spark, sf_dir, _labels_slot="funnel")
-    src = _docs(spark, sf_dir).select("doc_id", "source")
+    src = base_table(spark, sf_dir, "documents").select("doc_id", "source")
 
     def n(col):
         return F.sum(F.col(col).cast("bigint")).alias("n_" + col)
@@ -1334,7 +1311,7 @@ def packed_stats_frame(spark, sf_dir, n_buckets=None, ctx_len=None):
     n_buckets = N_BUCKETS if n_buckets is None else n_buckets
     CTX_LEN = CTX_LEN if ctx_len is None else ctx_len
 
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     key = F.concat(F.col("doc_id").cast("string"), F.lit(_SPLIT_SALT))
     split_b = (F.conv(F.substring(F.md5(key), 1, 15), 16, 10)
                .cast("bigint") % 1000)
@@ -1454,7 +1431,7 @@ def q_multimodal_seq_media(spark, sf_dir):
     from ..packing import CTX_LEN, content_hash_col, pack_bucket_col
     from .textops import _bpe_count_udf
 
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     key = F.concat(F.col("doc_id").cast("string"), F.lit(_SPLIT_SALT))
     split_b = (F.conv(F.substring(F.md5(key), 1, 15), 16, 10)
                .cast("bigint") % 1000)
@@ -1549,7 +1526,7 @@ def q_source_mixing_weights(spark, sf_dir):
     control-flow pattern, not a data-sized single partition)."""
     from pyspark.sql import Window
 
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     tokens = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
     per_src = (
         d.groupBy("source")
@@ -1659,207 +1636,17 @@ _MIX_EPOCH_DOCS = 256        # per-epoch document budget the quotas size
 _MIX_EPOCH_SALT = "mix-epoch-v1"
 
 
-def q_mixture_epoch_stream(spark, sf_dir):
-    """The last mile of the data-mixture story (round-6 VERDICT What's
-    missing #2): `source_mixing_weights` computed temperature quotas no
-    operator consumed — this query CONSUMES them. Per epoch, each source
-    contributes ``n_target = floor(quota * EPOCH_DOCS / SCALE)`` documents
-    (integer cross-multiplication — exact both engines), chosen by the
-    same deterministic md5-rank head as `source_quota_sample` but salted
-    PER EPOCH, so every epoch draws an independent, rerun-stable sample.
-    The sampled set is exactly the input contract of the tokenize-and-
-    pack stage (pack_token_sequences consumes any (doc_id, text) set;
-    the runner's epoch stage then orders the packed output), so the
-    emitted per-(epoch, source) BPE token mass is the mixture the trainer
-    actually sees. ``sum_doc_ids`` fingerprints the sample itself — the
-    oracle verifies WHICH docs were drawn, not just how many.
-
-    100 TB shape: quotas are an O(|sources|) aggregate COLLECTED to the
-    driver (the established O(K) control-flow pattern — _lm_model,
-    materialized_oracles) so the (epoch, source) grid and the broadcast
-    side are literal frames, never a duplicated corpus-scan subtree; the
-    quota and n_target arithmetic is the identical-operand double
-    division all three engines (Spark, DuckDB, CPython) round the same
-    (exact while sqrt_micro·SCALE < 2^53 — pinned at all shipped SFs by
-    test_oracle_margins.test_mixture_quota_numerator_bound). The rank
-    window partitions by (source) per epoch — with few giant sources the
-    head-sample is still one task per source, so this EXACT-count form
-    is the small-scale diagnostic; the deployment-scale form is the
-    registered sibling ``mixture_epoch_stream_threshold`` (map-only
-    md5-threshold keep, NO window — plan-pinned), whose kept count is
-    binomially close to n_target rather than exact. Each epoch ranks its
-    own 1×-corpus frame (never corpus×N_EPOCHS through one shuffle). The
-    BPE cost UDF runs on sampled rows only (the filter precedes the
-    Arrow stage)."""
-    import math
-
-    from pyspark.sql import Window
-
-    from .textops import _bpe_count_udf
-
-    d = _docs(spark, sf_dir)
-    tokens = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
-    per_src = (
-        d.groupBy("source")
-        .agg(F.sum(tokens).alias("total_tokens"))
-        .select(
-            "source",
-            F.floor(F.sqrt(F.col("total_tokens").cast("double")) * 1e6)
-            .cast("bigint").alias("sqrt_micro"),
-        )
-        .collect()                       # O(|sources|) control flow
-    )
-    total = sum(r["sqrt_micro"] for r in per_src)   # integer, order-free
-    grid_rows = []
-    for r in sorted(per_src, key=lambda r: r["source"]):
-        quota = math.floor(r["sqrt_micro"] * _MIX_QUOTA_SCALE / total)
-        n_target = math.floor(quota * _MIX_EPOCH_DOCS / _MIX_QUOTA_SCALE)
-        for e in range(_N_EPOCHS):
-            grid_rows.append((e, r["source"], quota, n_target))
-    grid = spark.createDataFrame(
-        grid_rows, "epoch int, source string, quota bigint, n_target bigint")
-
-    # one independent rank per epoch (round-7 VERDICT What's wrong #3):
-    # the old shape exploded the corpus ×N_EPOCHS BEFORE the rank shuffle,
-    # moving n_epochs copies of every row through one Exchange; per-epoch
-    # frames feed each rank stage exactly 1× corpus (the runner's
-    # epoch_order_frame pattern), and the md5 key depends only on the
-    # epoch NUMBER, so the union is bit-identical to the exploded form
-    parts = []
-    for e in range(_N_EPOCHS):
-        parts.append(
-            d.select("doc_id", "source", "text")
-            .withColumn("epoch", F.lit(e))
-            .withColumn("rk", F.md5(F.concat_ws(
-                ":", F.col("doc_id").cast("string"),
-                F.lit(str(e)), F.lit(_MIX_EPOCH_SALT))))
-            .withColumn("rn", F.row_number().over(
-                Window.partitionBy("source").orderBy("rk", "doc_id")))
-        )
-    ranked = parts[0]
-    for p in parts[1:]:
-        ranked = ranked.unionByName(p)
-    sampled = (
-        ranked.join(F.broadcast(grid.select("epoch", "source", "n_target")),
-                    ["epoch", "source"])
-        .where(F.col("rn") <= F.col("n_target"))
-    )
-    bc = _bpe_count_udf()
-    agg = (
-        sampled.groupBy("epoch", "source")
-        .agg(F.count(F.lit(1)).alias("docs_sampled"),
-             F.sum(bc(F.col("text"))).alias("bpe_tokens"),
-             F.sum("doc_id").alias("sum_doc_ids"))
-    )
-    return (
-        grid.join(agg, ["epoch", "source"], "left")
-        .select(
-            "epoch", "source", "quota", "n_target",
-            F.coalesce("docs_sampled", F.lit(0)).cast("bigint")
-            .alias("docs_sampled"),
-            F.coalesce("bpe_tokens", F.lit(0)).cast("bigint")
-            .alias("bpe_tokens"),
-            F.coalesce("sum_doc_ids", F.lit(0)).cast("bigint")
-            .alias("sum_doc_ids"),
-        )
-        .orderBy("epoch", "source")
-    )
-
-
-def _oracle_mixture_epoch_stream() -> str:
-    from .textops import baked_bpe_count_values
-
-    sf, vals = baked_bpe_count_values()
-    epochs = ", ".join(str(e) for e in range(_N_EPOCHS))
-    return f"""
--- per-doc BPE token counts mirrored from: {sf}/documents.parquet
-WITH counts(doc_id, c) AS (VALUES {vals}),
-s AS (
-  SELECT source,
-         CAST(sum(len(regexp_split_to_array(trim(text), '\\s+')))
-              AS BIGINT) AS total_tokens
-  FROM documents GROUP BY source
-),
-q AS (
-  SELECT source,
-         CAST(floor(sqrt(CAST(total_tokens AS DOUBLE)) * 1e6) AS BIGINT)
-           AS sqrt_micro
-  FROM s
-),
-t AS (
-  SELECT source,
-         CAST(floor(CAST(sqrt_micro * {_MIX_QUOTA_SCALE} AS DOUBLE)
-                    / CAST((SELECT sum(sqrt_micro) FROM q) AS DOUBLE))
-              AS BIGINT) AS quota
-  FROM q
-),
-tt AS (
-  SELECT source, quota,
-         CAST(floor(CAST(quota * {_MIX_EPOCH_DOCS} AS DOUBLE)
-                    / {_MIX_QUOTA_SCALE}.0) AS BIGINT) AS n_target
-  FROM t
-),
-e AS (SELECT unnest([{epochs}]) AS epoch),
-ranked AS (
-  SELECT e.epoch, d.source, d.doc_id,
-         row_number() OVER (
-           PARTITION BY d.source, e.epoch
-           ORDER BY md5(CAST(d.doc_id AS VARCHAR) || ':' ||
-                        CAST(e.epoch AS VARCHAR) || ':{_MIX_EPOCH_SALT}'),
-                    d.doc_id) AS rn
-  FROM documents d CROSS JOIN e
-),
-samp AS (
-  SELECT r.epoch, r.source, r.doc_id
-  FROM ranked r JOIN tt ON tt.source = r.source
-  WHERE r.rn <= tt.n_target
-),
-agg AS (
-  SELECT samp.epoch, samp.source,
-         CAST(count(*) AS BIGINT) AS docs_sampled,
-         CAST(sum(c.c) AS BIGINT) AS bpe_tokens,
-         CAST(sum(samp.doc_id) AS BIGINT) AS sum_doc_ids
-  FROM samp JOIN counts c ON c.doc_id = samp.doc_id
-  GROUP BY samp.epoch, samp.source
-)
-SELECT e.epoch, tt.source, tt.quota, tt.n_target,
-       CAST(coalesce(a.docs_sampled, 0) AS BIGINT) AS docs_sampled,
-       CAST(coalesce(a.bpe_tokens, 0) AS BIGINT) AS bpe_tokens,
-       CAST(coalesce(a.sum_doc_ids, 0) AS BIGINT) AS sum_doc_ids
-FROM tt CROSS JOIN e
-LEFT JOIN agg a ON a.epoch = e.epoch AND a.source = tt.source
-ORDER BY e.epoch, tt.source
-"""
-
-
-# --- deployment-scale mixture: map-only threshold sample ---------------------
-#
-# Round-7 VERDICT item 1 (the round's one weak mark): the exact-count rank
-# window puts each source in ONE task — a multi-TB single-task sort per
-# source per epoch with CommonCrawl-shaped sources. This sibling is the
-# form you run at 100 TB: keep a doc iff its per-epoch md5 draw clears the
-# source's quota threshold — one map-only pass per epoch, no window, no
-# sort, embarrassingly parallel. The trade (documented, not hidden): the
-# kept count is binomially concentrated AROUND n_target instead of exactly
-# n_target; the draw itself is deterministic md5, so the EXACT kept set
-# (count, token mass, sum of doc_ids) is mirrored by DuckDB row for row.
-
-_MIX_THRESH_SALT = "mix-thresh-v1"
-_TWO32 = 1 << 32
-
-
 def mixture_grid_rows(d, epoch_docs: int = _MIX_EPOCH_DOCS) -> list[tuple]:
     """Driver-collected integer quota grid: [(source, n_docs, quota,
-    n_target)], sorted by source. O(|sources|) control flow (the
-    _lm_model / materialized_oracles pattern — never a data-sized
-    collect). ALL-INTEGER arithmetic (ADVICE r7 item 1): quota =
-    sqrt_micro·SCALE // total and n_target = quota·epoch_docs // SCALE
-    use floor DIVISION on both engines (Python ``//`` here, DuckDB ``//``
-    in the oracle), so parity holds while sqrt_micro·SCALE fits the
-    oracle's BIGINT (< 2^63: a source token mass below ~8.5·10^15; past
-    it DuckDB raises) — unlike the window form's identical-operand double
-    division, which is exact only while sqrt_micro·SCALE < 2^53 (pinned
-    for the shipped SFs by test_oracle_margins)."""
+    n_target)], sorted by source — the one per-source quota rule of both
+    mixture queries and the curate runner's mixture mode, mirrored in SQL
+    by ``_ORACLE_THRESH_GRID``. O(|sources|) control flow (the _lm_model
+    / materialized_oracles pattern — never a data-sized collect).
+    ALL-INTEGER arithmetic: quota = sqrt_micro·SCALE // total and
+    n_target = quota·epoch_docs // SCALE use floor DIVISION on both
+    engines (Python ``//`` here, DuckDB ``//`` in the oracle), so parity
+    holds while sqrt_micro·SCALE fits the oracle's BIGINT (< 2^63: a
+    source token mass below ~8.5·10^15; past it DuckDB raises)."""
     tokens = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
     per_src = (
         d.groupBy("source")
@@ -1908,6 +1695,202 @@ def _grid_from_per_src(per_src: list[tuple],
         n_target = quota * epoch_docs // _MIX_QUOTA_SCALE
         rows.append((source, int(n_docs), int(quota), int(n_target)))
     return rows
+
+
+# The DuckDB mirror of mixture_grid_rows, shared by both mixture oracles:
+# CTEs s, q and tt (tt is the (source, n_docs, quota, n_target) grid) over
+# a ``documents`` table.
+_ORACLE_THRESH_GRID = f"""
+s AS (
+  SELECT source,
+         CAST(count(*) AS BIGINT) AS n_docs,
+         -- coalesce: an all-NULL-text source has zero mass, as in Spark
+         CAST(coalesce(sum(len(regexp_split_to_array(trim(text),
+                                                     '\\s+'))), 0)
+              AS BIGINT) AS total_tokens
+  FROM documents GROUP BY source
+),
+q AS (
+  SELECT source, n_docs,
+         CAST(floor(sqrt(CAST(total_tokens AS DOUBLE)) * 1e6) AS BIGINT)
+           AS sqrt_micro
+  FROM s
+),
+-- integer floor division on BOTH engines (ADVICE r7 item 1): exact at
+-- any scale, no 2^53 double bound
+tt AS (
+  SELECT source, n_docs,
+         CAST((sqrt_micro * {_MIX_QUOTA_SCALE})
+              // (SELECT sum(sqrt_micro) FROM q) AS BIGINT) AS quota,
+         CAST(((sqrt_micro * {_MIX_QUOTA_SCALE})
+               // (SELECT sum(sqrt_micro) FROM q))
+              * {_MIX_EPOCH_DOCS} // {_MIX_QUOTA_SCALE} AS BIGINT)
+           AS n_target
+  FROM q
+)"""
+
+
+def _epoch_grid(spark, grid_rows: list[tuple]):
+    """The (epoch, source, quota, n_target) literal frame: every
+    ``mixture_grid_rows`` row once per epoch."""
+    return spark.createDataFrame(
+        [(e, s, q, nt) for e in range(_N_EPOCHS)
+         for (s, _nd, q, nt) in grid_rows],
+        "epoch int, source string, quota bigint, n_target bigint")
+
+
+def _mixture_stream(grid, sampled):
+    """Both mixture queries' output: per ``grid`` cell, how many docs
+    ``sampled`` drew, their BPE token mass and their doc_id sum — 0 where
+    a cell drew nothing. The BPE UDF runs on sampled rows only."""
+    from .textops import _bpe_count_udf
+
+    bc = _bpe_count_udf()
+    agg = (
+        sampled.groupBy("epoch", "source")
+        .agg(F.count(F.lit(1)).alias("docs_sampled"),
+             F.sum(bc(F.col("text"))).alias("bpe_tokens"),
+             F.sum("doc_id").alias("sum_doc_ids"))
+    )
+    return (
+        grid.join(agg, ["epoch", "source"], "left")
+        .select(
+            "epoch", "source", "quota", "n_target",
+            F.coalesce("docs_sampled", F.lit(0)).cast("bigint")
+            .alias("docs_sampled"),
+            F.coalesce("bpe_tokens", F.lit(0)).cast("bigint")
+            .alias("bpe_tokens"),
+            F.coalesce("sum_doc_ids", F.lit(0)).cast("bigint")
+            .alias("sum_doc_ids"),
+        )
+        .orderBy("epoch", "source")
+    )
+
+
+def q_mixture_epoch_stream(spark, sf_dir):
+    """The last mile of the data-mixture story (round-6 VERDICT What's
+    missing #2): `source_mixing_weights` computed temperature quotas no
+    operator consumed — this query CONSUMES them. Per epoch, each source
+    contributes ``n_target = quota * EPOCH_DOCS // SCALE`` documents
+    (integer floor division — exact both engines), chosen by the
+    same deterministic md5-rank head as `source_quota_sample` but salted
+    PER EPOCH, so every epoch draws an independent, rerun-stable sample.
+    The sampled set is exactly the input contract of the tokenize-and-
+    pack stage (pack_token_sequences consumes any (doc_id, text) set;
+    the runner's epoch stage then orders the packed output), so the
+    emitted per-(epoch, source) BPE token mass is the mixture the trainer
+    actually sees. ``sum_doc_ids`` fingerprints the sample itself — the
+    oracle verifies WHICH docs were drawn, not just how many.
+
+    100 TB shape: the quotas are ``mixture_grid_rows`` — an O(|sources|)
+    aggregate COLLECTED to the driver, the same integer grid the
+    threshold sibling samples by — so the (epoch, source) grid and the
+    broadcast side are literal frames, never a duplicated corpus-scan
+    subtree. The rank window partitions by (source) per epoch — with few
+    giant sources the head-sample is still one task per source, so this
+    EXACT-count form is the small-scale diagnostic; the deployment-scale
+    form is the registered sibling ``mixture_epoch_stream_threshold``
+    (map-only md5-threshold keep, NO window — plan-pinned), whose kept
+    count is binomially close to n_target rather than exact. Each epoch
+    ranks its own 1×-corpus frame (never corpus×N_EPOCHS through one
+    shuffle). The BPE cost UDF runs on sampled rows only (the filter
+    precedes the Arrow stage)."""
+    from pyspark.sql import Window
+
+    d = base_table(spark, sf_dir, "documents")
+    grid = _epoch_grid(spark, mixture_grid_rows(d))
+
+    # one independent rank per epoch (round-7 VERDICT What's wrong #3):
+    # the old shape exploded the corpus ×N_EPOCHS BEFORE the rank shuffle,
+    # moving n_epochs copies of every row through one Exchange; per-epoch
+    # frames feed each rank stage exactly 1× corpus (the runner's
+    # epoch_order_frame pattern), and the md5 key depends only on the
+    # epoch NUMBER, so the union is bit-identical to the exploded form
+    parts = []
+    for e in range(_N_EPOCHS):
+        parts.append(
+            d.select("doc_id", "source", "text")
+            .withColumn("epoch", F.lit(e))
+            .withColumn("rk", F.md5(F.concat_ws(
+                ":", F.col("doc_id").cast("string"),
+                F.lit(str(e)), F.lit(_MIX_EPOCH_SALT))))
+            .withColumn("rn", F.row_number().over(
+                Window.partitionBy("source").orderBy("rk", "doc_id")))
+        )
+    ranked = parts[0]
+    for p in parts[1:]:
+        ranked = ranked.unionByName(p)
+    sampled = (
+        ranked.join(F.broadcast(grid.select("epoch", "source", "n_target")),
+                    ["epoch", "source"])
+        .where(F.col("rn") <= F.col("n_target"))
+    )
+    return _mixture_stream(grid, sampled)
+
+
+def _oracle_mixture_stream(sample_ctes: str) -> str:
+    """Both mixture oracles: the baked per-doc BPE counts, the quota
+    grid ``tt``, the epochs ``e``, then ``sample_ctes`` (ending in
+    ``samp(epoch, source, doc_id)``), then per-cell counts, 0 where a
+    cell drew nothing — the SQL mirror of ``_mixture_stream``."""
+    from .textops import baked_bpe_count_values
+
+    sf, vals = baked_bpe_count_values()
+    epochs = ", ".join(str(e) for e in range(_N_EPOCHS))
+    return f"""
+-- per-doc BPE token counts mirrored from: {sf}/documents.parquet
+WITH counts(doc_id, c) AS (VALUES {vals}),{_ORACLE_THRESH_GRID},
+e AS (SELECT unnest([{epochs}]) AS epoch),{sample_ctes},
+agg AS (
+  SELECT samp.epoch, samp.source,
+         CAST(count(*) AS BIGINT) AS docs_sampled,
+         CAST(sum(c.c) AS BIGINT) AS bpe_tokens,
+         CAST(sum(samp.doc_id) AS BIGINT) AS sum_doc_ids
+  FROM samp JOIN counts c ON c.doc_id = samp.doc_id
+  GROUP BY samp.epoch, samp.source
+)
+SELECT e.epoch, tt.source, tt.quota, tt.n_target,
+       CAST(coalesce(a.docs_sampled, 0) AS BIGINT) AS docs_sampled,
+       CAST(coalesce(a.bpe_tokens, 0) AS BIGINT) AS bpe_tokens,
+       CAST(coalesce(a.sum_doc_ids, 0) AS BIGINT) AS sum_doc_ids
+FROM tt CROSS JOIN e
+LEFT JOIN agg a ON a.epoch = e.epoch AND a.source = tt.source
+ORDER BY e.epoch, tt.source
+"""
+
+
+def _oracle_mixture_epoch_stream() -> str:
+    return _oracle_mixture_stream(f"""
+ranked AS (
+  SELECT e.epoch, d.source, d.doc_id,
+         row_number() OVER (
+           PARTITION BY d.source, e.epoch
+           ORDER BY md5(CAST(d.doc_id AS VARCHAR) || ':' ||
+                        CAST(e.epoch AS VARCHAR) || ':{_MIX_EPOCH_SALT}'),
+                    d.doc_id) AS rn
+  FROM documents d CROSS JOIN e
+),
+samp AS (
+  SELECT r.epoch, r.source, r.doc_id
+  FROM ranked r JOIN tt ON tt.source = r.source
+  WHERE r.rn <= tt.n_target
+)""")
+
+
+# --- deployment-scale mixture: map-only threshold sample ---------------------
+#
+# Round-7 VERDICT item 1 (the round's one weak mark): the exact-count rank
+# window puts each source in ONE task — a multi-TB single-task sort per
+# source per epoch with CommonCrawl-shaped sources. This sibling is the
+# form you run at 100 TB: keep a doc iff its per-epoch md5 draw clears the
+# source's quota threshold — one map-only pass per epoch, no window, no
+# sort, embarrassingly parallel. The trade (documented, not hidden): the
+# kept count is binomially concentrated AROUND n_target instead of exactly
+# n_target; the draw itself is deterministic md5, so the EXACT kept set
+# (count, token mass, sum of doc_ids) is mirrored by DuckDB row for row.
+
+_MIX_THRESH_SALT = "mix-thresh-v1"
+_TWO32 = 1 << 32
 
 
 def mixture_threshold_keep(epoch: int,
@@ -1975,77 +1958,14 @@ def q_mixture_epoch_stream_threshold(spark, sf_dir):
     BPE UDF on kept rows only, then a partial-agg groupBy down to
     |sources|·|epochs| rows. No single-task sort exists for any source
     size — this is the form that survives CommonCrawl-shaped skew."""
-    from .textops import _bpe_count_udf
-
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     rows = mixture_grid_rows(d)
     sampled = mixture_threshold_sample(d, rows, list(range(_N_EPOCHS)))
-    bc = _bpe_count_udf()
-    agg = (
-        sampled.groupBy("epoch", "source")
-        .agg(F.count(F.lit(1)).alias("docs_sampled"),
-             F.sum(bc(F.col("text"))).alias("bpe_tokens"),
-             F.sum("doc_id").alias("sum_doc_ids"))
-    )
-    grid = spark.createDataFrame(
-        [(e, s, q, nt) for e in range(_N_EPOCHS) for (s, _nd, q, nt) in rows],
-        "epoch int, source string, quota bigint, n_target bigint")
-    return (
-        grid.join(agg, ["epoch", "source"], "left")
-        .select(
-            "epoch", "source", "quota", "n_target",
-            F.coalesce("docs_sampled", F.lit(0)).cast("bigint")
-            .alias("docs_sampled"),
-            F.coalesce("bpe_tokens", F.lit(0)).cast("bigint")
-            .alias("bpe_tokens"),
-            F.coalesce("sum_doc_ids", F.lit(0)).cast("bigint")
-            .alias("sum_doc_ids"),
-        )
-        .orderBy("epoch", "source")
-    )
-
-
-# The DuckDB mirror of mixture_grid_rows: CTEs s, q and tt (tt is the
-# (source, n_docs, quota, n_target) grid) over a ``documents`` table.
-_ORACLE_THRESH_GRID = f"""
-s AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         -- coalesce: an all-NULL-text source has zero mass, as in Spark
-         CAST(coalesce(sum(len(regexp_split_to_array(trim(text),
-                                                     '\\s+'))), 0)
-              AS BIGINT) AS total_tokens
-  FROM documents GROUP BY source
-),
-q AS (
-  SELECT source, n_docs,
-         CAST(floor(sqrt(CAST(total_tokens AS DOUBLE)) * 1e6) AS BIGINT)
-           AS sqrt_micro
-  FROM s
-),
--- integer floor division on BOTH engines (ADVICE r7 item 1): exact at
--- any scale, no 2^53 double bound
-tt AS (
-  SELECT source, n_docs,
-         CAST((sqrt_micro * {_MIX_QUOTA_SCALE})
-              // (SELECT sum(sqrt_micro) FROM q) AS BIGINT) AS quota,
-         CAST(((sqrt_micro * {_MIX_QUOTA_SCALE})
-               // (SELECT sum(sqrt_micro) FROM q))
-              * {_MIX_EPOCH_DOCS} // {_MIX_QUOTA_SCALE} AS BIGINT)
-           AS n_target
-  FROM q
-)"""
+    return _mixture_stream(_epoch_grid(spark, rows), sampled)
 
 
 def _oracle_mixture_threshold() -> str:
-    from .textops import baked_bpe_count_values
-
-    sf, vals = baked_bpe_count_values()
-    epochs = ", ".join(str(e) for e in range(_N_EPOCHS))
-    return f"""
--- per-doc BPE token counts mirrored from: {sf}/documents.parquet
-WITH counts(doc_id, c) AS (VALUES {vals}),{_ORACLE_THRESH_GRID},
-e AS (SELECT unnest([{epochs}]) AS epoch),
+    return _oracle_mixture_stream(f"""
 samp AS (
   SELECT e.epoch, d.source, d.doc_id
   FROM documents d
@@ -2056,23 +1976,7 @@ samp AS (
                              ':{_MIX_THRESH_SALT}'), 1, 8)) AS BIGINT)
           * tt.n_docs
         < tt.n_target * {_TWO32}
-),
-agg AS (
-  SELECT samp.epoch, samp.source,
-         CAST(count(*) AS BIGINT) AS docs_sampled,
-         CAST(sum(c.c) AS BIGINT) AS bpe_tokens,
-         CAST(sum(samp.doc_id) AS BIGINT) AS sum_doc_ids
-  FROM samp JOIN counts c ON c.doc_id = samp.doc_id
-  GROUP BY samp.epoch, samp.source
-)
-SELECT e.epoch, tt.source, tt.quota, tt.n_target,
-       CAST(coalesce(a.docs_sampled, 0) AS BIGINT) AS docs_sampled,
-       CAST(coalesce(a.bpe_tokens, 0) AS BIGINT) AS bpe_tokens,
-       CAST(coalesce(a.sum_doc_ids, 0) AS BIGINT) AS sum_doc_ids
-FROM tt CROSS JOIN e
-LEFT JOIN agg a ON a.epoch = e.epoch AND a.source = tt.source
-ORDER BY e.epoch, tt.source
-"""
+)""")
 
 
 QUERIES = {

@@ -15,20 +15,16 @@ driver's correctness gate exercises them:
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from martial_arts_ocr_spark.queries.tables import base_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str):
-    return base_table(spark, sf_dir, name)
-
-
 # --- A1 arg-max: biggest order per customer ----------------------------------
 
 def q_argmax_order(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
+    orders = base_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_custkey")
         .agg(
@@ -64,7 +60,7 @@ def q_events_gap_flags(spark, sf_dir):
     # latent at sf0.01, red at sf0.1 (user 805 has a 21600.714 s gap).
     # TIMESTAMP_NTZ subtraction yields an exact day-time interval
     # (timezone-free); DuckDB mirrors with integer epoch_us.
-    ev = _t(spark, sf_dir, "events")
+    ev = base_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts") - F.lag("ts").over(w)
     big = gap > F.expr("INTERVAL 21600 SECOND")
@@ -94,7 +90,7 @@ FROM (
 # --- T10 whitespace normalize as SQL (cleanup-chain op, oracle-checked) -------
 
 def q_whitespace_normalize(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = base_table(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))
     return (
         d.where(F.col("doc_id") < 80)
@@ -114,7 +110,7 @@ FROM documents WHERE doc_id < 80 ORDER BY doc_id
 # --- T15 sentence split counts -------------------------------------------------
 
 def q_sentence_counts(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = base_table(spark, sf_dir, "documents")
     sentences = F.filter(
         F.split(F.col("text"), r"[.!?]+"),
         lambda s: F.length(F.trim(s)) >= 3,
@@ -137,7 +133,7 @@ FROM documents GROUP BY lang ORDER BY lang
 # --- first-trigram head (token ops: split + slice + join) ----------------------
 
 def q_doc_trigram_head(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = base_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.col("text")), r"\s+")
     return (
         d.where(F.col("doc_id") < 60)
@@ -160,7 +156,7 @@ FROM documents WHERE doc_id < 60 ORDER BY doc_id
 # --- intersect (M5 completeness) ------------------------------------------------
 
 def q_custkeys_both_years(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
+    orders = base_table(spark, sf_dir, "orders")
     y96 = orders.where(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1997-01-01"))
@@ -187,8 +183,8 @@ ORDER BY o_custkey
 # --- cross join (small dims) -----------------------------------------------------
 
 def q_region_nation_matrix(spark, sf_dir):
-    region = _t(spark, sf_dir, "region")
-    nation = _t(spark, sf_dir, "nation")
+    region = base_table(spark, sf_dir, "region")
+    nation = base_table(spark, sf_dir, "nation")
     return (
         region.crossJoin(nation)
         .select("r_name", "n_name",
@@ -208,8 +204,8 @@ ORDER BY r_name, n_name
 # --- union all across tables (structural union) ----------------------------------
 
 def q_party_balances_union(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
+    cust = base_table(spark, sf_dir, "customer")
+    supp = base_table(spark, sf_dir, "supplier")
     c = cust.select(
         F.lit("customer").alias("kind"),
         F.col("c_custkey").alias("party_key"),
@@ -236,7 +232,7 @@ ORDER BY kind, party_key
 # --- dense-rank windows -----------------------------------------------------------
 
 def q_top_users_per_event_type(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = base_table(spark, sf_dir, "events")
     per_user = (
         ev.groupBy("event_type", "user_id")
         .agg(F.round(F.sum("value"), 2).alias("total_value"))
@@ -274,7 +270,7 @@ def q_part_size_buckets(spark, sf_dir):
     a confirmed Spark-vs-DuckDB rounding-tie divergence (round-4 review;
     the CLAUDE.md round-2 rule: invert uncontrolled ratios to integers).
     Consumers derive avg as sum_price_cents / n / 100."""
-    part = _t(spark, sf_dir, "part")
+    part = base_table(spark, sf_dir, "part")
     bucket = (
         F.when(F.col("p_size") < 10, "small")
         .when(F.col("p_size") < 30, "medium")
@@ -304,7 +300,7 @@ FROM part GROUP BY 1 ORDER BY 1
 def q_events_sliding_windows(spark, sf_dir):
     """10-minute windows sliding every 5 minutes (each event in 2 windows)
     — F.window with slide; oracle = union of the two tumbling grids."""
-    ev = _t(spark, sf_dir, "events")
+    ev = base_table(spark, sf_dir, "events")
     w = F.window("ts", "10 minutes", "5 minutes")
     return (
         ev.groupBy(w.alias("w"))

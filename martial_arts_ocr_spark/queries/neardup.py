@@ -19,33 +19,13 @@ from O(N) into O(N/K · probes).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from martial_arts_ocr_spark.engine import memo
-from martial_arts_ocr_spark.queries.tables import base_table, spread_table
-
-
-def _emb(spark: SparkSession, sf_dir: str):
-    return base_table(spark, sf_dir, "embeddings")
-
-
-def _docs(spark: SparkSession, sf_dir: str):
-    return base_table(spark, sf_dir, "documents")
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    ))
+from martial_arts_ocr_spark.queries.similarity import dot, norm
+from martial_arts_ocr_spark.queries.tables import (base_table, oracle_sf_rows,
+                                                   spread_table)
 
 
 # --- embedding-cosine near-dup pairs -------------------------------------------
@@ -60,10 +40,10 @@ def q_cosine_neardup_pairs(spark, sf_dir):
 
     def signatures():
         sig = _lsh_signature_udf()
-        return _emb(spark, sf_dir).select(
+        return base_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding",
             sig(F.col("embedding")).alias("bucket"),
-            _norm(F.col("embedding")).alias("nrm"),
+            norm(F.col("embedding")).alias("nrm"),
         ).persist()      # signatures computed ONCE per session and reused
         # by both join sides (materialized signature table at warehouse
         # scale); the session memo stops repeated invocations from
@@ -73,7 +53,7 @@ def q_cosine_neardup_pairs(spark, sf_dir):
                             signatures)
     a, b = emb.alias("a"), emb.alias("b")
     cos = F.round(
-        _dot(F.col("a.embedding"), F.col("b.embedding"))
+        dot(F.col("a.embedding"), F.col("b.embedding"))
         / (F.col("a.nrm") * F.col("b.nrm")), 5,
     )
     return (
@@ -452,27 +432,19 @@ def kmeans_centroids_mirror(vectors, vec_ids=None, k=_N_CENTROIDS,
 def _learned_centroids(spark, sf_dir):
     return memo.get_or_build(
         spark, ("neardup", sf_dir, "cents"),
-        lambda: kmeans_centroids_spark(_emb(spark, sf_dir)))
+        lambda: kmeans_centroids_spark(
+            base_table(spark, sf_dir, "embeddings")))
 
 
 def _baked_centroid_values() -> tuple[str, str]:
     """(sf_dir, SQL VALUES rows) of the converged k-means centroids from
-    the pure-numpy mirror over the gate's parquet (env
-    SPARK_GRAFT_ORACLE_SF, default sf0.01) — the baked-literal technique
-    every centroid-dependent oracle shares (_oracle_ivf and the semantic
-    -prune CTEs). Called only at oracle materialization time, never at
-    module import."""
-    import os
-
-    import duckdb
-
-    sf = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT vec_id, embedding FROM "
-        f"read_parquet('{sf}/embeddings.parquet') ORDER BY vec_id"
-    ).fetchall()
-    con.close()
+    the pure-numpy mirror over the oracle SF's embeddings (read by
+    ``tables.oracle_sf_rows``) — the baked-literal technique every
+    centroid-dependent oracle shares (_oracle_ivf and the semantic-prune
+    CTEs). Called only at oracle materialization time, never at module
+    import."""
+    sf, rows = oracle_sf_rows("embeddings", "vec_id, embedding",
+                              "ORDER BY vec_id")
     cents = kmeans_centroids_mirror([r[1] for r in rows],
                                     vec_ids=[r[0] for r in rows])
     vals = ", ".join(
@@ -494,7 +466,7 @@ def q_ivf_ann_top5(spark, sf_dir):
     O(N·(assign·probes)/K) instead of O(N) (~23% of the corpus at these
     settings — multi-assignment buys most of the recall lost to probing
     2/16 clusters on near-isotropic embeddings)."""
-    emb = _emb(spark, sf_dir)
+    emb = base_table(spark, sf_dir, "embeddings")
     learned = _learned_centroids(spark, sf_dir)
     cents = _cents_df(spark, learned)
     scored = (
@@ -507,8 +479,8 @@ def q_ivf_ann_top5(spark, sf_dir):
             # break on cent_id identically — same discipline as the
             # training-distance round (margin-audited in test_kmeans_ivf)
             F.round(
-                _dot(F.col("embedding"), F.col("cvec"))
-                / (_norm(F.col("embedding")) * _norm(F.col("cvec"))), 7,
+                dot(F.col("embedding"), F.col("cvec"))
+                / (norm(F.col("embedding")) * norm(F.col("cvec"))), 7,
             ).alias("ccos"),
         )
     )
@@ -538,8 +510,8 @@ def q_ivf_ann_top5(spark, sf_dir):
         .dropDuplicates(["vec_id"])
     )
     cos = F.round(
-        _dot(F.col("embedding"), F.col("qvec"))
-        / (_norm(F.col("embedding")) * _norm(F.col("qvec"))), 5,
+        dot(F.col("embedding"), F.col("qvec"))
+        / (norm(F.col("embedding")) * norm(F.col("qvec"))), 5,
     )
     return (
         cand.select("vec_id", "label", cos.alias("cosine"))
@@ -550,19 +522,15 @@ def q_ivf_ann_top5(spark, sf_dir):
 
 def _oracle_ivf() -> str:
     """Baked-literal IVF oracle: converged k-means centroids from the
-    pure-numpy mirror (``kmeans_centroids_mirror``) over the gate's parquet
-    (env SPARK_GRAFT_ORACLE_SF, default sf0.01) — the xxh64/LSH baked-
-    literal technique. Registered as a CALLABLE so the parquet read happens
-    when ``oracle_sql()`` materializes the dict on the driver, never at
-    module import (executors import this package for the pandas UDFs).
+    pure-numpy mirror (``kmeans_centroids_mirror``) over the oracle SF —
+    the xxh64/LSH baked-literal technique. Registered as a CALLABLE so the
+    parquet read happens when ``oracle_sql()`` materializes the dict on
+    the driver, never at module import (executors import this package for
+    the pandas UDFs).
 
-    ENV COUPLING (the one oracle that is SF-bound at build time): the
-    Spark query learns centroids from the sf_dir it is invoked with, so a
-    harness comparing at any SF other than sf0.01 MUST export
-    SPARK_GRAFT_ORACLE_SF to that SF before calling oracle_sql() —
-    tests/test_query_gate.py reads the SF it runs at from that variable.
-    Every other oracle reads only the pre-registered views and has no such
-    coupling."""
+    SF coupling: the Spark query learns centroids from the sf_dir it is
+    invoked with, so the oracle must learn them from the same SF — see
+    ``tables.oracle_sf_rows`` for how that SF is chosen."""
     sf, rows = _baked_centroid_values()
     return f"""
 -- IVF centroid literals learned from: {sf}/embeddings.parquet
@@ -614,8 +582,8 @@ def _curve_centroids(spark, sf_dir):
     return memo.get_or_build(
         spark, ("neardup", sf_dir, "curve"),
         lambda: kmeans_centroids_spark(
-            _emb(spark, sf_dir), k=_CURVE_K, iters=_CURVE_ITERS,
-            init="jitter"))
+            base_table(spark, sf_dir, "embeddings"), k=_CURVE_K,
+            iters=_CURVE_ITERS, init="jitter"))
 
 
 def q_ivf_recall_curve(spark, sf_dir):
@@ -628,13 +596,13 @@ def q_ivf_recall_curve(spark, sf_dir):
     discipline, mirrored bit-for-bit by the numpy oracle. The six
     per-nprobe counts are O(1) driver control flow (the k-means-means
     collect pattern); candidate rows themselves never leave the cluster."""
-    emb = _emb(spark, sf_dir)
+    emb = base_table(spark, sf_dir, "embeddings")
     cents = _cents_df(spark, _curve_centroids(spark, sf_dir))
     scored = emb.crossJoin(F.broadcast(cents)).select(
         "vec_id", "embedding", "cent_id",
         F.round(
-            _dot(F.col("embedding"), F.col("cvec"))
-            / (_norm(F.col("embedding")) * _norm(F.col("cvec"))), 7,
+            dot(F.col("embedding"), F.col("cvec"))
+            / (norm(F.col("embedding")) * norm(F.col("cvec"))), 7,
         ).alias("ccos"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cent_id"))
@@ -648,8 +616,8 @@ def q_ivf_recall_curve(spark, sf_dir):
                       F.col("rk").alias("probe_rk"),
                       F.col("embedding").alias("qvec")))
     cos5 = F.round(
-        _dot(F.col("embedding"), F.col("qvec"))
-        / (_norm(F.col("embedding")) * _norm(F.col("qvec"))), 5,
+        dot(F.col("embedding"), F.col("qvec"))
+        / (norm(F.col("embedding")) * norm(F.col("qvec"))), 5,
     )
     cand = (
         members.join(F.broadcast(qprobe),
@@ -736,19 +704,10 @@ def ivf_recall_curve_mirror(vectors, vec_ids):
 def _oracle_ivf_recall_curve() -> str:
     """Baked (nprobe, n_candidates, n_hits) rows from the pure-numpy
     mirror over the gate parquet — round-4 VERDICT item 6's 'oracle via
-    the numpy mirror'. Same SPARK_GRAFT_ORACLE_SF coupling as
-    _oracle_ivf."""
-    import os
-
-    import duckdb
-
-    sf = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT vec_id, embedding FROM "
-        f"read_parquet('{sf}/embeddings.parquet') ORDER BY vec_id"
-    ).fetchall()
-    con.close()
+    the numpy mirror'. The embeddings are read from the oracle SF by
+    ``tables.oracle_sf_rows``."""
+    sf, rows = oracle_sf_rows("embeddings", "vec_id, embedding",
+                              "ORDER BY vec_id")
     curve = ivf_recall_curve_mirror([r[1] for r in rows],
                                     [r[0] for r in rows])
     vals = ", ".join(f"({a}, {b}, {c})" for a, b, c in curve)
@@ -851,14 +810,15 @@ def _sem_assigned(spark, sf_dir):
         cents = _cents_df(spark, _learned_centroids(spark, sf_dir))
         mc = F.struct(
             (-F.round(
-                _dot(F.col("embedding"), F.col("cvec"))
-                / (_norm(F.col("embedding")) * _norm(F.col("cvec"))), 7,
+                dot(F.col("embedding"), F.col("cvec"))
+                / (norm(F.col("embedding")) * norm(F.col("cvec"))), 7,
             )).alias("negcos"),
             F.col("cent_id").alias("c"),
             F.col("embedding").alias("e"),
         )
         return (
-            _emb(spark, sf_dir).select("vec_id", "embedding")
+            base_table(spark, sf_dir, "embeddings")
+            .select("vec_id", "embedding")
             .crossJoin(F.broadcast(cents))
             .groupBy("vec_id")
             .agg(F.min(mc).alias("m"))
@@ -866,7 +826,7 @@ def _sem_assigned(spark, sf_dir):
                 "vec_id",
                 F.col("m.e").alias("embedding"),
                 F.col("m.c").alias("cent_id"),
-                _norm(F.col("m.e")).alias("nrm"),
+                norm(F.col("m.e")).alias("nrm"),
             )
             .persist()
         )
@@ -893,7 +853,7 @@ def semantic_neardup_pairs(spark, sf_dir):
     asg = _sem_assigned(spark, sf_dir)
     a, b = asg.alias("a"), asg.alias("b")
     cos = F.round(
-        _dot(F.col("a.embedding"), F.col("b.embedding"))
+        dot(F.col("a.embedding"), F.col("b.embedding"))
         / (F.col("a.nrm") * F.col("b.nrm")), 5,
     )
     return (

@@ -13,20 +13,16 @@ are left to AQE for skew/coalesce.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from martial_arts_ocr_spark.queries.tables import base_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return base_table(spark, sf_dir, name)
-
-
 # --- Q1-style pricing summary (agg kernel A2/A3 analogue) -------------------
 
 def q_pricing_summary(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = base_table(spark, sf_dir, "lineitem")
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -60,9 +56,9 @@ ORDER BY l_returnflag, l_linestatus
 # --- top revenue customers (join + agg + top-k) ------------------------------
 
 def q_top_revenue_customers(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    li = base_table(spark, sf_dir, "lineitem")
+    orders = base_table(spark, sf_dir, "orders")
+    cust = base_table(spark, sf_dir, "customer")
     rev = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -88,7 +84,7 @@ LIMIT 10
 # --- order priority count (filter + group) -----------------------------------
 
 def q_order_priority(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
+    orders = base_table(spark, sf_dir, "orders")
     return (
         orders.where(
             (F.col("o_orderdate") >= F.lit("1996-01-01"))
@@ -113,9 +109,9 @@ ORDER BY o_orderpriority
 # --- region→nation→customer broadcast-join rollup ----------------------------
 
 def q_region_balance(spark, sf_dir):
-    region = _t(spark, sf_dir, "region")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
+    region = base_table(spark, sf_dir, "region")
+    nation = base_table(spark, sf_dir, "nation")
+    cust = base_table(spark, sf_dir, "customer")
     return (
         cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
@@ -140,7 +136,7 @@ GROUP BY r_name ORDER BY r_name
 # --- window: top-3 parts per brand by price (W6 top-K analogue) ---------------
 
 def q_top_parts_per_brand(spark, sf_dir):
-    part = _t(spark, sf_dir, "part")
+    part = base_table(spark, sf_dir, "part")
     w = Window.partitionBy("p_brand").orderBy(
         F.desc("p_retailprice"), F.asc("p_partkey")
     )
@@ -168,8 +164,8 @@ ORDER BY p_brand, rk
 # --- semi / anti joins (checkpoint-resume primitive, SURVEY §2.3) -------------
 
 def q_customers_with_orders(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = base_table(spark, sf_dir, "customer")
+    orders = base_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
         .select("c_custkey", "c_name")
@@ -185,8 +181,8 @@ ORDER BY c_custkey
 
 
 def q_customers_without_orders(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = base_table(spark, sf_dir, "customer")
+    orders = base_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
         .select("c_custkey", "c_name")
@@ -204,7 +200,7 @@ ORDER BY c_custkey
 # --- set ops (M5) -------------------------------------------------------------
 
 def q_custkeys_1996_not_1997(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
+    orders = base_table(spark, sf_dir, "orders")
     y96 = orders.where(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1997-01-01"))
@@ -232,7 +228,7 @@ ORDER BY o_custkey
 # --- rollup (grouping-set agg) --------------------------------------------------
 
 def q_orders_rollup(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
+    orders = base_table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n"),
@@ -256,7 +252,7 @@ ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST
 # --- events: hourly windowed agg (streaming-shaped batch query) ----------------
 
 def q_events_hourly(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = base_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.date_trunc("hour", F.col("ts")).alias("hour"),
@@ -282,7 +278,7 @@ def q_events_sessions(spark, sf_dir):
     # microsecond-exact gap via NTZ interval subtraction (same hazard as
     # events_gap_flags: unix_timestamp truncates to seconds, epoch() keeps
     # the fraction — a gap in (1800, 1801) s would diverge)
-    ev = _t(spark, sf_dir, "events")
+    ev = base_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     big = (F.col("ts") - prev) > F.expr("INTERVAL 1800 SECOND")

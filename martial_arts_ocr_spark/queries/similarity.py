@@ -20,19 +20,32 @@ Python); bucket joins are ordinary Spark shuffles.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import SparkSession, functions as F, types as T
+from pyspark.sql import functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
 from martial_arts_ocr_spark.engine import memo
 from martial_arts_ocr_spark.queries.tables import base_table, spread_table
 
 
-def _emb(spark: SparkSession, sf_dir: str):
-    return base_table(spark, sf_dir, "embeddings")
+# --- the vector fold every JVM-side cosine, norm and linear score shares -------
+
+def dot(a, b):
+    """Dot product of two array columns as a left-to-right double fold —
+    the pairing DuckDB's ``list_dot_product`` / ``list_cosine_similarity``
+    over ``DOUBLE[]`` reproduce (embeddings are FLOAT[]: each element is
+    widened before the multiply, never summed in float32)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0), lambda acc, x: acc + x,
+    )
 
 
-def _docs(spark: SparkSession, sf_dir: str):
-    return base_table(spark, sf_dir, "documents")
+def norm(a):
+    """L2 norm of an array column, by the same double fold as ``dot``."""
+    return F.sqrt(F.aggregate(
+        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+        F.lit(0.0), lambda acc, x: acc + x,
+    ))
 
 
 # --- brute-force cosine top-k vs a fixed query vector (vec_id = 0) --------------
@@ -45,7 +58,7 @@ def q_ann_cosine_top10(spark, sf_dir):
     At 100 TB the same plan holds: one scan, no shuffle except the final
     top-k (which AQE executes as a partial+final TakeOrdered).
     """
-    emb = _emb(spark, sf_dir)
+    emb = base_table(spark, sf_dir, "embeddings")
     # memoized per (session, sf): the eager head() is a full-scan Spark
     # job that otherwise re-runs on EVERY invocation (gate × 3 SFs, every
     # bench repetition) before the real query starts (review-found)
@@ -60,19 +73,8 @@ def q_ann_cosine_top10(spark, sf_dir):
     qvec = memo.get_or_build(spark, ("similarity", sf_dir, "ann_qvec"),
                              query_vector)
     q = F.array(*[F.lit(float(x)) for x in qvec])
-    dot = F.aggregate(
-        F.zip_with(F.col("embedding"), q, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm_e = F.sqrt(F.aggregate(
-        F.transform(F.col("embedding"), lambda a: a.cast("double") * a.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    ))
-    norm_q = F.sqrt(F.aggregate(
-        F.transform(q, lambda a: a * a), F.lit(0.0), lambda acc, x: acc + x,
-    ))
-    cos = F.round(dot / (norm_e * norm_q), 5)
+    e = F.col("embedding")
+    cos = F.round(dot(e, q) / (norm(e) * norm(q)), 5)
     return (
         emb.where(F.col("vec_id") != 0)
         .select("vec_id", "label", cos.alias("cosine"))
@@ -100,13 +102,9 @@ ORDER BY cosine DESC, vec_id ASC LIMIT 10
 # --- per-label embedding norms (vector agg sanity surface) ----------------------
 
 def q_embedding_norms(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    norm = F.sqrt(F.aggregate(
-        F.transform(F.col("embedding"), lambda a: a.cast("double") * a.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    ))
+    emb = base_table(spark, sf_dir, "embeddings")
     return (
-        emb.select("label", norm.alias("norm"))
+        emb.select("label", norm(F.col("embedding")).alias("norm"))
         .groupBy("label")
         .agg(F.count(F.lit(1)).alias("n"),
              F.round(F.avg("norm"), 4).alias("avg_norm"))
@@ -168,7 +166,7 @@ def _lsh_signatures_cached(spark, sf_dir):
     warehouse scale; both self-join sides read it."""
     def signatures():
         sig = _lsh_signature_udf()
-        return _emb(spark, sf_dir).select(
+        return base_table(spark, sf_dir, "embeddings").select(
             "vec_id", "label", sig(F.col("embedding")).alias("bucket")
         ).persist()
 
@@ -306,16 +304,6 @@ def minhash_signatures_batch(text: pd.Series) -> pd.Series:
     return pd.Series([row.tolist() for row in sigs])
 
 
-def _minhash_udf():
-    out_t = T.ArrayType(T.LongType())
-
-    @pandas_udf(out_t)
-    def mh(text: pd.Series) -> pd.Series:
-        return minhash_signatures_batch(text)
-
-    return mh
-
-
 def minhash_band_keys_batch(text: pd.Series) -> pd.Series:
     """Per-doc band keys: the 32-perm signature folded into _MINHASH_BANDS
     64-bit FNV-mixed keys. Equal signatures ⇒ equal keys; 64-bit keys over
@@ -347,12 +335,27 @@ def _minhash_band_keys_udf():
     # posexplode Generate downstream infers `size(band_keys) > 0 AND
     # isnotnull(band_keys)` and pushes it below the projection by
     # RE-EVALUATING the UDF (two ArrowEvalPython nodes for one call —
-    # the whole 32-perm MinHash ran twice per doc in minhash_bands,
-    # sigstore.band_keys and incremental_snapshot_dedup; optimization
-    # guide §4.4). The function itself is md5-deterministic, so retry
-    # semantics are unchanged; the flag only forbids the optimizer from
-    # copying or reordering the call.
+    # the whole 32-perm MinHash ran twice per doc in minhash_bands and
+    # band_keys; optimization guide §4.4). The function itself is
+    # md5-deterministic, so retry semantics are unchanged; the flag only
+    # forbids the optimizer from copying or reordering the call.
     return mhb.asNondeterministic()
+
+
+def band_keys(docs, key_col: str = "doc_id", text_col: str = "text"):
+    """(key_col, band, band_key) — one row per document per band: the
+    one band-key explode of ``incremental_snapshot_dedup`` and the
+    signature store (engine/sigstore.py).
+
+    The band-key UDF is ``asNondeterministic`` (above), and so is this
+    projection: Catalyst will not push a filter on its output below the
+    explode. That is on purpose, since it stops the optimizer from
+    evaluating the sketch twice; filter the input documents instead."""
+    mhb = _minhash_band_keys_udf()
+    return docs.select(
+        F.col(key_col),
+        F.posexplode(mhb(F.col(text_col))).alias("band", "band_key"),
+    )
 
 
 def _minhash_band_groups(spark, sf_dir):
@@ -438,7 +441,7 @@ def _simhash_udf():
 
 
 def q_simhash(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     sh = _simhash_udf()
     return (
         d.where(F.col("doc_id") < 50)
@@ -466,7 +469,7 @@ def q_simhash_neardup_pairs(spark, sf_dir):
     """
     def fingerprints():
         sh = _simhash_udf()
-        d = _docs(spark, sf_dir).select("doc_id", "text")
+        d = base_table(spark, sf_dir, "documents").select("doc_id", "text")
         pert = d.select(
             (F.col("doc_id") + 100000).alias("doc_id"),
             F.concat("text", F.lit(_NEARDUP_SUFFIX)).alias("text"),
@@ -517,7 +520,7 @@ def q_minhash_verified_pairs(spark, sf_dir):
         .where(F.col("doc_a") < F.col("doc_b"))
         .distinct()
     )
-    d = _docs(spark, sf_dir).select(
+    d = base_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_distinct(F.split(F.trim(F.col("text")), r"\s+")).alias("toks"),
     )
@@ -556,17 +559,13 @@ def q_incremental_snapshot_dedup(spark, sf_dir):
     doc computed in one map-only vectorized UDF pass; the store probe is
     an equi-join on (band, band_key) — bucket the store on that key at
     100 TB and the probe co-locates; no all-pairs join anywhere."""
-    d = _docs(spark, sf_dir)
-
-    def band_keys():
-        mhb = _minhash_band_keys_udf()
-        return spread_table(spark, sf_dir, "documents", "doc_id", "text").select(
-            "doc_id",
-            F.posexplode(mhb(F.col("text"))).alias("band", "band_key"),
-        ).persist()        # sketch ONCE; store/new/self-join all reuse it
+    d = base_table(spark, sf_dir, "documents")
 
     keys = memo.get_or_build(
-        spark, ("similarity", sf_dir, "incr_band_keys"), band_keys)
+        spark, ("similarity", sf_dir, "incr_band_keys"),
+        # sketch ONCE; store/new/self-join all reuse it
+        lambda: band_keys(spread_table(spark, sf_dir, "documents",
+                                       "doc_id", "text")).persist())
     store = (keys.where(F.col("doc_id") % 2 == 0)
              .select("band", "band_key").distinct())
     new = keys.where(F.col("doc_id") % 2 == 1)

@@ -103,6 +103,26 @@ def spread(df: DataFrame, n_source: int | None = None,
     return df
 
 
+def oracle_sf_rows(name: str, cols: str,
+                   clauses: str = "") -> tuple[str, list[tuple]]:
+    """``(sf_dir, rows)`` of ``SELECT <cols> FROM <name> <clauses>`` run
+    by DuckDB over one parquet table of the oracle SF — the read every
+    oracle that bakes data-derived literals (BPE counts, LM models,
+    k-means centroids) learns them from. The SF is
+    ``SPARK_GRAFT_ORACLE_SF`` (default sf0.01), read at call time: a
+    harness comparing at another SF sets it before materializing the
+    oracles, since the Spark side learns from the sf_dir it is run
+    at."""
+    import duckdb
+
+    sf = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
+    with duckdb.connect() as con:
+        rows = con.execute(
+            f"SELECT {cols} FROM read_parquet('{sf}/{name}.parquet') "
+            f"{clauses}").fetchall()
+    return sf, rows
+
+
 def source_bytes(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Memoized on-disk size of a driver table (the spread threshold
     input). File size, not a Spark statistic: the driver tables are

@@ -24,20 +24,16 @@
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from martial_arts_ocr_spark.queries.tables import base_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str):
-    return base_table(spark, sf_dir, name)
-
-
 # --- as-of join: click → most recent prior purchase of the same user ---------
 
 def q_events_asof_purchase(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events").select(
+    ev = base_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
     w = (
@@ -95,7 +91,7 @@ FROM enriched WHERE event_type = 'click' ORDER BY event_id
 # --- exact per-language length percentiles ------------------------------------
 
 def q_doc_length_percentiles(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = base_table(spark, sf_dir, "documents")
     return (
         docs.groupBy("lang")
         .agg(

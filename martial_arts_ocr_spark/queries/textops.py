@@ -14,14 +14,9 @@ from __future__ import annotations
 import pandas as pd    # module-level: pandas_udf resolves the stringified
 # 'pd.Series' annotations in the defining function's GLOBAL namespace
 # (a local `import pandas as pd` fails with UNSUPPORTED_SIGNATURE)
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from martial_arts_ocr_spark.queries.tables import base_table
-
-
-def _docs(spark: SparkSession, sf_dir: str):
-    return base_table(spark, sf_dir, "documents")
+from martial_arts_ocr_spark.queries.tables import base_table, oracle_sf_rows
 
 
 # --- per-language token/char statistics (A6 corpus rollup) --------------------
@@ -30,7 +25,7 @@ def q_doc_stats_by_lang(spark, sf_dir):
     # spread() A/B: +0.05 s at sf0.1, -0.15 s at 10x — inside noise both
     # ways; left unspread (the tokenize feeds a partial agg that fuses
     # with the scan, and the shuffle would carry the full text column).
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     return (
         d.groupBy("lang")
@@ -56,7 +51,7 @@ FROM documents GROUP BY lang ORDER BY lang
 # --- exact dedup via content hash (O1 cross-corpus analogue) -------------------
 
 def q_exact_dup_groups(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     return (
         d.select(F.md5(F.col("text")).alias("content_hash"))
         .groupBy("content_hash")
@@ -75,7 +70,7 @@ FROM documents GROUP BY 1 HAVING count(*) > 1 ORDER BY 1
 def q_dedup_survivors(spark, sf_dir):
     """Exact dedup keeping min doc_id per content hash — the scalable
     pattern (hash → groupBy → min) rather than dropDuplicates on text."""
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     return (
         d.select(F.md5("text").alias("content_hash"), "doc_id")
         .groupBy("content_hash")
@@ -94,7 +89,7 @@ FROM documents GROUP BY md5(text) ORDER BY keep_doc_id
 # --- document fingerprints (md5; L-like fingerprint op) ------------------------
 
 def q_fingerprints(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     return (
         d.where(F.col("n_chars") > 400)
         .select("doc_id", F.md5("text").alias("fingerprint"))
@@ -111,7 +106,7 @@ WHERE n_chars > 400 ORDER BY doc_id
 # --- quality scoring (A5 staircase as Column algebra) ---------------------------
 
 def q_quality_buckets(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     n_chars = F.length("text")
     tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     avg_word = n_chars / tokens
@@ -162,7 +157,7 @@ def q_langid_heuristic(spark, sf_dir):
     # spread() measured a REGRESSION here at sf0.1 (0.25 -> 0.37 s best,
     # interleaved A/B) and flat at 10x: the 4-marker occurrence count is
     # codegen'd string work cheaper than shuffling the text column.
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     col = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
     counts = [_occurrences(col, m).alias(f"n_{m}") for m, _ in _MARKERS]
     scored = d.select("doc_id", "lang", *counts)
@@ -204,7 +199,7 @@ FROM pred GROUP BY 1, 2 ORDER BY 1, 2
 # --- token totals per source (token-counting op) ---------------------------------
 
 def q_tokens_by_source(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     tokens = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
     return (
         d.groupBy("source")
@@ -262,7 +257,7 @@ def q_bpe_token_counts(spark, sf_dir):
     # fragments: 32 small batches re-hash shared vocabulary that one
     # scan-fused batch stream memoizes once) vs 1.09 -> 0.60 s at 10x.
     # Left unspread: the memo effect dominates until per-doc work does.
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     bc = _bpe_count_udf()
     counted = d.select("lang", bc(F.col("text")).alias("n_tokens"))
     return (
@@ -278,26 +273,15 @@ def q_bpe_token_counts(spark, sf_dir):
 
 def baked_bpe_count_values() -> tuple[str, str]:
     """(sf_dir, VALUES body) of per-doc 1k-table BPE counts from the
-    pure-Python mirror over the gate parquet — shared by the bpe_token_counts
-    oracle here and the packed_sequences oracle (queries/corpus.py). Same
-    env coupling as neardup._oracle_ivf: comparing at any SF other than
-    sf0.01 requires SPARK_GRAFT_ORACLE_SF. The word memo is deterministic
-    (same counts with or without it)."""
-    import os
-
-    import duckdb
-
+    pure-Python mirror over the oracle SF's documents (read by
+    ``tables.oracle_sf_rows``) — shared by the bpe_token_counts oracle
+    here and the packed_sequences oracle (queries/corpus.py). The word
+    memo is deterministic (same counts with or without it)."""
     from .. import bpe
 
     from ..bpe_merges_1k import BPE_MERGES_1K
 
-    sf = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT doc_id, text FROM read_parquet('{sf}/documents.parquet') "
-        f"ORDER BY doc_id"
-    ).fetchall()
-    con.close()
+    sf, rows = oracle_sf_rows("documents", "doc_id, text", "ORDER BY doc_id")
     ranks = bpe.merge_ranks(BPE_MERGES_1K)
     cache: dict = {}
     vals = ", ".join(
@@ -326,7 +310,7 @@ GROUP BY d.lang ORDER BY d.lang
 # --- punctuation-ratio text confidence (T17 analogue) -----------------------------
 
 def q_punct_ratio(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     n_punct = F.length(F.regexp_replace(F.col("text"), r"[^.,;:!?]", ""))
     ratio = F.round(n_punct / F.length("text"), 4)
     return (
@@ -359,7 +343,7 @@ _PHONE_RE = "\\+1-555-[0-9]{4}"
 
 
 def q_pii_redact(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = base_table(spark, sf_dir, "documents")
     injected = F.col("text")
     for j in (1, 2):          # doc_id % 3 ∈ {0,1,2} → 0-2 injected emails
         injected = F.concat(
@@ -507,7 +491,8 @@ def q_url_canonical_dups(spark, sf_dir):
     onto one canonical url; variant 3 keeps its non-tracking ?ref= param
     and stays distinct. Output: canonical url, how many raw fetches and
     distinct raw spellings collapsed onto it, and the survivor doc_id."""
-    d = _docs(spark, sf_dir).select("doc_id", _injected_url_expr().alias("url"))
+    d = base_table(spark, sf_dir, "documents").select(
+        "doc_id", _injected_url_expr().alias("url"))
     return (
         d.select("doc_id", "url", canonical_url_expr(F.col("url"))
                  .alias("canonical_url"))

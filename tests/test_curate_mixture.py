@@ -177,3 +177,43 @@ def test_mixture_grid_degenerate_corpora(spark):
     # and one doc below the bound still produces a grid
     grid = _grid_from_per_src([("big", 2**31 - 1, 10**6)], epoch_docs=10)
     assert grid == [("big", 2**31 - 1, 100000, 10)]
+
+
+def test_mixture_epoch_stream_all_null_source(spark, tmp_path, monkeypatch):
+    """mixture_epoch_stream over a source whose texts are all NULL: the
+    source reads quota 0, n_target 0 and docs_sampled 0, and the rows
+    equal the oracle's. The window form's own quota loop used to raise a
+    TypeError on the source's NULL token mass, and the oracle's baked BPE
+    counting raised one on its NULL texts."""
+    import duckdb
+
+    from martial_arts_ocr_spark.queries.corpus import (
+        _oracle_mixture_epoch_stream, q_mixture_epoch_stream)
+    from oracle_check import canon
+
+    docs = f"{tmp_path}/documents.parquet"
+    con = duckdb.connect()
+    con.execute(f"""
+        COPY (
+          SELECT * FROM (SELECT * FROM read_parquet('{SF}/documents.parquet')
+                         ORDER BY doc_id LIMIT 50)
+          UNION ALL
+          SELECT * FROM (VALUES (1000001, NULL, 'en', 'all-null', 0),
+                                (1000002, NULL, 'en', 'all-null', 0),
+                                (1000003, NULL, 'en', 'all-null', 0))
+            t(doc_id, text, lang, source, n_chars)
+        ) TO '{docs}' (FORMAT PARQUET)""")
+    df = q_mixture_epoch_stream(spark, str(tmp_path))
+    got = [tuple(r) for r in df.collect()]
+
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{docs}')")
+    # the oracle bakes its BPE counts from the SF this variable names
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF", str(tmp_path))
+    expected = con.execute(_oracle_mixture_epoch_stream()).fetchall()
+    con.close()
+    assert canon(got, df.columns) == canon(expected, df.columns)
+    null_rows = [r for r in got if r[1] == "all-null"]
+    assert len(null_rows) == N_EPOCHS
+    assert all(r[2:5] == (0, 0, 0) for r in null_rows), null_rows
+    assert any(r[4] > 0 for r in got), got    # live sources still draw

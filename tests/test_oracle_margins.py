@@ -173,28 +173,6 @@ def test_mix_weight_margins(sf):
 
 
 @pytest.mark.parametrize("sf", SFS)
-def test_mixture_quota_numerator_bound(sf):
-    """ADVICE r7 item 1: mixture_epoch_stream's quota uses identical-
-    operand DOUBLE division (Python true division vs DuckDB DOUBLE cast),
-    which is exact only while the numerator sqrt_micro·SCALE < 2^53 —
-    beyond that the two engines' floors can split by 1. Pin the bound at
-    every shipped SF (the threshold sibling uses integer ``//`` on both
-    engines and has no such bound)."""
-    from martial_arts_ocr_spark.queries.corpus import _MIX_QUOTA_SCALE
-
-    con = duckdb.connect()
-    rows = con.execute(
-        "SELECT sum(len(regexp_split_to_array(trim(text), '\\s+')))"
-        f" FROM read_parquet('/root/testdata/{sf}/documents.parquet')"
-        " GROUP BY source"
-    ).fetchall()
-    con.close()
-    for (tokens,) in rows:
-        sqrt_micro = int(np.floor(np.sqrt(float(tokens)) * 1e6))
-        assert sqrt_micro * _MIX_QUOTA_SCALE < 2 ** 53, sf
-
-
-@pytest.mark.parametrize("sf", SFS)
 def test_emb_classifier_score_margins(sf):
     """embedding_quality_scores rounds the affine score to 6 decimals and
     buckets at 0.05/-0.45 — audit (a) no raw score near a round-6 half
