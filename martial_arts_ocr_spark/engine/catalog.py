@@ -23,6 +23,9 @@ rename, and this module holds each kind:
 * ``replace_dir`` (and ``swap_buckets`` on top of it) moves a finished
   tmp dir over a dir; the checkpoint row or snapshot written after it is
   the commit point, and a re-run replaces identical bytes;
+* ``commit_stage`` writes a run's once-per-key stage (``run_dir``) into
+  its tmp dir, moves it in by ``replace_dir`` and appends the stage's
+  snapshot entry, the commit point; a logged stage is skipped;
 * ``staging_dir`` then ``swap_in`` commit a new generation of a whole
   table or of one bucket dir: stage it in the table's scratch area, then
   old -> trash, tmp -> dst, drop trash. A crash before the first rename
@@ -211,6 +214,31 @@ def replace_dir(src: str, dst: str) -> None:
         shutil.rmtree(dst)
     os.makedirs(os.path.dirname(dst), exist_ok=True)
     os.replace(src, dst)
+
+
+def run_dir(root: str, table: str, run_id: str, **key) -> str:
+    """``<table>/run_id=<id>`` with one ``<k>=<v>`` dir per key field."""
+    return os.path.join(table_path(root, table), f"run_id={run_id}",
+                        *(f"{k}={v}" for k, v in key.items()))
+
+
+def commit_stage(root: str, log: WaveLog, table: str, run_id: str,
+                 stage: str, write, **key) -> None:
+    """Commit one write-once stage of ``run_id`` at ``run_dir(root, table,
+    run_id, **key)``, unless its snapshot entry is already logged.
+    ``write(tmp)`` fills the stage's tmp dir and may return extra snapshot
+    fields; the dir is moved in, then ``{run_id, stage, **key, **extra}``
+    is appended to ``table``'s log, the commit point. A crash before the
+    append re-runs the stage over the same bytes."""
+    if any(all(s.get(k) == v for k, v in key.items())
+           for s in run_snapshots(root, table, run_id, stage)):
+        return
+    tmp = tmp_dir(root, log, run_id,
+                  "_".join([stage, *map(str, key.values())]))
+    extra = write(tmp) or {}
+    replace_dir(tmp, run_dir(root, table, run_id, **key))
+    append_snapshot(root, table,
+                    {"run_id": run_id, "stage": stage, **key, **extra})
 
 
 def swap_buckets(log: WaveLog, tmp: str, dest: str, buckets: list) -> None:

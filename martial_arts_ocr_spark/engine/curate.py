@@ -1,30 +1,25 @@
 """Resumable end-to-end curation runner: gates -> kept set -> tokenize-
-and-pack, with per-bucket checkpoints — the corpus-level counterpart of
-the page-extraction runner (resume.py; reference parity: the reference's
-persistence/status surface, src/martial_arts_ocr/db/models.py, re-shaped
-for a training-data pipeline).
+and-pack -> epoch order, with per-bucket checkpoints — the corpus-level
+counterpart of the page-extraction runner (resume.py; reference parity:
+the reference's persistence/status surface,
+src/martial_arts_ocr/db/models.py, re-shaped for a training-data
+pipeline).
 
-Stages:
+Every write-once stage below is one ``catalog.commit_stage`` at its
+``catalog.run_dir``: a resume that finds the stage's snapshot skips it.
 
 1. **Gate stage** — the seven-gate keep-set (queries/corpus.py:
    q_corpus_keep_set — Gopher + LM + exact-dup survivorship + near-dup
    cluster survivorship + semantic-dup (SemDeDup) survivorship +
-   decontamination + embedding classifier) is
-   materialized once per run under ``curation_flags/run_id=<id>`` and
-   snapshot-logged; a resume that finds the snapshot skips the whole
-   stage.
-2. **Kept stage** — the kept documents (doc_id, text) are materialized
-   ONCE, partitioned by pack bucket (``kept_docs/run_id=<id>/bucket=K``)
-   — one shuffle, one corpus pass. This is what makes the wave loop
-   below scale: each wave reads ONLY its own ``bucket=K`` dirs (true
-   partition pruning at the filesystem level — O(wave) listing), where
-   the round-6 shape filtered the full corpus by an md5-derived
-   EXPRESSION per wave: no pruning, so packing N buckets in waves of B
-   cost O(N/B) full corpus scans — hundreds of petabytes of redundant
-   read at the docstring's own "tens of thousands of buckets" scale
-   (round-6 VERDICT, What's wrong #1). Idempotent overwrite +
-   snapshot-after, same as the gate stage.
-3. **Pack stage** — kept documents are packed per content-hash bucket
+   decontamination + embedding classifier) under
+   ``curation_flags/run_id=<id>``; then the kept documents (doc_id,
+   text) partitioned by pack bucket under
+   ``kept_docs/run_id=<id>/bucket=K`` — one shuffle, one corpus pass.
+   Each pack wave then reads ONLY its own ``bucket=K`` dirs: partition
+   pruning at the filesystem level, O(wave) listing. Filtering the whole
+   corpus by a hash expression per wave prunes nothing, so packing N
+   buckets in waves of B would cost N/B full corpus scans.
+2. **Pack stage** — kept documents are packed per content-hash bucket
    (packing.py: bucket is the unit of parallelism AND determinism) in
    waves of ``batch_size`` buckets, each committed through the
    exactly-once wave protocol in ``catalog.py`` (tmp write, bucket-dir
@@ -35,12 +30,10 @@ Stages:
    boundaries (pinned in tests/test_curate_runner.py). Raw file bytes
    are not: parquet-mr writes each column chunk's encoding set into the
    footer in hash order, which differs between JVM processes.
-
-4. **Epoch stage** — once packing completes, one shard/order table per
+3. **Epoch stage** — once packing completes, one shard/order table per
    epoch (``epoch_order/run_id=<id>/epoch=E/bucket=K``), derived by
    packing.epoch_order_frame (the definition the oracled
-   packed_epoch_order query pins); per-epoch snapshots are the resume
-   unit.
+   packed_epoch_order query pins); each epoch is one stage commit.
 
 Design note — pack ONCE, shuffle per epoch: the runner fixes the corpus
 composition at the gate stage and varies only the ORDER across epochs
@@ -48,26 +41,26 @@ composition at the gate stage and varies only the ORDER across epochs
 corpus E times for no training benefit). Composition control across
 sources is the separate, oracled query surface
 (queries/corpus.py:q_mixture_epoch_stream — temperature-quota sampling
-per epoch); a deployment that wants per-epoch resampling feeds that
-sample as this runner's input corpus per epoch, paying the repack
-deliberately.
+per epoch); mixture mode (run_curate_mixture) draws each epoch's corpus
+that way and pays the repack deliberately.
 
 Config pinning: semantic knobs that shape output (ctx_len, n_buckets,
 merge-table size, n_epochs) are pinned in ``_curate_<run_id>.json``;
-resuming with different values is refused (round-5 lesson: pin every
-knob that shapes restart-stable ids). batch_size is deliberately NOT
-pinned — wave composition cannot reach the per-bucket pure packer.
+resuming with different values is refused, because every restart-stable
+id depends on them. batch_size is deliberately NOT pinned — wave
+composition cannot reach the per-bucket pure packer.
 """
 
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import catalog
 from .schema import MIX_CHECKPOINT_SCHEMA, PACK_CHECKPOINT_SCHEMA
-from ..packing import CTX_LEN, N_BUCKETS, epoch_order_frame, \
+from ..packing import CTX_LEN, N_BUCKETS, N_EPOCHS, epoch_order_frame, \
     pack_token_sequences, content_hash_col, pack_bucket_col
 
 CURATION_TABLE = "curation_flags"
@@ -75,7 +68,6 @@ KEPT_TABLE = "kept_docs"
 PACKED_TABLE = "packed_sequences"
 PACKED_CKPT_TABLE = "packed_checkpoints"
 EPOCH_TABLE = "epoch_order"
-N_EPOCHS = 2          # default matches queries/corpus.py _N_EPOCHS
 
 MIXTURE_DOCS_TABLE = "mixture_docs"
 MIXTURE_PACKED_TABLE = "mixture_packed"
@@ -90,22 +82,16 @@ _MIX = _PACK._replace(table=MIXTURE_PACKED_TABLE,
                       checkpoints=MIXTURE_CKPT_TABLE,
                       schema=MIX_CHECKPOINT_SCHEMA)
 
-# explicit schemas for resume-path reads (ADVICE r6: an all-empty-bucket
-# table has no file to infer from)
+# explicit schemas for resume-path reads: an all-empty-bucket table has no
+# file to infer from
 _PACKED_SCHEMA = ("seq_in_bucket bigint, n_docs_in_seq bigint, "
                   "n_tokens bigint, fill_ratio double, "
                   "token_ids array<bigint>, run_id string, bucket bigint")
-
-
-def _kept_shuffle_width(spark: SparkSession, n_buckets: int) -> int:
-    """Shuffle width for the bucket-partitioned kept-docs write: 4× the
-    bucket count for balls-into-bins balance, capped at 16× the cluster
-    parallelism (ADVICE r7: 4×10,000s of buckets would mean ~100k+
-    shuffle partitions for one write — driver/shuffle-tracker stress with
-    no extra pruning benefit; the partitionBy layout is per-bucket either
-    way). At the shipped n_buckets=8 the cap never binds."""
-    cap = max(64, 16 * spark.sparkContext.defaultParallelism)
-    return min(4 * n_buckets, cap)
+_KEPT_SCHEMA = "doc_id bigint, text string"
+_SAMPLED_SCHEMA = "doc_id bigint, source string, text string"
+_ORDER_SCHEMA = ("pos_in_bucket bigint, seq_in_bucket bigint, "
+                 "shuffle_key string, bucket bigint")
+_EPOCH_SCHEMA = "epoch bigint, " + _ORDER_SCHEMA
 
 
 def _pin_config(root: str, run_id: str, cfg: dict) -> None:
@@ -116,17 +102,18 @@ def _pin_config(root: str, run_id: str, cfg: dict) -> None:
             f"got {cfg} — packed output would not be comparable")
 
 
-def _flags_path(root: str, run_id: str) -> str:
-    return os.path.join(catalog.table_path(root, CURATION_TABLE),
-                        f"run_id={run_id}")
-
-
-_KEPT_SCHEMA = "doc_id bigint, text string"
-
-
-def _kept_path(root: str, run_id: str) -> str:
-    return os.path.join(catalog.table_path(root, KEPT_TABLE),
-                        f"run_id={run_id}")
+def _read_pinned(spark: SparkSession, path: str, schema: str,
+                 progress: str, base: str | None = None) -> DataFrame:
+    """Schema-pinned read of ``path``, partition columns taken below
+    ``base`` (default ``path``). A missing ``path`` raises a
+    FileNotFoundError naming the resume-progress surface ``progress``
+    instead of Spark's raw path-not-found AnalysisException."""
+    if not os.path.isdir(path):
+        raise FileNotFoundError(
+            f"{path} is not materialized (see {progress} for what has "
+            "committed)")
+    return (spark.read.schema(schema).option("basePath", base or path)
+            .parquet(path))
 
 
 def _read_bucket_dirs(spark: SparkSession, base: str, buckets: list[int],
@@ -135,8 +122,8 @@ def _read_bucket_dirs(spark: SparkSession, base: str, buckets: list[int],
     reads ONLY the named ``bucket=K`` dirs (never lists the others — at
     tens of thousands of buckets that is the difference between O(wave)
     and O(corpus) IO per wave). Empty buckets have no dir (partitionBy
-    writes none, r7 gotcha) and contribute no rows; when NONE exist the
-    frame is schema-pinned empty (ADVICE r6)."""
+    writes none) and contribute no rows; when NONE exist the frame is
+    schema-pinned empty."""
     dirs = [os.path.join(base, f"bucket={int(b)}") for b in buckets]
     dirs = [d for d in dirs if os.path.isdir(d)]
     if not dirs:
@@ -150,17 +137,8 @@ def read_kept_buckets(spark: SparkSession, root: str, run_id: str,
                       buckets: list[int]) -> DataFrame:
     """Read ONLY the given buckets' partition dirs of the kept-docs table
     (see _read_bucket_dirs for the pruning contract)."""
-    return _read_bucket_dirs(spark, _kept_path(root, run_id), buckets,
-                             _KEPT_SCHEMA, ["doc_id", "text"])
-
-
-_EPOCH_SCHEMA = ("epoch bigint, pos_in_bucket bigint, seq_in_bucket bigint, "
-                 "shuffle_key string, bucket bigint")
-
-
-def _epoch_path(root: str, run_id: str) -> str:
-    return os.path.join(catalog.table_path(root, EPOCH_TABLE),
-                        f"run_id={run_id}")
+    return _read_bucket_dirs(spark, catalog.run_dir(root, KEPT_TABLE, run_id),
+                             buckets, _KEPT_SCHEMA, ["doc_id", "text"])
 
 
 def _snapshot_epochs(root: str, table: str, run_id: str,
@@ -178,37 +156,21 @@ def completed_epochs(root: str, run_id: str) -> set[int]:
 def read_epoch_order(spark: SparkSession, root: str, run_id: str,
                      epoch: int) -> DataFrame:
     """One epoch's shard/order table: a training reader seeks shard
-    ``bucket``, position ``pos_in_bucket``. Schema pinned (same ADVICE-r6
-    rationale as read_packed)."""
-    base = _epoch_path(root, run_id)
-    path = os.path.join(base, f"epoch={epoch}")
-    if not os.path.isdir(path):
-        # ADVICE r7: a raw path-not-found AnalysisException here is the
-        # one resume-path reader that didn't follow the convention —
-        # name the run and point at the resume-progress surface instead
-        raise FileNotFoundError(
-            f"epoch {epoch} not materialized for run_id {run_id} under "
-            f"{base} (see completed_epochs(root, run_id) for what the "
-            "epoch stage has committed)")
-    # epoch arrives as a partition column from the epoch=E dir under
-    # basePath (pinned bigint by the schema) — no re-derivation needed
-    return (spark.read.schema(_EPOCH_SCHEMA)
-            .option("basePath", base)
-            .parquet(path))
+    ``bucket``, position ``pos_in_bucket``. ``epoch`` arrives as the
+    partition column of the epoch=E dir."""
+    return _read_pinned(
+        spark, catalog.run_dir(root, EPOCH_TABLE, run_id, epoch=epoch),
+        _EPOCH_SCHEMA, "completed_epochs(root, run_id)",
+        base=catalog.run_dir(root, EPOCH_TABLE, run_id))
 
 
 def read_epoch_stream(spark: SparkSession, root: str, run_id: str,
                       epoch: int) -> DataFrame:
-    """THE READER CONTRACT SURFACE — the piece a training loop imports
-    (r7 VERDICT item 9): one epoch's order table joined back to the
-    packed token arrays — (bucket, pos_in_bucket, seq_in_bucket,
-    n_tokens, token_ids), one row per training sequence. Keep this join
-    bucket-local as pinned (test_curate_runner): a global sort here
-    would undo the shard contract. A reader iterates shards (buckets) round-robin,
-    each shard in pos_in_bucket order — both tables are bucket-
-    partitioned on disk, so the join co-locates per shard and a reader
-    pulling one shard touches exactly two bucket=K dirs. No global sort
-    anywhere (the shard contract — see epoch_order_frame)."""
+    """THE READER CONTRACT SURFACE — the piece a training loop imports:
+    one epoch's order table joined back to the packed token arrays —
+    (bucket, pos_in_bucket, seq_in_bucket, n_tokens, token_ids), one row
+    per training sequence. A reader iterates shards (buckets)
+    round-robin, each shard in pos_in_bucket order."""
     return _order_join_packed(read_epoch_order(spark, root, run_id, epoch),
                               read_packed(spark, root))
 
@@ -216,27 +178,21 @@ def read_epoch_stream(spark: SparkSession, root: str, run_id: str,
 def _order_join_packed(order: DataFrame, packed: DataFrame) -> DataFrame:
     """The reader-contract join shared by both epoch-stream surfaces:
     bucket-local (both tables are bucket-partitioned on disk, so the join
-    co-locates per shard), NO global sort — the shard contract."""
+    co-locates per shard and a reader pulling one shard touches exactly
+    two bucket=K dirs), NO global sort — a global sort here would undo
+    the shard contract (see epoch_order_frame)."""
     return (order.select("bucket", "pos_in_bucket", "seq_in_bucket")
             .join(packed.select("bucket", "seq_in_bucket",
                                 "n_tokens", "token_ids"),
                   ["bucket", "seq_in_bucket"]))
 
 
-def _ensure_flags(spark: SparkSession, docs_dir: str, root: str,
-                  run_id: str) -> DataFrame:
-    """Stage 1: the seven-gate keep-set flags, materialized once per run
-    (snapshot-committed; a resume that finds the snapshot skips the
-    stage)."""
-    from ..queries.corpus import q_corpus_keep_set
-
-    fpath = _flags_path(root, run_id)
-    if not catalog.run_snapshots(root, CURATION_TABLE, run_id, "flags"):
-        flags = q_corpus_keep_set(spark, docs_dir)
-        flags.write.mode("overwrite").parquet(fpath)   # idempotent re-run
-        catalog.append_snapshot(root, CURATION_TABLE,
-                                {"run_id": run_id, "stage": "flags"})
-    return spark.read.parquet(fpath)
+def read_packed(spark: SparkSession, root: str) -> DataFrame:
+    """The packed-sequence table (bucket-partitioned; empty buckets are
+    bare dirs with no files and simply contribute no rows)."""
+    return _read_pinned(spark, catalog.table_path(root, PACKED_TABLE),
+                        _PACKED_SCHEMA,
+                        "completed_pack_buckets(spark, root, run_id)")
 
 
 def completed_pack_buckets(spark: SparkSession, root: str,
@@ -244,36 +200,74 @@ def completed_pack_buckets(spark: SparkSession, root: str,
     return catalog.completed(spark, root, _PACK, run_id)
 
 
-def _commit_pack_wave(spark: SparkSession, root: str, log: catalog.WaveLog,
-                      run_id: str, buckets: list[int], packed: DataFrame,
-                      dest: str, tag: str, scope: tuple = (),
-                      **meta) -> None:
-    """The pack wave shared by both runners: the packed rows land in a tmp
-    dir partitioned by bucket, then go through catalog's bucket-dir swap
-    and commit."""
-    tmp = catalog.tmp_dir(root, log, run_id, tag)
-    (packed.withColumn("run_id", F.lit(run_id))
-     .repartition(len(buckets), "bucket")
-     .sortWithinPartitions("bucket", "seq_in_bucket")
-     .write.mode("overwrite").partitionBy("bucket").parquet(tmp))
-    catalog.swap_buckets(log, tmp, dest, buckets)
-    catalog.commit_wave(spark, root, log, run_id, buckets, scope, **meta)
+def _ensure_flags(spark: SparkSession, docs_dir: str, root: str,
+                  run_id: str) -> DataFrame:
+    """The seven-gate keep-set flags, one stage commit per run."""
+    from ..queries.corpus import q_corpus_keep_set
+
+    catalog.commit_stage(
+        root, _PACK, CURATION_TABLE, run_id, "flags",
+        lambda tmp: q_corpus_keep_set(spark, docs_dir)
+        .write.mode("overwrite").parquet(tmp))
+    return spark.read.parquet(catalog.run_dir(root, CURATION_TABLE, run_id))
 
 
-def _commit_epoch_order(packed: DataFrame, epoch: int, n_buckets: int,
-                        tmp: str, dst: str) -> None:
-    """The epoch-order stage's atomic commit, shared by both runners:
-    epoch_order_frame for ONE epoch (never all-epochs-then-filter — r7
-    review) -> tmp write bucket-partitioned -> dir swap (idempotent epoch
-    re-run). ``epoch`` is carried by the epoch=E partition dir — keeping
-    it as a data column too would trip partition-column conflict on read
-    (round-5 gotcha)."""
+def _kept_docs(spark: SparkSession, docs_dir: str,
+               flags: DataFrame) -> DataFrame:
+    return spark.read.parquet(f"{docs_dir}/documents.parquet").join(
+        flags.where(F.col("kept")).select("doc_id"), "doc_id")
+
+
+def _write_bucketed(spark: SparkSession, df: DataFrame, cols: list[str],
+                    n_buckets: int, path: str) -> None:
+    """Write ``df``'s ``cols`` partitioned by pack bucket, the layout the
+    wave readers prune. 4× as many shuffle partitions as buckets: hashing
+    K keys into exactly K partitions is balls-into-bins (≈1/e reducers
+    empty, the hottest ≈ln K/ln ln K keys); at 4K the collision rate is
+    negligible and partitionBy still lays files out per bucket, ≤4 files
+    each. The width is capped at 16× the cluster parallelism: at tens of
+    thousands of buckets, uncapped 4K partitions stress driver and
+    shuffle tracking for no pruning gain; past the cap, files per bucket
+    rise instead, which is benign."""
+    width = min(4 * n_buckets,
+                max(64, 16 * spark.sparkContext.defaultParallelism))
+    (df.select(*cols,
+               pack_bucket_col(content_hash_col(), n_buckets).alias("bucket"))
+     .repartition(width, "bucket")
+     .write.mode("overwrite").partitionBy("bucket").parquet(path))
+
+
+def _pack_waves(spark: SparkSession, root: str, log: catalog.WaveLog,
+                run_id: str, waves: list[list[int]], read, dest: str,
+                scope: tuple, meta, ctx_len: int, n_buckets: int) -> None:
+    """Pack each wave's documents ``read(wave)`` and commit the wave: the
+    packed rows land in a tmp dir partitioned by bucket, then go through
+    catalog's bucket-dir swap into ``dest`` and its wave commit, keyed
+    ``(*scope, bucket)`` with snapshot fields ``meta(i)`` for wave i."""
+    for i, wave in enumerate(waves):
+        tmp = catalog.tmp_dir(root, log, run_id,
+                              "_".join(map(str, ("pack", *scope, wave[0]))))
+        (pack_token_sequences(read(wave), ctx_len=ctx_len,
+                              n_buckets=n_buckets)
+         .withColumn("run_id", F.lit(run_id))
+         .repartition(len(wave), "bucket")
+         .sortWithinPartitions("bucket", "seq_in_bucket")
+         .write.mode("overwrite").partitionBy("bucket").parquet(tmp))
+        catalog.swap_buckets(log, tmp, dest, wave)
+        catalog.commit_wave(spark, root, log, run_id, wave, scope, **meta(i))
+
+
+def _write_order(packed: DataFrame, epoch: int, n_buckets: int,
+                 path: str) -> None:
+    """One epoch's shard order, bucket-partitioned: epoch_order_frame for
+    ONE epoch (never all epochs then a filter). ``epoch`` is carried by
+    the epoch=E dir — keeping it as a data column too would trip a
+    partition-column conflict on read."""
     order = epoch_order_frame(
         packed.select("bucket", "seq_in_bucket"), [epoch]).drop("epoch")
     (order.repartition(n_buckets, "bucket")
      .sortWithinPartitions("bucket", "pos_in_bucket")
-     .write.mode("overwrite").partitionBy("bucket").parquet(tmp))
-    catalog.replace_dir(tmp, dst)             # idempotent epoch re-run
+     .write.mode("overwrite").partitionBy("bucket").parquet(path))
 
 
 def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
@@ -297,46 +291,21 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
         "n_merges": len(BPE_MERGES_1K), "n_epochs": n_epochs,
     })
 
+    # --- stage 1: keep-set flags, then the kept docs by bucket ------------
     flags = _ensure_flags(spark, docs_dir, root, run_id)
-
-    # --- stage 1.5: kept docs, bucket-partitioned, once per run -----------
-    # One corpus pass + one shuffle here buys true partition pruning for
-    # every pack wave below (round-6 VERDICT What's wrong #1: the old
-    # per-wave isin() filter on an md5-derived EXPRESSION rescanned the
-    # FULL corpus once per wave — O(n_buckets/batch_size) corpus passes).
-    kpath = _kept_path(root, run_id)
-    if not catalog.run_snapshots(root, KEPT_TABLE, run_id, "kept"):
-        docs = spark.read.parquet(f"{docs_dir}/documents.parquet")
-        kept = docs.join(flags.where(F.col("kept")).select("doc_id"),
-                         "doc_id")
-        # 4× partitions for n_buckets distinct keys: hashing K keys into
-        # exactly K partitions is balls-into-bins (≈1/e reducers empty,
-        # hottest ≈ln K/ln ln K keys — the r3/r4 skew lesson); at 4K the
-        # collision rate is negligible and partitionBy still lays files
-        # out per bucket, ≤4 files each (r7 review). Width capped (ADVICE
-        # r7): at tens of thousands of buckets, uncapped 4K partitions
-        # stress driver/shuffle tracking before the pruning win matters —
-        # past the cap, files-per-bucket rises instead, which is benign
-        (kept.select(
-            "doc_id", "text",
-            pack_bucket_col(content_hash_col(), n_buckets).alias("bucket"))
-         .repartition(_kept_shuffle_width(spark, n_buckets), "bucket")
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(kpath))                   # idempotent re-run
-        catalog.append_snapshot(root, KEPT_TABLE,
-                                {"run_id": run_id, "stage": "kept"})
+    catalog.commit_stage(
+        root, _PACK, KEPT_TABLE, run_id, "kept",
+        lambda tmp: _write_bucketed(spark, _kept_docs(spark, docs_dir, flags),
+                                    ["doc_id", "text"], n_buckets, tmp))
 
     # --- stage 2: pack kept docs per bucket, waves with checkpoints -------
     done = completed_pack_buckets(spark, root, run_id)
-    remaining = [b for b in range(n_buckets) if b not in done]
-    packed_path = catalog.table_path(root, PACKED_TABLE)
-    for wave_no, wave in enumerate(
-            catalog.waves(remaining, batch_size, max_waves)):
-        sub = read_kept_buckets(spark, root, run_id, wave)
-        packed = pack_token_sequences(sub, ctx_len=ctx_len,
-                                      n_buckets=n_buckets)
-        _commit_pack_wave(spark, root, _PACK, run_id, wave, packed,
-                          packed_path, f"pack_{wave[0]}", wave=wave_no)
+    _pack_waves(spark, root, _PACK, run_id,
+                catalog.waves([b for b in range(n_buckets) if b not in done],
+                              batch_size, max_waves),
+                partial(read_kept_buckets, spark, root, run_id),
+                catalog.table_path(root, PACKED_TABLE), (),
+                lambda i: {"wave": i}, ctx_len, n_buckets)
 
     done_after = completed_pack_buckets(spark, root, run_id)
     summary = {
@@ -354,77 +323,34 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
         summary["n_seqs"] = int(agg["n_seqs"] or 0)
         summary["n_tokens"] = int(agg["n_tokens"] or 0)
 
-        # --- stage 3: epoch-shuffle artifact, per-epoch checkpoints -------
-        # The durable shard/order table a training reader consumes
-        # (round-6 VERDICT What's missing #3): one epoch=E dir per epoch,
-        # bucket-partitioned inside, derived by the SAME epoch_order_frame
-        # the oracled packed_epoch_order query uses. Epochs are the resume
-        # unit: tmp write -> atomic dir swap -> snapshot (commit point);
-        # a crash between swap and snapshot re-runs the epoch
-        # idempotently. Runs only once packing is complete (the order of
-        # a shard is a function of the FULL packed table).
+        # --- stage 3: epoch order, one stage commit per epoch -------------
+        # Runs only once packing is complete: a shard's order is a
+        # function of the FULL packed table.
         done_epochs = completed_epochs(root, run_id)
-        todo = [e for e in range(n_epochs) if e not in done_epochs]
-        if max_epochs is not None:
-            todo = todo[:max_epochs]
-        edir = _epoch_path(root, run_id)
-        for e in todo:
-            _commit_epoch_order(packed, e, n_buckets,
-                                catalog.tmp_dir(root, _PACK, run_id,
-                                                f"epoch_{e}"),
-                                os.path.join(edir, f"epoch={e}"))
-            catalog.append_snapshot(root, EPOCH_TABLE,
-                                    {"run_id": run_id, "stage": "epoch",
-                                     "epoch": int(e)})
+        for e in [e for e in range(n_epochs)
+                  if e not in done_epochs][:max_epochs]:
+            catalog.commit_stage(root, _PACK, EPOCH_TABLE, run_id, "epoch",
+                                 partial(_write_order, packed, e, n_buckets),
+                                 epoch=e)
         summary["epochs_total"] = n_epochs
         summary["epochs_completed"] = len(completed_epochs(root, run_id))
         summary["epochs_complete"] = summary["epochs_completed"] == n_epochs
     return summary
 
 
-def read_packed(spark: SparkSession, root: str) -> DataFrame:
-    """The packed-sequence table (bucket-partitioned; empty buckets are
-    bare dirs with no files and simply contribute no rows). Schema is
-    pinned explicitly: an all-empty-bucket table has no file to infer
-    from (ADVICE r6)."""
-    return (spark.read.schema(_PACKED_SCHEMA)
-            .option("basePath", catalog.table_path(root, PACKED_TABLE))
-            .parquet(catalog.table_path(root, PACKED_TABLE)))
-
-
 # --- mixture mode: quota-sampled corpus per epoch -> pack -> order -----------
 #
-# Round-7 VERDICT item 2 ("the runner never consumes the mixture"): this
-# is the last mile wired as ONE runnable pipeline — the temperature-quota
-# THRESHOLD sampler (queries/corpus.py: mixture_threshold_sample, the
-# map-only deployment-scale form) draws each epoch's corpus from the KEPT
-# documents, each epoch's sample is materialized bucket-partitioned,
-# packed per bucket in checkpointed waves, and ordered per shard — the
-# design note at the top of this module calls this "paying the repack
-# deliberately": composition varies per epoch, so pack-once/shuffle-per-
-# epoch cannot apply. Resume units: the per-epoch sample snapshot, the
-# per-(epoch, bucket) pack checkpoints, the per-epoch order snapshot.
-# Decoded rows and parquet data pages are identical across batch_size
-# choices, parallelism levels, and crash/resume boundaries for the same
-# pinned config (tests/test_curate_mixture.py); file footers are not, as
-# in the pack stage above.
-
-_SAMPLED_SCHEMA = "doc_id bigint, source string, text string"
-
-
-def _mix_docs_path(root: str, run_id: str, epoch: int) -> str:
-    return os.path.join(catalog.table_path(root, MIXTURE_DOCS_TABLE),
-                        f"run_id={run_id}", f"epoch={epoch}")
-
-
-def _mix_packed_path(root: str, run_id: str, epoch: int) -> str:
-    return os.path.join(catalog.table_path(root, MIXTURE_PACKED_TABLE),
-                        f"run_id={run_id}", f"epoch={epoch}")
-
-
-def _mix_epoch_path(root: str, run_id: str, epoch: int) -> str:
-    return os.path.join(catalog.table_path(root, MIXTURE_EPOCH_TABLE),
-                        f"run_id={run_id}", f"epoch={epoch}")
+# The temperature-quota THRESHOLD sampler (queries/corpus.py:
+# mixture_threshold_sample, the map-only deployment-scale form) draws each
+# epoch's corpus from the KEPT documents; each epoch's sample is
+# materialized bucket-partitioned, packed per bucket in checkpointed
+# waves, and ordered per shard. Composition varies per epoch, so
+# pack-once/shuffle-per-epoch cannot apply. Resume units: the per-epoch
+# sample stage, the per-(epoch, bucket) pack checkpoints, the per-epoch
+# order stage. Decoded rows and parquet data pages are identical across
+# batch_size choices, parallelism levels, and crash/resume boundaries for
+# the same pinned config (tests/test_curate_mixture.py); file footers are
+# not, as in the pack stage above.
 
 
 def completed_mix_pack(spark: SparkSession, root: str,
@@ -436,24 +362,17 @@ def read_mixture_sampled(spark: SparkSession, root: str, run_id: str,
                          epoch: int, buckets: list[int]) -> DataFrame:
     """Wave reader for one epoch's sampled docs (see _read_bucket_dirs
     for the shared pruning contract)."""
-    return _read_bucket_dirs(spark, _mix_docs_path(root, run_id, epoch),
-                             buckets, _SAMPLED_SCHEMA,
-                             ["doc_id", "source", "text"])
+    return _read_bucket_dirs(
+        spark, catalog.run_dir(root, MIXTURE_DOCS_TABLE, run_id, epoch=epoch),
+        buckets, _SAMPLED_SCHEMA, ["doc_id", "source", "text"])
 
 
 def read_mixture_packed(spark: SparkSession, root: str, run_id: str,
                         epoch: int) -> DataFrame:
-    base = _mix_packed_path(root, run_id, epoch)
-    if not os.path.isdir(base):
-        # resume-path reader convention (ADVICE r7, extended to the
-        # mixture surface): name the run and the progress surface instead
-        # of a raw path-not-found AnalysisException
-        raise FileNotFoundError(
-            f"mixture epoch {epoch} has no packed output for run_id "
-            f"{run_id} under {base} (see completed_mix_pack(spark, root, "
-            "run_id) for which (epoch, bucket) waves have committed)")
-    return (spark.read.schema(_PACKED_SCHEMA)
-            .option("basePath", base).parquet(base))
+    return _read_pinned(
+        spark,
+        catalog.run_dir(root, MIXTURE_PACKED_TABLE, run_id, epoch=epoch),
+        _PACKED_SCHEMA, "completed_mix_pack(spark, root, run_id)")
 
 
 def read_mixture_epoch_stream(spark: SparkSession, root: str, run_id: str,
@@ -462,15 +381,10 @@ def read_mixture_epoch_stream(spark: SparkSession, root: str, run_id: str,
     joined to THAT epoch's packed arrays (each epoch has its own packed
     table here — composition varies). Same bucket-local join shape as
     read_epoch_stream."""
-    base = _mix_epoch_path(root, run_id, epoch)
-    if not os.path.isdir(base):
-        raise FileNotFoundError(
-            f"mixture epoch {epoch} not materialized for run_id {run_id} "
-            f"under {base}")
-    order = (spark.read
-             .schema("pos_in_bucket bigint, seq_in_bucket bigint, "
-                     "shuffle_key string, bucket bigint")
-             .option("basePath", base).parquet(base))
+    order = _read_pinned(
+        spark,
+        catalog.run_dir(root, MIXTURE_EPOCH_TABLE, run_id, epoch=epoch),
+        _ORDER_SCHEMA, "run_curate_mixture's epochs_completed")
     return _order_join_packed(
         order, read_mixture_packed(spark, root, run_id, epoch))
 
@@ -505,13 +419,10 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
         "epoch_docs": epoch_docs, "salt": _MIX_THRESH_SALT,
     })
 
-    flags = _ensure_flags(spark, docs_dir, root, run_id)
-
     # the kept corpus WITH source (the sampler's quota key); the frame is
     # lazy — it only executes for epochs whose sample isn't committed yet
-    docs = spark.read.parquet(f"{docs_dir}/documents.parquet")
-    kept = docs.join(flags.where(F.col("kept")).select("doc_id"), "doc_id") \
-               .select("doc_id", "source", "text")
+    kept = _kept_docs(spark, docs_dir,
+                      _ensure_flags(spark, docs_dir, root, run_id))
 
     # the quota grid is snapshot-cached at first computation: a resume
     # must sample with the SAME grid that shaped the already-committed
@@ -527,86 +438,60 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
                                 {"run_id": run_id, "stage": "mix_grid",
                                  "grid": [list(r) for r in grid]})
 
-    waves_left = max_waves
-    epochs = list(range(n_epochs))
-    if max_epochs is not None:
-        epochs = epochs[:max_epochs]
-    sampled_done = _snapshot_epochs(root, MIXTURE_DOCS_TABLE, run_id,
-                                    "mix_sample")
-    order_done = _snapshot_epochs(root, MIXTURE_EPOCH_TABLE, run_id,
-                                  "mix_epoch")
-    pack_done = completed_mix_pack(spark, root, run_id)
-
-    for e in epochs:
-        # --- sample stage: materialize epoch e's quota-drawn corpus -------
-        spath = _mix_docs_path(root, run_id, e)
-        if e not in sampled_done:
-            samp = mixture_threshold_sample(kept, grid, [e]).drop("epoch")
-            (samp.select(
-                "doc_id", "source", "text",
-                pack_bucket_col(content_hash_col(), n_buckets)
-                .alias("bucket"))
-             .repartition(_kept_shuffle_width(spark, n_buckets), "bucket")
-             .write.mode("overwrite").partitionBy("bucket").parquet(spath))
-            # per-source counts ride IN the snapshot (r8 review): computed
-            # once at commit time from the just-written table, so the
-            # summary below — and every no-op resume/status poll — never
-            # re-scans the sample tables
-            counts = {
-                r["source"]: int(r["n"])
-                for r in read_mixture_sampled(spark, root, run_id, e,
-                                              list(range(n_buckets)))
+    def write_sample(epoch: int, tmp: str) -> dict:
+        _write_bucketed(spark,
+                        mixture_threshold_sample(kept, grid, [epoch]),
+                        ["doc_id", "source", "text"], n_buckets, tmp)
+        # per-source counts ride IN the snapshot: computed once at commit
+        # time from the just-written dir, so the summary below — and
+        # every no-op resume/status poll — never re-scans the samples
+        rows = (_read_bucket_dirs(spark, tmp, list(range(n_buckets)),
+                                  _SAMPLED_SCHEMA, ["source"])
                 .groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-                .collect()}
-            catalog.append_snapshot(root, MIXTURE_DOCS_TABLE,
-                                    {"run_id": run_id, "stage": "mix_sample",
-                                     "epoch": int(e), "counts": counts})
-            sampled_done.add(e)
+                .collect())
+        return {"counts": {r["source"]: int(r["n"]) for r in rows}}
 
-        # --- pack stage: this epoch's buckets, checkpointed waves ---------
-        remaining = [b for b in range(n_buckets)
-                     if (e, b) not in pack_done]
-        waves = catalog.waves(remaining, batch_size, waves_left)
+    waves_left = max_waves
+    pack_done = completed_mix_pack(spark, root, run_id)
+    for e in range(n_epochs)[:max_epochs]:
+        catalog.commit_stage(root, _MIX, MIXTURE_DOCS_TABLE, run_id,
+                             "mix_sample", partial(write_sample, e), epoch=e)
+
+        waves = catalog.waves([b for b in range(n_buckets)
+                               if (e, b) not in pack_done],
+                              batch_size, waves_left)
         if waves_left is not None:
             waves_left -= len(waves)
-        ppath = _mix_packed_path(root, run_id, e)
-        for wave in waves:
-            sub = read_mixture_sampled(spark, root, run_id, e, wave) \
-                .select("doc_id", "text")
-            packed = pack_token_sequences(sub, ctx_len=ctx_len,
-                                          n_buckets=n_buckets)
-            _commit_pack_wave(spark, root, _MIX, run_id, wave, packed, ppath,
-                              f"mixpack_{e}_{wave[0]}", (int(e),),
-                              epoch=int(e))
-            pack_done.update((e, int(b)) for b in wave)
+        _pack_waves(spark, root, _MIX, run_id, waves,
+                    lambda w: read_mixture_sampled(spark, root, run_id, e, w)
+                    .select("doc_id", "text"),
+                    catalog.run_dir(root, MIXTURE_PACKED_TABLE, run_id,
+                                    epoch=e),
+                    (e,), lambda _i: {"epoch": e}, ctx_len, n_buckets)
+        pack_done.update((e, b) for wave in waves for b in wave)
 
-        # --- order stage: shard permutation over THIS epoch's pack --------
-        epoch_packed = {b for ee, b in pack_done if ee == e}
-        if e not in order_done and len(epoch_packed) == n_buckets:
-            packed_e = read_mixture_packed(spark, root, run_id, e)
-            _commit_epoch_order(packed_e, e, n_buckets,
-                                catalog.tmp_dir(root, _MIX, run_id,
-                                                f"mixorder_{e}"),
-                                _mix_epoch_path(root, run_id, e))
-            catalog.append_snapshot(root, MIXTURE_EPOCH_TABLE,
-                                    {"run_id": run_id, "stage": "mix_epoch",
-                                     "epoch": int(e)})
-            order_done.add(e)
+        # the shard order of THIS epoch's pack, once every bucket is in
+        if all((e, b) in pack_done for b in range(n_buckets)):
+            catalog.commit_stage(
+                root, _MIX, MIXTURE_EPOCH_TABLE, run_id, "mix_epoch",
+                lambda tmp: _write_order(
+                    read_mixture_packed(spark, root, run_id, e), e,
+                    n_buckets, tmp),
+                epoch=e)
 
     # --- summary: the per-(epoch, source) audit surface -------------------
-    summary = {
+    # counts come from the sample snapshots, so a resume/status poll with
+    # nothing to do launches NO Spark jobs here
+    order_done = _snapshot_epochs(root, MIXTURE_EPOCH_TABLE, run_id,
+                                  "mix_epoch")
+    return {
         "run_id": run_id,
         "epochs_total": n_epochs,
         "epochs_completed": len(order_done),
         "complete": len(order_done) == n_epochs,
         "grid": [{"source": s, "n_docs": nd, "quota": q, "n_target": nt}
                  for (s, nd, q, nt) in grid],
-        "sampled": {},
+        "sampled": {int(s["epoch"]): dict(s["counts"])
+                    for s in catalog.run_snapshots(
+                        root, MIXTURE_DOCS_TABLE, run_id, "mix_sample")},
     }
-    # counts come from the sample snapshots (written once at commit time)
-    # — a resume/status poll with nothing to do launches NO Spark jobs
-    # here (r8 review)
-    for s in catalog.run_snapshots(root, MIXTURE_DOCS_TABLE, run_id,
-                                   "mix_sample"):
-        summary["sampled"][int(s["epoch"])] = dict(s["counts"])
-    return summary

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 CTX_LEN = 512
 N_BUCKETS = 8
+N_EPOCHS = 2
 
 
 def content_hash_col():

@@ -31,6 +31,7 @@ import pandas as pd    # module-level: pandas_udf resolves stringified
 from pyspark.sql import functions as F
 
 from martial_arts_ocr_spark.engine import memo
+from martial_arts_ocr_spark.packing import N_EPOCHS
 from martial_arts_ocr_spark.queries.similarity import dot
 from martial_arts_ocr_spark.queries.tables import (base_table, oracle_sf_rows,
                                                    spread_table)
@@ -1582,8 +1583,6 @@ ORDER BY source
 
 # --- deterministic epoch shuffle over packed sequences ------------------------
 
-_N_EPOCHS = 2
-
 
 def q_packed_epoch_order(spark, sf_dir):
     """The 'deterministically shuffled' tail of the tokenize-and-pack
@@ -1604,12 +1603,12 @@ def q_packed_epoch_order(spark, sf_dir):
     from ..packing import epoch_order_frame
 
     seqs = q_packed_sequences(spark, sf_dir)
-    return (epoch_order_frame(seqs, _N_EPOCHS)
+    return (epoch_order_frame(seqs, N_EPOCHS)
             .orderBy("epoch", "bucket", "pos_in_bucket"))
 
 
 def _oracle_packed_epoch_order() -> str:
-    epochs = ", ".join(str(e) for e in range(_N_EPOCHS))
+    epochs = ", ".join(str(e) for e in range(N_EPOCHS))
     return f"""
 WITH p AS ({_oracle_packed_sequences()}),
 e AS (SELECT unnest([{epochs}]) AS epoch),
@@ -1727,6 +1726,8 @@ tt AS (
               * {_MIX_EPOCH_DOCS} // {_MIX_QUOTA_SCALE} AS BIGINT)
            AS n_target
   FROM q
+  -- zero total mass: no quota is derivable, an empty grid as in Spark
+  WHERE (SELECT sum(sqrt_micro) FROM q) > 0
 )"""
 
 
@@ -1734,7 +1735,7 @@ def _epoch_grid(spark, grid_rows: list[tuple]):
     """The (epoch, source, quota, n_target) literal frame: every
     ``mixture_grid_rows`` row once per epoch."""
     return spark.createDataFrame(
-        [(e, s, q, nt) for e in range(_N_EPOCHS)
+        [(e, s, q, nt) for e in range(N_EPOCHS)
          for (s, _nd, q, nt) in grid_rows],
         "epoch int, source string, quota bigint, n_target bigint")
 
@@ -1807,7 +1808,7 @@ def q_mixture_epoch_stream(spark, sf_dir):
     # epoch_order_frame pattern), and the md5 key depends only on the
     # epoch NUMBER, so the union is bit-identical to the exploded form
     parts = []
-    for e in range(_N_EPOCHS):
+    for e in range(N_EPOCHS):
         parts.append(
             d.select("doc_id", "source", "text")
             .withColumn("epoch", F.lit(e))
@@ -1836,7 +1837,7 @@ def _oracle_mixture_stream(sample_ctes: str) -> str:
     from .textops import baked_bpe_count_values
 
     sf, vals = baked_bpe_count_values()
-    epochs = ", ".join(str(e) for e in range(_N_EPOCHS))
+    epochs = ", ".join(str(e) for e in range(N_EPOCHS))
     return f"""
 -- per-doc BPE token counts mirrored from: {sf}/documents.parquet
 WITH counts(doc_id, c) AS (VALUES {vals}),{_ORACLE_THRESH_GRID},
@@ -1960,7 +1961,7 @@ def q_mixture_epoch_stream_threshold(spark, sf_dir):
     size — this is the form that survives CommonCrawl-shaped skew."""
     d = base_table(spark, sf_dir, "documents")
     rows = mixture_grid_rows(d)
-    sampled = mixture_threshold_sample(d, rows, list(range(_N_EPOCHS)))
+    sampled = mixture_threshold_sample(d, rows, list(range(N_EPOCHS)))
     return _mixture_stream(_epoch_grid(spark, rows), sampled)
 
 

@@ -95,6 +95,31 @@ def test_mixture_run_counts_match_threshold_mirror(spark, tmp_path):
     assert again["grid"] == summary["grid"]
     assert again["sampled"] == summary["sampled"]
 
+    # the committed layout, unchanged by the no-op resume: one
+    # run_id=<id>/epoch=E dir per epoch in each per-epoch table, and one
+    # snapshot entry per stage commit and per pack wave
+    import os
+
+    epoch_dirs = [f"epoch={e}" for e in range(N_EPOCHS)]
+    for table in (curate.MIXTURE_DOCS_TABLE, curate.MIXTURE_PACKED_TABLE,
+                  curate.MIXTURE_EPOCH_TABLE):
+        run_dir = os.path.join(str(root), table, "run_id=mixrun")
+        assert sorted(os.listdir(run_dir)) == epoch_dirs, table
+    stages = {t: [(x.get("stage"), x.get("epoch"))
+                  for x in catalog.read_snapshots(str(root), t)]
+              for t in (curate.CURATION_TABLE, curate.MIXTURE_DOCS_TABLE,
+                        curate.MIXTURE_PACKED_TABLE,
+                        curate.MIXTURE_EPOCH_TABLE)}
+    assert stages == {
+        curate.CURATION_TABLE: [("flags", None)],
+        curate.MIXTURE_DOCS_TABLE: [("mix_grid", None), ("mix_sample", 0),
+                                    ("mix_sample", 1)],
+        # batch_size 2 over 4 buckets: two pack waves per epoch
+        curate.MIXTURE_PACKED_TABLE: [(None, 0), (None, 0), (None, 1),
+                                      (None, 1)],
+        curate.MIXTURE_EPOCH_TABLE: [("mix_epoch", 0), ("mix_epoch", 1)],
+    }
+
 
 def test_mixture_crash_resume_byte_identity(spark, tmp_path):
     # one-shot reference run
@@ -151,25 +176,30 @@ def test_mixture_grid_degenerate_corpora(spark):
     assert _grid_from_per_src([("a", 1, 0), ("b", 1, 0)],
                               epoch_docs=10) == []
 
-    # one all-NULL source beside a live one: zero quota in Spark, and the
-    # threshold oracle's quota CTEs in DuckDB agree (they used to give NULL)
+    # the threshold oracle's quota CTEs in DuckDB agree with Spark on one
+    # all-NULL source beside a live one (zero quota; they used to give
+    # NULL) and on an all-NULL corpus (an empty grid; they used to give
+    # one NULL-quota row per source)
     import duckdb
 
     from martial_arts_ocr_spark.queries.corpus import _ORACLE_THRESH_GRID
 
-    rows = [(1, "a", "x y"), (2, "a", "z"), (3, "b", None)]
-    spark_grid = mixture_grid_rows(spark.createDataFrame(
-        rows, "doc_id bigint, source string, text string"))
     con = duckdb.connect()
-    con.execute("CREATE TABLE documents "
-                "(doc_id BIGINT, source VARCHAR, text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
-    oracle_grid = con.execute(
-        f"WITH {_ORACLE_THRESH_GRID} "
-        "SELECT source, n_docs, quota, n_target FROM tt "
-        "ORDER BY source").fetchall()
-    assert spark_grid[1][2:] == (0, 0)
-    assert oracle_grid == spark_grid
+    for rows, want in (
+            ([(1, "a", "x y"), (2, "a", "z"), (3, "b", None)],
+             [("a", 2, 100000, 256), ("b", 1, 0, 0)]),
+            ([(1, "a", None), (2, "b", None)], [])):
+        spark_grid = mixture_grid_rows(spark.createDataFrame(
+            rows, "doc_id bigint, source string, text string"))
+        con.execute("CREATE OR REPLACE TABLE documents "
+                    "(doc_id BIGINT, source VARCHAR, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
+        oracle_grid = con.execute(
+            f"WITH {_ORACLE_THRESH_GRID} "
+            "SELECT source, n_docs, quota, n_target FROM tt "
+            "ORDER BY source").fetchall()
+        assert spark_grid == want
+        assert oracle_grid == spark_grid
 
     # pure half: the BIGINT-overflow refusal for a 2^31-doc source
     with pytest.raises(ValueError, match="2\\^31"):

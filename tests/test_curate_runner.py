@@ -47,15 +47,47 @@ def test_single_shot_completes_and_matches_direct_pack(spark, single_shot):
     )
     assert _packed_content(spark, root) == direct
 
+    # the committed layout: one run_id=<id> dir per write-once stage,
+    # bucket=K dirs in the kept docs, one epoch=E dir per epoch, and one
+    # snapshot entry per stage commit and per pack wave
+    import os
+
+    from martial_arts_ocr_spark.engine import catalog
+
+    def subdirs(*parts):
+        p = os.path.join(root, *parts)
+        return sorted(d for d in os.listdir(p)
+                      if os.path.isdir(os.path.join(p, d)))
+
+    assert subdirs("curation_flags") == ["run_id=run-a"]
+    assert subdirs("kept_docs", "run_id=run-a") == \
+        [f"bucket={k}" for k in range(8)]
+    assert subdirs("epoch_order", "run_id=run-a") == ["epoch=0", "epoch=1"]
+    assert subdirs("packed_sequences") == [f"bucket={k}" for k in range(8)]
+    stages = {t: [(x.get("stage"), x.get("epoch"), x.get("wave"))
+                  for x in catalog.read_snapshots(root, t)]
+              for t in ("curation_flags", "kept_docs", "packed_sequences",
+                        "epoch_order")}
+    assert stages == {
+        "curation_flags": [("flags", None, None)],
+        "kept_docs": [("kept", None, None)],
+        "packed_sequences": [(None, None, 0), (None, None, 1)],
+        "epoch_order": [("epoch", 0, None), ("epoch", 1, None)],
+    }
+
 
 def test_crash_then_resume_is_byte_identical(spark, tmp_path, single_shot):
     from martial_arts_ocr_spark.engine.curate import (
         completed_pack_buckets,
+        read_packed,
         run_curate,
     )
 
     ref_root, _ = single_shot
     root = str(tmp_path / "wh_resume")
+    # no packed table yet: a named error pointing at the progress surface
+    with pytest.raises(FileNotFoundError, match="completed_pack_buckets"):
+        read_packed(spark, root)
     partial = run_curate(spark, SF, root, "run-b", batch_size=4, max_waves=1)
     assert not partial["complete"]
     assert partial["buckets_completed"] == 4
@@ -288,3 +320,50 @@ def test_epoch_stream_is_packed_sequences_permuted(spark, single_shot):
         # key never mixed (vanishingly unlikely above a few sequences)
         if len(rows) > 4:
             assert [s for _, s in rows] != sorted(s for _, s in rows), bucket
+
+
+def test_stage_commit_is_write_once_and_atomic(tmp_path):
+    """catalog.commit_stage, no Spark: a write that raises leaves the
+    stage's dir and the snapshot log as they were (here: a dir moved in
+    by an attempt that crashed before its snapshot append); the next call
+    commits; a logged stage is skipped without calling its write."""
+    import os
+
+    from martial_arts_ocr_spark.engine import catalog
+
+    root = str(tmp_path)
+    log = catalog.WaveLog("t", "t_ckpt", None, "bucket", "_pin_", "_tmp_",
+                          "state")
+    dst = catalog.run_dir(root, "t", "r", epoch=1)
+    assert dst == os.path.join(root, "t", "run_id=r", "epoch=1")
+    os.makedirs(dst)
+    with open(os.path.join(dst, "stale"), "w") as f:
+        f.write("old")
+
+    def write(data, tmp):
+        os.makedirs(tmp, exist_ok=True)
+        with open(os.path.join(tmp, "part"), "w") as f:
+            f.write(data)
+        if data == "boom":
+            raise RuntimeError(data)
+        return {"n": len(data)}
+
+    with pytest.raises(RuntimeError):
+        catalog.commit_stage(root, log, "t", "r", "s",
+                             lambda tmp: write("boom", tmp), epoch=1)
+    assert os.listdir(dst) == ["stale"]
+    assert catalog.read_snapshots(root, "t") == []
+
+    catalog.commit_stage(root, log, "t", "r", "s",
+                         lambda tmp: write("new", tmp), epoch=1)
+    with open(os.path.join(dst, "part")) as f:
+        assert f.read() == "new"
+    assert os.listdir(dst) == ["part"]
+
+    def never(tmp):
+        raise AssertionError("a logged stage must not write")
+
+    catalog.commit_stage(root, log, "t", "r", "s", never, epoch=1)
+    assert [{k: v for k, v in s.items() if k != "snapshot_id"}
+            for s in catalog.read_snapshots(root, "t")] == \
+        [{"run_id": "r", "stage": "s", "epoch": 1, "n": 3}]

@@ -229,7 +229,7 @@ def test_mixture_epoch_stream_shape(spark):
     Exchange is gone — one scan per epoch, unioned) -> broadcast n_target
     join -> one Arrow BPE stage over SAMPLED rows only. No
     single-partition window, no nested-loop join."""
-    from martial_arts_ocr_spark.queries.corpus import _N_EPOCHS
+    from martial_arts_ocr_spark.packing import N_EPOCHS
 
     plan = _plan(spark, "mixture_epoch_stream")
     assert "CartesianProduct" not in plan
@@ -238,7 +238,7 @@ def test_mixture_epoch_stream_shape(spark):
     # formatted explain lists each node in tree + detail: 1 node == 2 hits
     assert plan.count("ArrowEvalPython") <= 2
     # one corpus scan PER EPOCH (each feeds its own rank), never more
-    assert plan.count("Scan parquet") <= 2 * _N_EPOCHS
+    assert plan.count("Scan parquet") <= 2 * N_EPOCHS
     assert "BroadcastHashJoin" in plan
 
 
