@@ -98,8 +98,6 @@ def extraction_throughput(master: str, n_pages: int, parts: int) -> dict:
     spark = build_session(master=master, shuffle_partitions=parts,
                           app_name=f"bench-extract-{master}")
     spark.sparkContext.setLogLevel("ERROR")
-    # no with_host: run_extract derives host itself; the wrapper only
-    # persisted a dead extra column (review fix)
     pages = pages_spark(spark, n_pages, partitions=parts)
     pages = pages.persist()
     pages.count()                       # materialize input outside the clock

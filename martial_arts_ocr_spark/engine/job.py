@@ -32,64 +32,63 @@ HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/:?#]+)"
 
 _OUT_COLS = [f.name for f in EXTRACTED_SCHEMA.fields]
 
+# hot hosts: a list (``salt_buckets`` sub-keys each) or host→sub-key count
+HotHosts = list[str] | dict[str, int] | None
+
 
 def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
     """host column via JVM-side regexp (no Python)."""
     return df.withColumn("host", F.regexp_extract(F.col(url_col), HOST_RE, 1))
 
 
-def salted_key_col(
-    hot_hosts: list[str] | dict[str, int] | None = None,
-    salt_buckets: int = 8,
-):
+def gated_pages(pages: DataFrame, *keep: str) -> DataFrame:
+    """The kernel's input rows: pages pruned to url/html/lang (plus the
+    ``keep`` pass-through columns), the P1 validity gate (no null or
+    empty html) and the url host."""
+    df = pages.select("url", *keep, "html", "lang")
+    return with_host(
+        df.filter(F.col("html").isNotNull() & (F.length("html") > 0)))
+
+
+def salted_key_col(hot_hosts: HotHosts = None, salt_buckets: int = 8):
     """Column expression: host salted with a url-hash suffix for hot hosts.
 
     ``hot_hosts`` is either a list (every hot host gets ``salt_buckets``
     sub-keys) or a dict host→buckets (proportional salting, see
-    ``proportional_salt_buckets``). Shared by the partitioning step and the
-    resume bucketing so both always derive identical keys from (host, url).
+    ``proportional_salt_buckets``); a list is the dict with every count
+    equal to ``salt_buckets``. The key is ``host#pmod(xxhash64(url), k)``
+    for a hot host and the bare host otherwise.
     """
+    if not isinstance(hot_hosts, dict):
+        hot_hosts = dict.fromkeys(hot_hosts or (), salt_buckets)
     host = F.col("host")
-    if not hot_hosts:
-        return host
-    if isinstance(hot_hosts, dict):
-        expr = None
-        for h, k in sorted(hot_hosts.items()):
-            salted = F.concat(
-                host, F.lit("#"),
-                F.pmod(F.xxhash64(F.col("url")), F.lit(int(k))).cast("string"),
-            )
-            expr = (F.when(host == h, salted) if expr is None
-                    else expr.when(host == h, salted))
-        return expr.otherwise(host)
-    salted = F.concat(
-        host, F.lit("#"),
-        F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets)).cast("string"),
-    )
-    return F.when(host.isin(hot_hosts), salted).otherwise(host)
+    expr = F                    # F.when opens the CASE, Column.when extends it
+    for h, k in sorted(hot_hosts.items()):
+        expr = expr.when(host == h, F.concat(
+            host, F.lit("#"),
+            F.pmod(F.xxhash64(F.col("url")), F.lit(int(k))).cast("string")))
+    return expr.otherwise(host) if hot_hosts else host
 
 
-def with_salted_key(
-    df: DataFrame,
-    hot_hosts: list[str] | dict[str, int] | None = None,
-    salt_buckets: int = 8,
-) -> DataFrame:
+def bucket_col(hot_hosts: HotHosts, n_buckets: int):
+    """Column expression: the checkpoint bucket
+    ``pmod(xxhash64(part_key), n_buckets)``. The one derivation of
+    ``part_bucket``, for the input bucketing and the post-kernel write
+    alike; its ``host`` column must be the ``with_host`` one, never a
+    caller's own."""
+    return F.pmod(F.xxhash64(salted_key_col(hot_hosts)),
+                  F.lit(n_buckets)).cast("int")
+
+
+def with_salted_key(df: DataFrame, hot_hosts: HotHosts = None,
+                    salt_buckets: int = 8) -> DataFrame:
     """Partition key = host, salted for known-hot hosts (SURVEY §4.3).
 
     ``hot_hosts`` comes from a cheap sampled count upstream (see
-    ``detect_hot_hosts``); at 10^12 docs that sample is a separate tiny job.
+    ``detect_hot_host_shares``); at 10^12 docs that sample is a separate
+    tiny job.
     """
     return df.withColumn("part_key", salted_key_col(hot_hosts, salt_buckets))
-
-
-def detect_hot_hosts(
-    df: DataFrame, threshold: float = 0.05, sample_fraction: float = 0.01
-) -> list[str]:
-    """Sampled per-host frequency; hosts above `threshold` of rows are hot.
-
-    Deterministic seed so plans are reproducible run-to-run.
-    """
-    return sorted(detect_hot_host_shares(df, threshold, sample_fraction))
 
 
 def detect_hot_host_shares(
@@ -133,8 +132,7 @@ def kernel_rows(pdf):
     yields ``(url, extract_document(url, html, lang or ""))`` in row
     order. Shared by the batch path (``extract_batch``) and the streaming
     path (``streaming.extract_stream``) so the call signature and
-    lang-coalescing cannot silently diverge between them (review-found
-    duplication)."""
+    lang-coalescing cannot diverge between them."""
     for url, html, lang in zip(pdf["url"], pdf["html"], pdf["lang"]):
         yield url, extract_document(url, html, lang or "")
 
@@ -158,7 +156,7 @@ def extract_batch(iterator):
 def run_extract(
     pages: DataFrame,
     num_partitions: int | None = None,
-    hot_hosts: list[str] | dict[str, int] | None = None,
+    hot_hosts: HotHosts = None,
     salt_buckets: int = 8,
     pre_partitioned: bool = False,
 ) -> DataFrame:
@@ -178,9 +176,7 @@ def run_extract(
     ``pre_partitioned=True``. ``pre_partitioned=False`` performs the
     explicit salted host-hash repartition for unpartitioned input.
     """
-    df = pages.select("url", "html", "lang")          # column pruning: no warc_ts/text
-    df = df.filter(F.col("html").isNotNull() & (F.length("html") > 0))  # P1
-    df = with_host(df)
+    df = gated_pages(pages)
     if not pre_partitioned:
         df = with_salted_key(df, hot_hosts, salt_buckets)
         n = num_partitions or df.sparkSession.sparkContext.defaultParallelism

@@ -20,10 +20,12 @@ byte-identically: the kernel is a pure function, so reruns can't diverge.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import catalog
-from .job import run_extract, salted_key_col, with_host, with_salted_key
+from .job import HotHosts, bucket_col, gated_pages, run_extract, with_host
 from .schema import CHECKPOINT_SCHEMA, METRICS_SCHEMA
 
 CHECKPOINT_TABLE = "checkpoints"
@@ -34,29 +36,18 @@ _LOG = catalog.WaveLog(EXTRACTED_TABLE, CHECKPOINT_TABLE, CHECKPOINT_SCHEMA,
                        "part_bucket", "_run_", "_tmp_wave_", "extracted data")
 
 
-def _bucketed(pages: DataFrame, n_buckets: int,
-              hot_hosts: list[str] | None) -> DataFrame:
-    df = with_host(pages) if "host" not in pages.columns else pages
-    df = with_salted_key(df, hot_hosts)
-    return df.withColumn(
-        "part_bucket", F.pmod(F.xxhash64("part_key"), F.lit(n_buckets))
-        .cast("int"),
-    )
-
-
 def read_metrics(spark: SparkSession, root: str) -> DataFrame:
     """Metrics table with exactly one row per (run_id, part_bucket).
 
     A crash between the metrics append and the checkpoint write (the
     commit point) re-runs the wave and appends a SECOND metrics row for
     its buckets; determinism makes the duplicate byte-identical, so
-    dropDuplicates on the key restores exact totals (self-review fix:
-    summing the raw table double-counted re-run waves). All metrics
-    consumers must read through this helper. Returns an EMPTY frame (not
-    an AnalysisException) when no wave has committed metrics yet, so
+    dropDuplicates on the key restores exact totals (summing the raw
+    table would double-count re-run waves). All metrics consumers must
+    read through this helper. Returns an EMPTY frame (not an
+    AnalysisException) when no wave has committed metrics yet, so
     progress checks on fresh or crashed-before-wave-0 warehouses report
-    zero rows instead of crashing (review fix — completed_buckets already
-    had the guard)."""
+    zero rows instead of crashing."""
     if not catalog.table_exists(root, METRICS_TABLE):
         return spark.createDataFrame([], METRICS_SCHEMA)
     return (
@@ -72,32 +63,63 @@ def completed_buckets(spark: SparkSession, root: str, run_id: str) -> set[int]:
 _DEFAULT_BATCH_SIZE = 4
 
 
-def _pin_run_config(root: str, run_id: str, hot_hosts: list[str] | None,
-                    n_buckets: int, batch_size: int, sign_snapshots: bool
-                    ) -> tuple[list[str] | None, int, int, bool]:
+def _pin_run_config(root: str, run_id: str, hot_hosts: HotHosts,
+                    n_buckets: int, batch_size: int | None,
+                    sign_snapshots: bool
+                    ) -> tuple[HotHosts, int, int, bool]:
     """Persist (hot_hosts, n_buckets, batch_size, sign_snapshots) on
-    first run; reload on resume.
+    first run; reload on resume and resolve the caller's values against
+    the pin. ``hot_hosts`` is pinned in the form given (list or dict of
+    proportional bucket counts) and reloaded in that form.
 
     Bucket assignment depends on the first two — a resume that re-derived
     a different hot-host list would shift keys and double-process
-    documents. Wave COMPOSITION depends on batch_size: the signature
-    store's exactly-once snapshot ids derive from each wave's bucket set
-    (round-5 second-pass review find: resuming with a different
+    documents — so they always follow the pin. Wave COMPOSITION depends
+    on batch_size: the signature store's exactly-once snapshot ids derive
+    from each wave's bucket set (resuming a signed run with a different
     batch_size regrouped pending buckets into fresh ids and re-signed
     already-signed buckets under ids read_store's dedup cannot collapse).
-    And signing itself must be consistent across every wave of a run
-    (fourth-pass find), so sign_snapshots is pinned too. The first run's
-    config is authoritative for its run_id.
+    And signing itself must be consistent across every wave of a run, so
+    sign_snapshots is pinned too. The first run's config is authoritative
+    for its run_id.
     """
+    bs = _DEFAULT_BATCH_SIZE if batch_size is None else batch_size
     cfg = catalog.pin(root, _LOG, run_id, {
         "hot_hosts": hot_hosts, "n_buckets": n_buckets,
-        "batch_size": batch_size, "sign_snapshots": sign_snapshots})
-    # pre-round-5 pin files lack the newer fields; fall back to the
-    # caller's values (no signed run can predate the fields — signing
-    # itself is round-5)
-    return (cfg["hot_hosts"], cfg["n_buckets"],
-            cfg.get("batch_size", batch_size),
-            cfg.get("sign_snapshots", sign_snapshots))
+        "batch_size": bs, "sign_snapshots": sign_snapshots})
+    # older pin files lack the newer fields; fall back to the caller's
+    # values (no signed run can predate the fields)
+    pinned_bs = cfg.get("batch_size", bs)
+    pinned_sign = cfg.get("sign_snapshots", sign_snapshots)
+    # sign_snapshots follows the pin unconditionally: a resume that forgot
+    # the flag would commit waves with no signature append, leaving the
+    # store missing those documents while their buckets checkpoint
+    # 'completed'.
+    if sign_snapshots != pinned_sign:
+        warnings.warn(
+            f"run {run_id!r}: sign_snapshots={sign_snapshots} ignored — "
+            f"the run was pinned with sign_snapshots={pinned_sign} and "
+            f"signing must be consistent across every wave")
+    # batch_size must follow the pin only when signing (snapshot ids
+    # derive from wave bucket sets). batch_size=None — the config-less
+    # resume — always takes the pinned value. An EXPLICIT divergent width
+    # on an unsigned run is a legitimate operational recovery lever (e.g.
+    # shrink per-wave memory after an OOM) — honored, loudly.
+    if batch_size is None:
+        batch_size = pinned_bs
+    elif batch_size != pinned_bs:
+        if pinned_sign:
+            warnings.warn(
+                f"run {run_id!r}: batch_size={batch_size} ignored — "
+                f"signed runs use the pinned batch_size={pinned_bs} "
+                f"(signature snapshot ids derive from wave composition)")
+            batch_size = pinned_bs
+        else:
+            warnings.warn(
+                f"run {run_id!r}: resuming with batch_size={batch_size} "
+                f"(pinned value was {pinned_bs}; wave width is an "
+                f"operational knob for unsigned runs)")
+    return cfg["hot_hosts"], cfg["n_buckets"], batch_size, pinned_sign
 
 
 def run_checkpointed(
@@ -107,18 +129,23 @@ def run_checkpointed(
     run_id: str,
     n_buckets: int = 16,
     batch_size: int | None = None,
-    hot_hosts: list[str] | None = None,
+    hot_hosts: HotHosts = None,
     fail_after_waves: int | None = None,
     files_per_bucket: int = 1,
     sign_snapshots: bool = False,
 ) -> list[int]:
     """Process all pending buckets in waves; returns buckets processed.
 
+    ``hot_hosts`` salts the bucket key as in ``job.salted_key_col``: a
+    list (8 sub-keys per hot host) or a dict host→bucket count
+    (``proportional_salt_buckets``). Like ``n_buckets`` it is pinned on
+    the first run, and a resume uses the pinned value.
+
     ``batch_size=None`` (the config-less default) means "the pinned
     value" on resume and ``_DEFAULT_BATCH_SIZE`` on a fresh run; pass an
     explicit int to override (honored with a warning on unsigned
-    resumes, rejected with a warning on signed ones — see the pin
-    resolution below).
+    resumes, rejected with a warning on signed ones — see
+    ``_pin_run_config``).
 
     ``fail_after_waves`` injects a crash after N waves (for resume tests).
     ``files_per_bucket`` sizes the partitioned write: 1 (default) gives one
@@ -130,7 +157,7 @@ def run_checkpointed(
     needs a hard per-file cap sets ``spark.sql.files.maxRecordsPerFile``
     on top, which splits at write time without any salt column.
 
-    ``sign_snapshots`` (round-5): additionally append each wave's MinHash
+    ``sign_snapshots``: additionally append each wave's MinHash
     band keys (url-keyed, over the EXTRACTED text) to the warehouse's
     ``signatures`` table via engine/sigstore.py — snapshot ids derive
     from the wave's bucket set (``<run_id>/b3-7-9``), which gives the
@@ -149,128 +176,68 @@ def run_checkpointed(
     # any wave, so the guard holds even for a run that crashed before its
     # first checkpoint.
     catalog.claim_root(root, _LOG, run_id)
-
-    import warnings
-
-    hot_hosts, n_buckets, pinned_bs, pinned_sign = _pin_run_config(
-        root, run_id, hot_hosts, n_buckets,
-        _DEFAULT_BATCH_SIZE if batch_size is None else batch_size,
-        sign_snapshots)
-    # sign_snapshots follows the pin unconditionally (round-5 fourth-pass
-    # find: a resume that forgot the flag silently committed waves with
-    # no signature append, leaving the store permanently missing those
-    # documents while their buckets checkpointed 'completed').
-    if sign_snapshots != pinned_sign:
-        warnings.warn(
-            f"run {run_id!r}: sign_snapshots={sign_snapshots} ignored — "
-            f"the run was pinned with sign_snapshots={pinned_sign} and "
-            f"signing must be consistent across every wave")
-        sign_snapshots = pinned_sign
-    # hot_hosts/n_buckets MUST follow the pin (bucket assignment);
-    # batch_size must only when signing (snapshot ids derive from wave
-    # bucket sets). batch_size=None — the config-less resume — always
-    # takes the pinned value (fourth-pass find: comparing against the
-    # signature DEFAULT made a flag-less resume look like an explicit
-    # override). An EXPLICIT divergent width on an unsigned run is a
-    # legitimate operational recovery lever (e.g. shrink per-wave memory
-    # after an OOM) — honored, loudly.
-    if batch_size is None:
-        batch_size = pinned_bs
-    elif batch_size != pinned_bs:
-        if sign_snapshots:
-            warnings.warn(
-                f"run {run_id!r}: batch_size={batch_size} ignored — "
-                f"signed runs use the pinned batch_size={pinned_bs} "
-                f"(signature snapshot ids derive from wave composition)")
-            batch_size = pinned_bs
-        else:
-            warnings.warn(
-                f"run {run_id!r}: resuming with batch_size={batch_size} "
-                f"(pinned value was {pinned_bs}; wave width is an "
-                f"operational knob for unsigned runs)")
-    bucketed = _bucketed(pages, n_buckets, hot_hosts).persist()
+    hot_hosts, n_buckets, batch_size, sign_snapshots = _pin_run_config(
+        root, run_id, hot_hosts, n_buckets, batch_size, sign_snapshots)
+    # bucketed before the P1 gate: a bucket whose every row is gated
+    # still commits (an empty dir and a checkpoint row)
+    bucketed = with_host(pages).withColumn(
+        "part_bucket", bucket_col(hot_hosts, n_buckets)).persist()
     try:
-        return _run_waves(spark, bucketed, root, run_id, n_buckets,
-                          batch_size, hot_hosts, fail_after_waves,
-                          files_per_bucket, sign_snapshots)
+        present = sorted(
+            r.part_bucket
+            for r in bucketed.select("part_bucket").distinct().collect()
+        )
+        done = completed_buckets(spark, root, run_id)
+        pending = [b for b in present if b not in done]
+
+        processed: list[int] = []
+        for wave_no, wave in enumerate(catalog.waves(pending, batch_size)):
+            if fail_after_waves is not None and wave_no >= fail_after_waves:
+                raise RuntimeError(f"injected failure before wave {wave_no}")
+            # Kernel parallelism is DECOUPLED from checkpoint-wave width
+            # (num_partitions=len(wave) ran the kernel on batch_size cores
+            # of the whole cluster, and a hash spread on (bucket, url-salt)
+            # still left max/mean 3.2 from low-cardinality collisions; both
+            # measured). The wave's rows round-robin across every core —
+            # exactly uniform, and legal because the kernel is a pure
+            # per-row function (byte-identity across partitionings is a
+            # pinned invariant) while part_bucket is re-derived from row
+            # CONTENT for the write. Host-hash co-location still holds at
+            # the bucket/wave granularity the checkpoint design needs;
+            # inside a wave, balance wins. The gate runs BEFORE the
+            # shuffle, so null/empty-html rows never ride the round-robin
+            # exchange.
+            subset = gated_pages(
+                bucketed.where(F.col("part_bucket").isin(wave))
+            ).repartition(spark.sparkContext.defaultParallelism)
+            extracted = run_extract(subset, pre_partitioned=True).withColumn(
+                "part_bucket", bucket_col(hot_hosts, n_buckets)).persist()
+            try:
+                if sign_snapshots:
+                    from . import sigstore
+                    # snapshot id is derived from the wave's BUCKET SET,
+                    # not the restart-relative wave_no: wave numbering
+                    # restarts on resume, so 'run/wave0' of a resumed run
+                    # would collide with the pre-crash wave 0 and skip
+                    # signing the re-run waves. Same bucket set → same id
+                    # → the skip IS the exactly-once guarantee (re-run
+                    # rows are byte-identical by determinism); different
+                    # pending sets after a crash → distinct ids.
+                    sig_id = f"{run_id}/b" + "-".join(str(b) for b in wave)
+                    sigstore.append_snapshot_signatures(
+                        spark, root,
+                        extracted.where(F.col("status") == "completed"),
+                        snapshot=sig_id,
+                        key_col="url", text_col="text",
+                    )
+                _commit_wave(spark, extracted, root, run_id, wave, wave_no,
+                             files_per_bucket)
+            finally:
+                extracted.unpersist()
+            processed.extend(wave)
+        return processed
     finally:
         bucketed.unpersist()
-
-
-def _run_waves(spark, bucketed, root, run_id, n_buckets, batch_size,
-               hot_hosts, fail_after_waves, files_per_bucket,
-               sign_snapshots=False) -> list[int]:
-    present = sorted(
-        r.part_bucket
-        for r in bucketed.select("part_bucket").distinct().collect()
-    )
-    done = completed_buckets(spark, root, run_id)
-    pending = [b for b in present if b not in done]
-
-    processed: list[int] = []
-    for wave_no, wave in enumerate(catalog.waves(pending, batch_size)):
-        if fail_after_waves is not None and wave_no >= fail_after_waves:
-            raise RuntimeError(f"injected failure before wave {wave_no}")
-        # Kernel parallelism is DECOUPLED from checkpoint-wave width
-        # (round-4 fix: num_partitions=len(wave) ran the kernel on
-        # batch_size cores of the whole cluster — 8 of 32 here — and a
-        # hash spread on (bucket, url-salt) still left max/mean 3.2 from
-        # low-cardinality collisions; both measured). The wave's rows
-        # round-robin across every core — exactly uniform, and legal
-        # because the kernel is a pure per-row function (byte-identity
-        # across partitionings is a pinned invariant) while part_bucket is
-        # re-derived from row CONTENT for the write. Host-hash
-        # co-location still holds at the bucket/wave granularity the
-        # checkpoint design needs; inside a wave, balance wins.
-        n_exec = spark.sparkContext.defaultParallelism
-        subset = (
-            bucketed.where(F.col("part_bucket").isin(wave))
-            # apply the P1 validity gate BEFORE the shuffle (run_extract
-            # re-applies it after, harmlessly): on a dirty corpus the
-            # null/empty-html rows would otherwise ride the round-robin
-            # exchange with their full html payload for nothing
-            .filter(F.col("html").isNotNull() & (F.length("html") > 0))
-            .repartition(n_exec)
-        )
-        # NOTE: no 'host' column is passed through — run_extract prunes to
-        # url/html/lang and re-derives host itself (same HOST_RE), so
-        # forwarding the bucketing-time host would only fake a coupling
-        extracted = run_extract(
-            subset.select("url", "html", "lang"),
-            pre_partitioned=True,
-        )
-        # re-attach bucket id for partitioned write + metrics (same key
-        # derivation as _bucketed, via the shared salted_key_col)
-        extracted = extracted.withColumn(
-            "part_bucket",
-            F.pmod(F.xxhash64(salted_key_col(hot_hosts)), F.lit(n_buckets))
-            .cast("int"),
-        ).persist()
-
-        try:
-            if sign_snapshots:
-                from . import sigstore
-                # snapshot id is derived from the wave's BUCKET SET, not
-                # the restart-relative wave_no (round-5 review find: wave
-                # numbering restarts on resume, so 'run/wave0' of a
-                # resumed run collided with the pre-crash wave 0 and
-                # silently skipped signing the re-run waves). Same bucket
-                # set → same id → the skip IS the exactly-once guarantee
-                # (re-run rows are byte-identical by determinism);
-                # different pending sets after a crash → distinct ids.
-                sig_id = f"{run_id}/b" + "-".join(str(b) for b in wave)
-                sigstore.append_snapshot_signatures(
-                    spark, root,
-                    extracted.where(F.col("status") == "completed"),
-                    snapshot=sig_id,
-                    key_col="url", text_col="text",
-                )
-            _commit_wave(spark, extracted, root, run_id, wave, wave_no,
-                         files_per_bucket)
-        finally:
-            extracted.unpersist()
-        processed.extend(wave)
-    return processed
 
 
 def _commit_wave(spark, extracted, root, run_id, wave, wave_no,

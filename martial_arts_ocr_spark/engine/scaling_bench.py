@@ -42,8 +42,6 @@ from martial_arts_ocr_spark.engine.job import run_extract
 spark = build_session(master={master!r}, shuffle_partitions={parts},
                       extra_conf={{"spark.executorEnv.PYTHONPATH": {repo!r}}})
 spark.sparkContext.setLogLevel("ERROR")
-# no with_host wrapper: run_extract prunes to url/html/lang and derives
-# host itself — the wrapper only added a dead column to the scan
 pages = spark.read.parquet({pages!r})
 n = pages.count()
 job = lambda: run_extract(pages, pre_partitioned=True).count()

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine.job import with_host
+from .engine.job import gated_pages
 from .engine.schema import PAGES_SCHEMA
 
 
@@ -38,17 +38,12 @@ def extract_stream(pages: DataFrame) -> DataFrame:
     ``warc_ts`` passes through the UDF for event-time windowing."""
     import pandas as pd
 
-    df = pages.select("url", "warc_ts", "html", "lang")
-    df = df.filter(F.col("html").isNotNull() & (F.length("html") > 0))
-    df = with_host(df)
-
     schema = "url string, warc_ts timestamp, host string, status string, " \
              "lang_detected string, quality string, n_blocks int, text_len int"
 
     def batch(it):
         # kernel_rows IS the batch path's per-row call contract (same
-        # gate upstream, same lang coalescing) — any change to it
-        # propagates to both paths (review fix: the loop was duplicated)
+        # gate upstream, same lang coalescing)
         from .engine.job import kernel_rows
 
         for pdf in it:
@@ -63,9 +58,7 @@ def extract_stream(pages: DataFrame) -> DataFrame:
                 "quality", "n_blocks", "text_len",
             ])
 
-    return df.select("url", "warc_ts", "host", "html", "lang").mapInPandas(
-        batch, schema=schema
-    )
+    return gated_pages(pages, "warc_ts").mapInPandas(batch, schema=schema)
 
 
 def host_running_totals(extracted: DataFrame,
@@ -80,7 +73,7 @@ def host_running_totals(extracted: DataFrame,
     State is EVICTED after ``idle_ttl_ms`` without new rows for a host
     (processing-time timeout) — a web-scale host set is effectively
     unbounded, and NoTimeout state grows monotonically until the state
-    store/checkpoint exhausts memory (review-found). The trade: a host
+    store/checkpoint exhausts memory. The trade: a host
     that goes idle past the TTL restarts its running total from zero; the
     in-flight state is a live counter cache, while the durable record is
     whatever sink consumes the emitted rows (exactly the batch metrics

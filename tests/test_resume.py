@@ -221,3 +221,25 @@ def test_empty_bucket_commits_and_counts_done(spark, tmp_path):
     assert 0 in completed_buckets(spark, root, "r1")
     assert run_checkpointed(spark, pages, root, run_id="r1",
                             n_buckets=4, batch_size=2) == []
+
+
+def test_caller_host_column_never_feeds_the_bucket_key(spark, tmp_path):
+    """A caller's ``host`` column that disagrees with the url-derived host
+    (upper-case urls, lower-cased host column) must not move rows out of
+    their wave: the bucket key is derived from the url alone, so every row
+    commits and the metrics count every document."""
+    from martial_arts_ocr_spark.engine.job import with_host
+    from martial_arts_ocr_spark.engine.resume import read_metrics
+
+    pdf = pages_pandas(N)
+    pdf["url"] = pdf["url"].str.upper()
+    pages = with_host(spark.createDataFrame(pdf)).withColumn(
+        "host", F.lower("host"))
+    root = str(tmp_path / "wh")
+    run_checkpointed(spark, pages, root, run_id="r1",
+                     n_buckets=8, batch_size=2)
+    urls = sorted(r.url for r in catalog.read_table(
+        spark, root, EXTRACTED_TABLE).select("url").collect())
+    assert urls == sorted(pdf["url"])
+    n_docs = read_metrics(spark, root).agg(F.sum("n_docs")).head()[0]
+    assert n_docs == N

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from martial_arts_ocr_spark.engine.job import (
-    detect_hot_hosts,
+    detect_hot_host_shares,
     run_extract,
     with_host,
     with_salted_key,
@@ -47,8 +47,8 @@ def test_all_rows_present_and_completed(extracted):
 
 def test_hot_host_detected(spark):
     pages = with_host(spark.createDataFrame(pages_pandas(200)))
-    hot = detect_hot_hosts(pages, sample_fraction=1.0, threshold=0.2)
-    assert hot == [HOT_HOST]
+    hot = detect_hot_host_shares(pages, sample_fraction=1.0, threshold=0.2)
+    assert list(hot) == [HOT_HOST]
 
 
 def test_salting_splits_hot_host(spark):
@@ -61,6 +61,10 @@ def test_salting_splits_hot_host(spark):
     hot_keys = [k for k in keys if k.startswith(HOT_HOST + "#")]
     assert len(hot_keys) >= 2          # hot host split into several buckets
     assert HOT_HOST not in keys        # raw hot key no longer present
+    # the list form is the dict form with every count = salt_buckets
+    by_dict = with_salted_key(pages, {HOT_HOST: 4})
+    assert (sorted(by_dict.select("url", "part_key").collect())
+            == sorted(salted.select("url", "part_key").collect()))
 
 
 def test_html_column_pruned_from_output(spark):

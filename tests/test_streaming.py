@@ -60,6 +60,21 @@ def test_streaming_extraction_matches_kernel(spark, pages_dir):
     q2.stop()
 
 
+def test_streaming_drops_gated_rows(spark, tmp_path):
+    """The stream applies the batch job's P1 gate: a row with empty html
+    and a row with null html never reach the kernel."""
+    pdf = pages_pandas(N // 2)
+    pdf.at[0, "html"] = b""
+    pdf.at[1, "html"] = None
+    path = str(tmp_path / "gated")
+    spark.createDataFrame(pdf).coalesce(1).write.parquet(path)
+    q = _run_stream_to_memory(
+        spark, extract_stream(read_pages_stream(spark, path)), "gated")
+    urls = sorted(r.url for r in spark.sql("SELECT url FROM gated").collect())
+    q.stop()
+    assert urls == sorted(pdf["url"][2:])
+
+
 def test_windowed_quality_metrics(spark, pages_dir):
     path, pdf = pages_dir
     metrics = windowed_quality_metrics(
